@@ -81,12 +81,15 @@ def drop_oob_and_censor_outliers(
     key_col: str,
     value_col: str,
     out_col: str | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """P6/J1: join values to a per-key bounds table (broadcast — bounds
     are measurement metadata, always small) and apply :func:`drop_or_censor`
     rowwise; keys missing from ``bounds`` pass through unchanged
-    (event_stream_dataset.py:213-266)."""
+    (event_stream_dataset.py:213-266). ``by`` columns, when given, are
+    joined on in front of the key."""
     out_col = out_col or value_col
+    keys = [*(by or []), key_col]
     bound_cols = [
         "drop_lower_bound",
         "drop_lower_bound_inclusive",
@@ -96,13 +99,13 @@ def drop_oob_and_censor_outliers(
         "censor_upper_bound",
     ]
     b = bounds.select(
-        key_col,
+        *keys,
         *[
             (F.col(c) if c in bounds.columns else F.lit(None)).alias(f"_b_{c}")
             for c in bound_cols
         ],
     )
-    joined = vals.join(F.broadcast(b), key_col, "left")
+    joined = vals.join(F.broadcast(b), keys, "left")
     expr = drop_or_censor(F.col(value_col), *[F.col(f"_b_{c}") for c in bound_cols])
     return joined.withColumn(out_col, expr).drop(*[f"_b_{c}" for c in bound_cols])
 

@@ -945,17 +945,22 @@ def anova_oneway(
     RATIOS are emitted (f_stat, eta_sq): the raw sums of squares are
     global float sums whose summation-order noise (~√n·ε·Σx²) exceeds
     a 6dp grid at 100k+ rows — the ratio cancels it (CLAUDE.md rule).
-    Groups with NULL values contribute nothing; k<2 or zero SSW NULLs
-    the statistic rather than dividing by zero."""
+    Groups with NULL values contribute nothing; k<2 NULLs the
+    statistic rather than dividing by zero. Degeneracy is tested
+    exactly on per-group min/max, never on the float sums (on constant
+    data SSB and SSW are summation noise whose sign follows the
+    partition layout): f_stat is NULL when every group is constant
+    (exactly SSW = 0), eta_sq when all values are equal."""
+    v = F.col(value_col).cast("double")
     g = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(group_col).alias("_g"))
         .agg(
             F.count(F.lit(1)).cast("double").alias("_n"),
-            F.sum(F.col(value_col).cast("double")).alias("_s1"),
-            F.sum(
-                F.col(value_col).cast("double") * F.col(value_col).cast("double")
-            ).alias("_s2"),
+            F.sum(v).alias("_s1"),
+            F.sum(v * v).alias("_s2"),
+            F.min(v).alias("_lo"),
+            F.max(v).alias("_hi"),
         )
     )
     tot = g.groupBy().agg(
@@ -966,6 +971,9 @@ def anova_oneway(
             "_ssw"
         ),
         F.sum(F.col("_s1") * F.col("_s1") / F.col("_n")).alias("_sb_part"),
+        F.min("_lo").alias("_lo"),
+        F.max("_hi").alias("_hi"),
+        F.count(F.when(F.col("_hi") > F.col("_lo"), F.lit(1))).alias("_k_spread"),
     )
     ssb = F.col("_sb_part") - F.col("_st") * F.col("_st") / F.col("_nt")
     ssw = F.col("_ssw")
@@ -976,8 +984,10 @@ def anova_oneway(
     return tot.select(
         F.col("_k").cast("long").alias("k_groups"),
         F.col("_nt").cast("long").alias("n_total"),
-        F.round(fstat, 6).alias("f_stat"),
-        F.when(ssb + ssw > 0, F.round(ssb / (ssb + ssw), 6)).alias("eta_sq"),
+        F.when(F.col("_k_spread") > 0, F.round(fstat, 6)).alias("f_stat"),
+        F.when(
+            F.col("_hi") > F.col("_lo"), F.round(F.try_divide(ssb, ssb + ssw), 6)
+        ).alias("eta_sq"),
     )
 
 

@@ -88,8 +88,8 @@ class CategoricalPreprocessorModel:
         with open(os.path.join(path, "model.json")) as f:
             m = json.load(f)
         return cls(
-            status=spark.read.parquet(os.path.join(path, "status")).cache(),
-            vocab=spark.read.parquet(os.path.join(path, "vocab")).cache(),
+            status=spark.read.parquet(os.path.join(path, "status")),
+            vocab=spark.read.parquet(os.path.join(path, "vocab")),
             measurement_col=m["measurement_col"],
             element_col=m["element_col"],
         )

@@ -13,6 +13,9 @@ Two models, mirroring the reference's METADATA_MODELS registry shape
   stays inside whole-stage codegen.
 
 Fit never mutates shared state: both fits are pure aggregations.
+Every fit and apply takes ``by``: grouping columns in front of the
+key (e.g. the measurement name), carried in the model state and
+joined on at apply.
 """
 
 from __future__ import annotations
@@ -20,11 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def fit_standard_scaler(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """Model state (key, mean, std) — population std (ddof=0), matching
-    sklearn's StandardScaler."""
+def fit_standard_scaler(
+    df: DataFrame, key_col: str, value_col: str, by: list[str] | None = None
+) -> DataFrame:
+    """Model state (*by, key, mean, std) — population std (ddof=0),
+    matching sklearn's StandardScaler."""
     v = F.col(value_col)
-    return df.filter(v.isNotNull()).groupBy(key_col).agg(
+    return df.filter(v.isNotNull()).groupBy(*(by or []), key_col).agg(
         F.avg(v).alias("mean"), F.stddev_pop(v).alias("std")
     )
 
@@ -35,12 +40,14 @@ def apply_standard_scaler(
     key_col: str,
     value_col: str,
     out_col: str | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """(x − μ)/σ with σ=0 → 0 (constant keys); missing keys pass
     through unscaled."""
     out_col = out_col or value_col
-    m = model.select(key_col, F.col("mean").alias("_mu"), F.col("std").alias("_sd"))
-    joined = df.join(F.broadcast(m), key_col, "left")
+    keys = [*(by or []), key_col]
+    m = model.select(*keys, F.col("mean").alias("_mu"), F.col("std").alias("_sd"))
+    joined = df.join(F.broadcast(m), keys, "left")
     v = F.col(value_col)
     scaled = (
         F.when(F.col("_mu").isNull(), v)
@@ -57,8 +64,9 @@ def fit_quantile_transformer(
     n_quantiles: int = 101,
     exact: bool = True,
     approx_accuracy: int = 10000,
+    by: list[str] | None = None,
 ) -> DataFrame:
-    """Model state (key, quantiles array<double>): the per-key empirical
+    """Model state (*by, key, quantiles array<double>): the per-key empirical
     quantiles at n evenly spaced probabilities.
 
     ``exact=True`` uses ``percentile`` (full sort per key — right at
@@ -77,7 +85,7 @@ def fit_quantile_transformer(
     )
     return (
         df.filter(v.isNotNull())
-        .groupBy(key_col)
+        .groupBy(*(by or []), key_col)
         .agg(q.cast("array<double>").alias("quantiles"))
     )
 
@@ -88,6 +96,7 @@ def apply_quantile_transformer(
     key_col: str,
     value_col: str,
     out_col: str | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """Map each value to its empirical CDF position in [0,1] by linear
     interpolation between fitted quantiles (sklearn QuantileTransformer
@@ -103,8 +112,9 @@ def apply_quantile_transformer(
     null (the prior Arrow path's contract).
     """
     out_col = out_col or value_col
-    m = model.select(key_col, F.col("quantiles").alias("_q"))
-    joined = df.join(F.broadcast(m), key_col, "left")
+    keys = [*(by or []), key_col]
+    m = model.select(*keys, F.col("quantiles").alias("_q"))
+    joined = df.join(F.broadcast(m), keys, "left")
 
     v = F.col(value_col).cast("double")
     q = F.col("_q")

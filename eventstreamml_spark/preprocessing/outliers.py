@@ -165,51 +165,53 @@ def fit_viod_per_key(
     value_col: str,
     subsample_frac: float = 0.1,
     max_prob_of_exclusion: float = 0.05,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """A14-style per-key grouped fit: one VIOD per key via
     ``applyInPandas`` (pure per-group output — the reference's
     mutate-shared-config-in-groupby is redesigned away, SURVEY §4).
 
-    Returns (key, thresh_small, thresh_large, n_train, all_outliers);
-    ``all_outliers`` marks keys where every train point lands outside
-    the learned bounds → the key is DROPPED downstream
-    (event_stream_dataset.py:1204-1206).
+    Returns (*by, key, thresh_small, thresh_large, n_train,
+    all_outliers); ``all_outliers`` marks keys where every train point
+    lands outside the learned bounds → the key is DROPPED downstream
+    (event_stream_dataset.py:1204-1206). ``by`` columns group in front
+    of the key.
     """
     import pandas as pd
 
+    keys = [*(by or []), key_col]
+    out_cols = [*keys, "thresh_small", "thresh_large", "n_train", "all_outliers"]
+    by_schema = "".join(f"{c} {df.schema[c].dataType.simpleString()}, " for c in by or [])
     schema = (
-        f"{key_col} string, thresh_small double, thresh_large double, "
+        f"{by_schema}{key_col} string, thresh_small double, thresh_large double, "
         "n_train long, all_outliers boolean"
     )
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf[value_col].dropna().to_numpy()
-        key = pdf[key_col].iloc[0]
+        group = [pdf[c].iloc[0] for c in keys]
         if len(vals) == 0:
-            return pd.DataFrame(
-                [(key, None, None, 0, False)],
-                columns=[key_col, "thresh_small", "thresh_large", "n_train", "all_outliers"],
-            )
+            return pd.DataFrame([(*group, None, None, 0, False)], columns=out_cols)
         det = VarianceImpactOutlierDetector(subsample_frac, max_prob_of_exclusion)
         det.fit(vals)
         inl = det.predict(vals)
         return pd.DataFrame(
             [
                 (
-                    key,
+                    *group,
                     float(det.thresh_small_),
                     float(det.thresh_large_),
                     len(vals),
                     bool((inl == -1).all()),
                 )
             ],
-            columns=[key_col, "thresh_small", "thresh_large", "n_train", "all_outliers"],
+            columns=out_cols,
         )
 
     return (
         df.filter(F.col(value_col).isNotNull())
-        .select(key_col, value_col)
-        .groupBy(key_col)
+        .select(*keys, value_col)
+        .groupBy(*keys)
         .applyInPandas(fit_group, schema=schema)
     )
 
@@ -221,20 +223,22 @@ def apply_viod(
     value_col: str,
     out_col: str | None = None,
     inlier_col: str | None = None,
+    by: list[str] | None = None,
 ) -> DataFrame:
-    """A12 transform: broadcast-join learned bounds and null values at
-    or beyond them; companion boolean ``{value_col}_is_inlier`` column
-    mirrors the reference's ``_is_inlier`` writeback
-    (event_stream_dataset.py:1525-1540). Keys without a model pass
-    through (inlier flag null)."""
+    """A12 transform: broadcast-join learned bounds (on ``(*by, key)``)
+    and null values at or beyond them; companion boolean
+    ``{value_col}_is_inlier`` column mirrors the reference's
+    ``_is_inlier`` writeback (event_stream_dataset.py:1525-1540). Keys
+    without a model pass through (inlier flag null)."""
     out_col = out_col or value_col
     inlier_col = inlier_col or f"{value_col}_is_inlier"
+    keys = [*(by or []), key_col]
     m = model.select(
-        key_col,
+        *keys,
         F.col("thresh_small").alias("_ts"),
         F.col("thresh_large").alias("_tl"),
     )
-    joined = df.join(F.broadcast(m), key_col, "left")
+    joined = df.join(F.broadcast(m), keys, "left")
     v = F.col(value_col)
     is_inlier = F.when(
         v.isNull() | F.col("_ts").isNull(), F.lit(None).cast("boolean")
@@ -251,6 +255,7 @@ def fit_stddev_cutoff_per_key(
     key_col: str,
     value_col: str,
     n_stddevs: float = 4.0,
+    by: list[str] | None = None,
 ) -> DataFrame:
     """Stddev-cutoff outlier detector: per-key thresholds at
     ``mean ± n_stddevs · std`` (sample std, ddof=1).
@@ -261,11 +266,13 @@ def fit_stddev_cutoff_per_key(
     transform side. One aggregation, no Python, map-side combinable —
     the 100 TB-preferred detector when VIOD's iterative fit isn't
     required. Keys with zero/undefined spread get null thresholds
-    (→ inlier flag null downstream, values pass through)."""
+    (→ inlier flag null downstream, values pass through). ``by``
+    columns group in front of the key."""
+    keys = [*(by or []), key_col]
     v = F.col(value_col)
     agg = (
         df.filter(v.isNotNull())
-        .groupBy(key_col)
+        .groupBy(*keys)
         .agg(
             F.avg(v).alias("_mu"),
             F.stddev_samp(v).alias("_sd"),
@@ -275,7 +282,7 @@ def fit_stddev_cutoff_per_key(
     ok = F.col("_sd").isNotNull() & (F.col("_sd") > 0)
     k = F.lit(float(n_stddevs))
     return agg.select(
-        key_col,
+        *keys,
         F.when(ok, F.col("_mu") - k * F.col("_sd")).alias("thresh_small"),
         F.when(ok, F.col("_mu") + k * F.col("_sd")).alias("thresh_large"),
         "n_train",

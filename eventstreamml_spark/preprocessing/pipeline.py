@@ -17,6 +17,22 @@ The fitted model is ONE small DataFrame (key → value_type, bounds,
 outlier thresholds, normalizer params) — broadcast-joinable
 everywhere, JSON/parquet-persistable.
 
+``by`` adds grouping columns in front of the key. With
+``by=["measurement"]`` one fit covers every numeric measurement: each
+(measurement, key) group gets exactly the state a separate fit over
+that measurement's rows would give it (value-type totals are taken per
+measurement), while the fit still runs its four eager materializations
+(types, outlier thresholds, normalizer, state) once in total rather
+than once per measurement. Unit bounds stay keyed by ``key`` alone at
+fit; the fitted state carries them per (measurement, key). This is how
+``EventStreamPreprocessor`` fits every numeric measurement in one
+keyed pass.
+
+Saved layout (``NumericPreprocessorModel.save``): ``state/`` (one row
+per ``(*by, key)``), ``norm_state/`` when the normalizer keeps a table
+(quantiles, also keyed by ``(*by, key)``), and ``model.json`` naming
+the key/value columns, the normalizer and ``by``.
+
 transform (all splits):
   drop/censor → int rounding → ``_is_inlier`` flag + outlier nulling →
   normalization → final double cast, plus categorical ``__EQ_`` token
@@ -61,30 +77,33 @@ _BOUND_COLS = [
 
 @dataclasses.dataclass
 class NumericPreprocessorModel:
-    """Fitted state: one row per key. ``normalizer_cls`` names the
-    registry entry (U2); ``norm_state`` carries non-expression model
-    state (quantile tables) when the normalizer needs one."""
+    """Fitted state: one row per ``(*by, key)``. ``normalizer_cls``
+    names the registry entry (U2); ``norm_state`` carries
+    non-expression model state (quantile tables) when the normalizer
+    needs one."""
 
     state: DataFrame
     key_col: str
     value_col: str
     normalizer_cls: str = "standard_scaler"
     norm_state: DataFrame | None = None
+    by: list[str] = dataclasses.field(default_factory=list)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        key, val = self.key_col, self.value_col
+        key, val, by = self.key_col, self.value_col, self.by
+        keys = [*by, key]
         df = drop_oob_and_censor_outliers(
-            df, self.state.select(key, *_BOUND_COLS), key, val
+            df, self.state.select(*keys, *_BOUND_COLS), key, val, by=by
         )
         m = self.state.select(
-            key,
+            *keys,
             F.col("value_type").alias("_vt"),
             F.col("thresh_small").alias("_ts"),
             F.col("thresh_large").alias("_tl"),
             F.col("norm_mean").alias("_mu"),
             F.col("norm_std").alias("_sd"),
         )
-        out = df.join(F.broadcast(m), key, "left")
+        out = df.join(F.broadcast(m), keys, "left")
         v = F.col(val)
 
         # integer rounding (half-even) before outlier/normalizer checks
@@ -131,7 +150,7 @@ class NumericPreprocessorModel:
             # fitted on numeric keys only — categorical/dropped keys have
             # no quantile row and pass through untouched
             result = NORMALIZERS["quantile_transformer"]["apply"](
-                result, self.norm_state, key, val
+                result, self.norm_state, key, val, by=by
             )
         return result
 
@@ -140,7 +159,8 @@ class NumericPreprocessorModel:
     def save(self, path: str) -> None:
         """Fitted state as parquet relations + a JSON manifest — a
         fit-once/transform-later flow across sessions and clusters
-        (state is one row per key; the write is trivially small)."""
+        (state is one row per ``(*by, key)``; the write is trivially
+        small)."""
         os.makedirs(path, exist_ok=True)
         self.state.write.mode("overwrite").parquet(os.path.join(path, "state"))
         if self.norm_state is not None:
@@ -153,6 +173,7 @@ class NumericPreprocessorModel:
             "value_col": self.value_col,
             "normalizer_cls": self.normalizer_cls,
             "has_norm_state": self.norm_state is not None,
+            "by": self.by,
         }
         with open(os.path.join(path, "model.json"), "w") as f:
             json.dump(manifest, f, indent=2)
@@ -163,19 +184,20 @@ class NumericPreprocessorModel:
             m = json.load(f)
         norm_state = None
         if m["has_norm_state"]:
-            norm_state = spark.read.parquet(os.path.join(path, "norm_state")).cache()
+            norm_state = spark.read.parquet(os.path.join(path, "norm_state"))
         return cls(
-            state=spark.read.parquet(os.path.join(path, "state")).cache(),
+            state=spark.read.parquet(os.path.join(path, "state")),
             key_col=m["key_col"],
             value_col=m["value_col"],
             normalizer_cls=m["normalizer_cls"],
             norm_state=norm_state,
+            by=m.get("by", []),
         )
 
 
 class NumericPreprocessor:
     """Estimator over a long-format measurements relation
-    ``(key, value, ...)``."""
+    ``(*by, key, value, ...)``."""
 
     def __init__(
         self,
@@ -185,6 +207,7 @@ class NumericPreprocessor:
         fit_outliers: bool = True,
         fit_normalizer: bool = True,
         param_round_dp: int | None = None,
+        by: list[str] | None = None,
     ) -> None:
         self.key_col = key_col
         self.value_col = value_col
@@ -198,13 +221,15 @@ class NumericPreprocessor:
         # identical doubles is IEEE-deterministic, so rounding at stage
         # boundaries makes downstream values hash-exact across engines.
         self.param_round_dp = param_round_dp
+        self.by = list(by or [])
 
     def fit(
         self, train: DataFrame, bounds: DataFrame | None = None
     ) -> NumericPreprocessorModel:
-        key, val = self.key_col, self.value_col
+        key, val, by = self.key_col, self.value_col, self.by
+        keys = [*by, key]
 
-        # 1-2. bounds merge + train-side drop/censor
+        # 1-2. bounds merge + train-side drop/censor (keyed by key alone)
         if bounds is not None:
             if "unit" in bounds.columns:
                 bounds = merge_unit_inferred_bounds(bounds)
@@ -221,11 +246,11 @@ class NumericPreprocessor:
         # reference this relation, and without the checkpoint every
         # reference re-expands the full inference subtree (3 grouped
         # passes over train) inside its own job
-        types = infer_value_types(train, key, val, self.config).localCheckpoint()
+        types = infer_value_types(train, key, val, self.config, by=by).localCheckpoint()
 
         # 4. typed view for model fitting (integer keys rounded)
         typed = train.join(
-            F.broadcast(types.select(key, "value_type")), key, "left"
+            F.broadcast(types.select(*keys, "value_type")), keys, "left"
         ).withColumn(
             val,
             F.when(F.col("value_type") == "integer", F.bround(F.col(val))).otherwise(
@@ -243,7 +268,7 @@ class NumericPreprocessor:
             if od_cls not in OUTLIER_DETECTORS:
                 raise KeyError(f"unknown outlier detector {od_cls!r}")
             od = OUTLIER_DETECTORS[od_cls]
-            viod = od["fit"](numeric, key, val, **od_cfg)
+            viod = od["fit"](numeric, key, val, by=by, **od_cfg)
             if self.param_round_dp is not None:
                 dp = self.param_round_dp
                 viod = viod.withColumn(
@@ -253,7 +278,7 @@ class NumericPreprocessor:
             # apply and the state assembly reference the computed
             # relation instead of re-running the detector fit
             viod = viod.localCheckpoint()
-            inliers = od["apply"](numeric, viod, key, val)
+            inliers = od["apply"](numeric, viod, key, val, by=by)
         else:
             viod = None
             inliers = numeric
@@ -266,7 +291,7 @@ class NumericPreprocessor:
 
             if normalizer_cls not in NORMALIZERS:
                 raise KeyError(f"unknown normalizer {normalizer_cls!r}")
-            norm = NORMALIZERS[normalizer_cls]["fit"](inliers, key, val, **n_cfg)
+            norm = NORMALIZERS[normalizer_cls]["fit"](inliers, key, val, by=by, **n_cfg)
             if self.param_round_dp is not None and normalizer_cls == "standard_scaler":
                 dp = self.param_round_dp
                 norm = norm.withColumn("mean", F.round("mean", dp)).withColumn(
@@ -291,8 +316,8 @@ class NumericPreprocessor:
                 state = state.withColumn(c, F.lit(None).cast(typ))
         if viod is not None:
             state = state.join(
-                viod.select(key, "thresh_small", "thresh_large", "all_outliers"),
-                key,
+                viod.select(*keys, "thresh_small", "thresh_large", "all_outliers"),
+                keys,
                 "left",
             )
             # all-outlier keys → DROPPED (reference :1204-1206)
@@ -310,9 +335,9 @@ class NumericPreprocessor:
         if norm is not None and normalizer_cls == "standard_scaler":
             state = state.join(
                 norm.select(
-                    key, F.col("mean").alias("norm_mean"), F.col("std").alias("norm_std")
+                    *keys, F.col("mean").alias("norm_mean"), F.col("std").alias("norm_std")
                 ),
-                key,
+                keys,
                 "left",
             )
         else:
@@ -334,4 +359,5 @@ class NumericPreprocessor:
             value_col=val,
             normalizer_cls=normalizer_cls,
             norm_state=norm_state,
+            by=by,
         )

@@ -5,6 +5,8 @@ The reference resolves outlier/normalizer classes through the
 shaped ``{'cls': <name>, **kwargs}`` (config.py:330-342). The engine's
 analog: each entry pairs a ``fit`` (DataFrame → per-key model-state
 DataFrame) with an ``apply`` (data + state → transformed DataFrame).
+Both take ``by``: grouping columns in front of the key (e.g. the
+measurement name), carried in the state and joined on at apply.
 Register additional models by inserting here; configs stay plain JSON.
 """
 

@@ -14,6 +14,10 @@ Decision per (measurement) key, in reference order:
 Distinct/modal statistics are computed on the *rounded* values when
 step 2 fired (the reference converts before value_counts). Everything
 is two aggregation passes over the measurements table — no Python.
+
+``by`` adds grouping columns in front of the key (e.g. the measurement
+name), so one call types the keys of many measurements at once; the
+column total in step 1 is then taken per ``by`` group.
 """
 
 from __future__ import annotations
@@ -30,18 +34,21 @@ def infer_value_types(
     key_col: str,
     value_col: str,
     config: PreprocessingConfig,
+    by: list[str] | None = None,
 ) -> DataFrame:
-    """Returns one row per key: ``(key, value_type, n_key_obs, n_vals,
-    int_freq, n_distinct, modal_share)``.
+    """Returns one row per key: ``(*by, key, value_type, n_key_obs,
+    n_vals, int_freq, n_distinct, modal_share)``.
 
     ``n_key_obs`` counts key rows including null values (a key row with
     a missing value is still an observation of the key); the drop test
     compares it against the total column observations.
     """
+    by = list(by or [])
+    keys = [*by, key_col]
     v = F.col(value_col)
     vr = F.bround(v)  # half-even, matching numpy/pandas .round(0)
 
-    per_key = df.groupBy(key_col).agg(
+    per_key = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n_key_obs"),
         F.count(v).alias("n_vals"),
         F.avg((v == F.floor(v)).cast("double")).alias("int_freq"),
@@ -52,9 +59,9 @@ def infer_value_types(
     # needs (rounded iff INTEGER fired)
     vc_raw = (
         df.filter(v.isNotNull())
-        .groupBy(key_col, v.alias("_val"))
+        .groupBy(*keys, v.alias("_val"))
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(key_col)
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n_distinct_raw"),
             F.max("_c").alias("modal_raw"),
@@ -62,23 +69,23 @@ def infer_value_types(
     )
     vc_round = (
         df.filter(v.isNotNull())
-        .groupBy(key_col, vr.alias("_val"))
+        .groupBy(*keys, vr.alias("_val"))
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(key_col)
+        .groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n_distinct_round"),
             F.max("_c").alias("modal_round"),
         )
     )
-    stats = per_key.join(vc_raw, key_col, "left").join(vc_round, key_col, "left")
+    stats = per_key.join(vc_raw, keys, "left").join(vc_round, keys, "left")
 
     # column-level total = sum of per-key row counts — computed as a
     # window over the (one row per key) stats relation instead of a
     # df.count() driver action, which executed the full train subtree
     # one extra time per fit (stats is tiny, so the single-partition
     # window is free). Exactly count(*): n_key_obs counts every key
-    # row including null values.
-    total_col_obs = F.sum("n_key_obs").over(W.partitionBy())
+    # row including null values. Taken per ``by`` group.
+    total_col_obs = F.sum("n_key_obs").over(W.partitionBy(*by))
 
     def lt_cop(count_col, threshold, total_col):
         if threshold is None:
@@ -120,7 +127,7 @@ def infer_value_types(
     )
 
     return stats.select(
-        key_col,
+        *keys,
         value_type.alias("value_type"),
         "n_key_obs",
         "n_vals",

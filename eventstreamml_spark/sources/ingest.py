@@ -148,7 +148,8 @@ def nest_metadata(
     measurements keep an empty array).
 
     Unlike the reference's manually-invalidated cache (:598-631) this is
-    a pure derivation; cache with ``.cache()`` if reused.
+    a pure derivation; pin it per invocation (``localCheckpoint``) if
+    reused.
     """
     meas_cols = [c for c in metadata.columns if c not in MANDATORY_METADATA_COLS]
     packed = (

@@ -78,7 +78,8 @@ def test_full_lifecycle(ds, config):
     model = EventStreamPreprocessor(config).fit(ds)
 
     # numeric fit: hr stays numeric, flag (2 uniques < 5) → categorical_integer
-    state = {r["key"]: r["value_type"] for r in model.numeric_models["lab"].state.collect()}
+    lab_state = model.numeric_model.state.filter(F.col("measurement") == "lab")
+    state = {r["key"]: r["value_type"] for r in lab_state.collect()}
     assert state["hr"] in ("float", "integer") and state["flag"] == "categorical_integer"
 
     # categorical vocab: flag tokens present, hr key kept as element
@@ -161,8 +162,9 @@ def test_time_dependent_numeric_fit(spark):
     model = EventStreamPreprocessor(config).fit(ds)
 
     # the age column now has fitted numeric state under its own name
-    assert "age" in model.numeric_models
-    state = {r["key"]: r for r in model.numeric_models["age"].state.collect()}
+    assert "age" in model.numeric_measurements
+    age_state = model.numeric_model.state.filter(F.col("measurement") == "age")
+    state = {r["key"]: r for r in age_state.collect()}
     s = state["age"]
     assert s["value_type"] == "float"
     assert s["thresh_small"] is not None and s["thresh_large"] is not None
@@ -202,7 +204,7 @@ def test_model_persistence_round_trip(spark, ds, config, tmp_path):
     model.save(path)
     loaded = EventStreamPreprocessorModel.load(spark, path)
 
-    assert set(loaded.numeric_models) == set(model.numeric_models)
+    assert loaded.numeric_measurements == model.numeric_measurements
     assert set(loaded.static_vocabs) == set(model.static_vocabs)
     assert loaded.config.to_dict() == model.config.to_dict()
 
@@ -211,11 +213,163 @@ def test_model_persistence_round_trip(spark, ds, config, tmp_path):
     via_disk = sorted(loaded.transform(ds).select(*cols).collect())
     assert via_disk == direct
 
-    # sub-model round-trips preserve full state tables
-    for name in model.numeric_models:
-        a = sorted(model.numeric_models[name].state.collect())
-        b = sorted(loaded.numeric_models[name].state.collect())
-        assert a == b
+    # sub-model round-trips preserve full state tables, per measurement
+    assert loaded.numeric_model.by == model.numeric_model.by == ["measurement"]
+    for name in model.numeric_measurements:
+        in_name = F.col("measurement") == name
+        a = sorted(model.numeric_model.state.filter(in_name).collect())
+        b = sorted(loaded.numeric_model.state.filter(in_name).collect())
+        assert a and a == b
     assert sorted(model.categorical_model.vocab.collect()) == sorted(
         loaded.categorical_model.vocab.collect()
     )
+
+
+def _two_regression_ds(spark):
+    """Two regression measurements, ``lab`` and ``vit``, sharing the key
+    names ``hr``, ``flag`` and ``rare``: ``flag`` is categorical-integer
+    in both; ``rare`` has 15 rows in each, which is 7% of ``lab`` but
+    under 2% of ``vit``, so a 5% vocab threshold keeps it only when the
+    column total is per measurement."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    events = spark.createDataFrame(
+        [(e, e % 3, f"2020-01-{e + 1:02d} 10:00:00", "visit") for e in range(6)],
+        "event_id long, subject_id long, timestamp string, event_type string",
+    )
+    rows = []
+
+    def add(meas, key, val):
+        eid = len(rows) % 6
+        lab = (key, val, None, None) if meas == "lab" else (None, None, key, val)
+        rows.append((len(rows), eid, "visit", eid % 3, *lab))
+
+    for _ in range(100):
+        add("lab", "hr", float(rng.normal(70, 5)))
+        add("vit", "hr", float(rng.normal(120, 9)))
+    for _ in range(80):
+        add("lab", "flag", float(rng.integers(0, 2)))
+    for _ in range(700):
+        add("vit", "flag", float(rng.integers(0, 3)))
+    for _ in range(15):
+        add("lab", "rare", float(rng.normal(5, 1)))
+        add("vit", "rare", float(rng.normal(9, 2)))
+    metadata = spark.createDataFrame(
+        rows,
+        "metadata_id long, event_id long, event_type string, subject_id long, "
+        "lab string, lab_value double, vit string, vit_value double",
+    )
+    return EventStreamDataset(events, metadata=metadata)
+
+
+@pytest.mark.parametrize(
+    "models",
+    [
+        {},
+        {
+            "outlier_detector_config": {"cls": "stddev_cutoff", "n_stddevs": 2.0},
+            "normalizer_config": {"cls": "quantile_transformer", "n_quantiles": 11},
+        },
+    ],
+    ids=["viod-scaler", "stddev-quantile"],
+)
+def test_joint_numeric_fit_equals_per_measurement_fits(spark, models):
+    """One keyed fit over every numeric measurement gives each
+    (measurement, key) exactly the state and transform output of a
+    separate NumericPreprocessor fit over that measurement's rows, for
+    every registry outlier detector and normalizer."""
+    from eventstreamml_spark.preprocessing.pipeline import NumericPreprocessor
+
+    ds = _two_regression_ds(spark)
+    config = DatasetConfig.from_simple_args(
+        dynamic_measurement_columns=[("lab", "lab_value"), ("vit", "vit_value")],
+        min_true_float_frequency=0.1,
+        min_unique_numerical_observations=5,
+        min_valid_vocab_element_observations=0.05,
+        **models,
+    )
+    bounds = spark.createDataFrame(
+        [("hr", 60.0, True, 130.0, False)],
+        "key string, drop_lower_bound double, drop_lower_bound_inclusive boolean, "
+        "drop_upper_bound double, drop_upper_bound_inclusive boolean",
+    )
+    model = EventStreamPreprocessor(config).fit(ds, bounds)
+    assert model.numeric_measurements == ["lab", "vit"]
+    joint = model.numeric_model
+
+    long = melt_observations(ds, config).select(
+        "metadata_id", "measurement", F.col("element").alias("key"), "value"
+    )
+    types = {}
+    for name in ("lab", "vit"):
+        part = long.filter(F.col("measurement") == name)
+        single = NumericPreprocessor("key", "value", config.preprocessing_config()).fit(
+            part.drop("measurement"), bounds
+        )
+        in_name = F.col("measurement") == name
+        got = joint.state.filter(in_name).drop("measurement")
+        assert sorted(got.collect()) == sorted(single.state.select(*got.columns).collect())
+        if single.norm_state is not None:
+            got_norm = joint.norm_state.filter(in_name).drop("measurement")
+            assert sorted(got_norm.collect()) == sorted(
+                single.norm_state.select(*got_norm.columns).collect()
+            )
+        types[name] = {r["key"]: r["value_type"] for r in got.collect()}
+
+        got_out = joint.transform(part).drop("measurement")
+        want_out = single.transform(part.drop("measurement"))
+        assert sorted(got_out.collect()) == sorted(want_out.select(*got_out.columns).collect())
+
+    # the per-measurement total decides ``rare``; flag tokens in both
+    assert types["lab"]["rare"] != "dropped" and types["vit"]["rare"] == "dropped"
+    assert types["lab"]["flag"] == types["vit"]["flag"] == "categorical_integer"
+    vocab = {
+        (r["measurement"], r["element"]) for r in model.categorical_model.vocab.collect()
+    }
+    assert {("lab", "flag__EQ_1"), ("vit", "flag__EQ_2")} <= vocab
+    assert ("vit", "flag__EQ_1") in vocab and ("lab", "flag__EQ_2") not in vocab
+
+
+def test_fit_checkpoints_do_not_grow_with_numeric_measurements(spark, monkeypatch):
+    """The numeric fit is one keyed pass: a config with three numeric
+    measurements runs as many eager localCheckpoints as one with one."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    ds = _two_regression_ds(spark)
+    subjects = spark.createDataFrame(
+        [(0, "1980-06-01"), (1, "1990-01-15"), (2, "2001-11-30")],
+        "subject_id long, dob string",
+    )
+    ds = EventStreamDataset(ds.events, metadata=ds.metadata, subjects=subjects)
+
+    calls = []
+    original = ClassicDataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", counting)
+
+    def fit_checkpoints(dynamic, time_dependent):
+        config = DatasetConfig.from_simple_args(
+            dynamic_measurement_columns=dynamic,
+            time_dependent_measurement_columns=time_dependent,
+            min_true_float_frequency=0.1,
+        )
+        fit_ds = EventStreamDataset(
+            add_time_dependent_columns(ds.events, ds.subjects, config),
+            metadata=ds.metadata,
+            subjects=ds.subjects,
+        )
+        calls.clear()
+        model = EventStreamPreprocessor(config).fit(fit_ds)
+        return len(model.numeric_measurements), len(calls)
+
+    one = fit_checkpoints([("lab", "lab_value")], [])
+    three = fit_checkpoints(
+        [("lab", "lab_value"), ("vit", "vit_value")], [("age", "age")]
+    )
+    assert one[0] == 1 and three[0] == 3
+    assert one[1] == three[1] > 0

@@ -342,6 +342,32 @@ def test_no_first_row_peeks_in_engine_source():
     assert not offenders, f".first() row peeks found: {offenders}"
 
 
+def test_no_cache_or_persist_in_engine_source():
+    """No ``.cache()`` / ``.persist(`` calls in engine code: a cache is
+    plan-keyed, so a later identical plan in the same session silently
+    reuses it (cross-run result reuse), and nothing unpersists it. Pins
+    are per-invocation ``localCheckpoint``s. Comments and strings are
+    skipped — only code tokens count."""
+    import io
+    import pathlib
+    import tokenize
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "eventstreamml_spark"
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        toks = [
+            t
+            for t in tokenize.generate_tokens(io.StringIO(p.read_text()).readline)
+            if t.type in (tokenize.NAME, tokenize.OP)
+        ]
+        offenders += [
+            f"{p.relative_to(root.parent)}:{b.start[0]}"
+            for a, b, c in zip(toks, toks[1:], toks[2:])
+            if a.string == "." and b.string in ("cache", "persist") and c.string == "("
+        ]
+    assert not offenders, f".cache()/.persist( calls found: {offenders}"
+
+
 def test_driver_window_names_resolve():
     """Every name pinned into the driver's 50-entry window must exist in
     the registry (modulo round-3 entries not yet registered), and the
