@@ -4,7 +4,8 @@ A from-scratch Spark implementation of the query / data-processing
 capabilities of the reference event-stream library (single-process
 pandas), re-expressed as lazy Catalyst DataFrame plans:
 
-- canonical event/measurement/subject data model (``datamodel``)
+- canonical event/measurement/subject data model (``config`` /
+  ``dataset``)
 - sources & sinks (``sources``)
 - relational operator library: filters, joins, aggregations, windows,
   set ops (``operators``)

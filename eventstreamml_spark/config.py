@@ -41,17 +41,6 @@ class DataModality(str, enum.Enum):
     UNIVARIATE_REGRESSION = "univariate_regression"
 
 
-class NumericDataModalitySubtype(str, enum.Enum):
-    """Numeric value subtypes (types.py:110-133); the categorical ones
-    carry the ``f"{key}__EQ_{value}"`` token syntax."""
-
-    DROPPED = "dropped"
-    INTEGER = "integer"
-    FLOAT = "float"
-    CATEGORICAL_INTEGER = "categorical_integer"
-    CATEGORICAL_FLOAT = "categorical_float"
-
-
 NUMERIC_MODALITIES = (
     DataModality.MULTIVARIATE_REGRESSION,
     DataModality.UNIVARIATE_REGRESSION,

@@ -13,14 +13,10 @@ The float rendering is the portability trap: JVM ``CAST(double AS
 STRING)`` matches Python repr for most magnitudes but switches to
 scientific notation at different thresholds (|v| < 1e-3 in Java vs
 1e-4 in Python, and at 1e7 vs 1e16). ``float_token`` (expression,
-fast path) documents that envelope; ``float_token_exact`` (pandas_udf)
-reproduces Python repr bit-for-bit when parity matters more than
-codegen.
+fast path) documents that envelope.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, functions as F
 
@@ -35,20 +31,5 @@ def float_token(key: Column, value: Column) -> Column:
     """``{key}__EQ_{float}`` via JVM double→string. Matches Python repr
     for values in [1e-3, 1e7) and their negatives plus integral-valued
     doubles ("1.0"); outside that, notation may differ from the
-    reference's Python repr — use :func:`float_token_exact` there."""
+    reference's Python repr."""
     return F.concat(key, F.lit("__EQ_"), value.cast("string"))
-
-
-def float_token_exact(key: Column, value: Column) -> Column:
-    """``{key}__EQ_{float}`` with exact Python ``repr`` rendering
-    (Arrow-batched pandas UDF — off the codegen fast path). The UDF is
-    created lazily: pandas_udf registration needs an active session.
-
-    All three variants propagate a null value to a null token (concat,
-    not concat_ws — a missing observation must not emit a bare key)."""
-
-    @F.pandas_udf("string")
-    def _py_float_repr(v: pd.Series) -> pd.Series:
-        return v.map(lambda x: None if pd.isna(x) else repr(float(x)))
-
-    return F.concat(key, F.lit("__EQ_"), _py_float_repr(value))

@@ -126,40 +126,6 @@ def inter_event_time_stats(
     return with_tte.agg(*aggs)
 
 
-def column_observation_rate(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A6: observation frequency per column — ``count(col)/count(*)``
-    in one pass (event_stream_dataset.py:1341-1348)."""
-    n = F.count(F.lit(1))
-    return df.agg(
-        n.alias("n_rows"),
-        *[(F.count(F.col(c)) / n).alias(f"{c}_obs_rate") for c in cols],
-    )
-
-
-def integerness(df: DataFrame, col: str) -> DataFrame:
-    """A7: fraction of non-null values that are integral
-    (event_stream_dataset.py:1249-1254)."""
-    c = F.col(col)
-    return df.filter(c.isNotNull()).agg(
-        F.avg((c == F.floor(c)).cast("double")).alias("frac_integer")
-    )
-
-
-def value_distribution_tests(df: DataFrame, col: str) -> DataFrame:
-    """A8: distinct count and modal-value share of a numeric column
-    (event_stream_dataset.py:1256-1277). One aggregation pass feeding
-    the categorical-vs-numeric decision."""
-    c = F.col(col)
-    per_value = (
-        df.filter(c.isNotNull()).groupBy(c.alias("value")).agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return per_value.agg(
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.sum("cnt").alias("n_obs"),
-        (F.max("cnt") / F.sum("cnt")).alias("max_value_share"),
-    )
-
-
 def running_moments(df: DataFrame, col: str, by: list[str] | None = None) -> DataFrame:
     """A10: (N, ΣX, ΣX²) sufficient statistics — the distributed form of
     the reference's ``DataStats`` running moments

@@ -65,16 +65,6 @@ def word_shingles(
     )
 
 
-def word_shingle_array(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, shingles: array<string>) nested form — collect of
-    :func:`word_shingles` for per-document signature expressions."""
-    return word_shingles(docs, k, id_col, text_col).groupBy(id_col).agg(
-        F.collect_list("shingle").alias("shingles")
-    )
-
-
 def minhash_signatures(
     shingles: DataFrame, n_perm: int = 16, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -88,39 +78,14 @@ def minhash_signatures(
     explode form shuffles n_perm× the shingle volume; at 100 TB that
     is the difference between one pass and sixteen).
 
-    This is the measured fast path (codegen'd min aggregates).
-    :func:`minhash_signatures_from_arrays` exists for nested inputs but
-    runs interpreted (HOFs are outside codegen) — prefer this form.
+    This is the measured fast path (codegen'd min aggregates): a per-row
+    array form runs interpreted (HOFs are outside codegen), ~3× slower.
     """
     aggs = [
         F.min(F.md5(F.concat_ws(":", F.col("shingle"), F.lit(i)))).alias(f"mh{i}")
         for i in range(n_perm)
     ]
     return shingles.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures_from_arrays(
-    shingle_arrays: DataFrame, n_perm: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signatures computed per-row from a (doc, shingles array)
-    relation: ``mh_i = array_min(transform(shingles, s → md5(s||':'||i)))``.
-    Shuffle-free, but higher-order functions evaluate interpreted
-    (outside whole-stage codegen) — measured ~3× slower than the
-    exploded + wide-groupBy form at sf0.1. Use when the input is
-    already nested and re-exploding is worse. Identical output to
-    :func:`minhash_signatures`."""
-    def mh(i: int):
-        # factory closure: a 2-arg lambda would receive transform's
-        # optional index argument instead of the permutation number
-        return F.array_min(
-            F.transform(F.col("shingles"), lambda s: F.md5(F.concat_ws(":", s, F.lit(i))))
-        )
-
-    # empty shingle sets (doc shorter than k words) have no signature —
-    # matching the relational form, where such docs vanish at explode
-    return shingle_arrays.filter(F.size("shingles") > 0).select(
-        F.col(id_col), *[mh(i).alias(f"mh{i}") for i in range(n_perm)]
-    )
 
 
 def lsh_candidate_pairs(

@@ -59,56 +59,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def pair_dot_arrow(
-    df: DataFrame,
-    a_col: str,
-    b_col: str,
-    out_col: str,
-    keep_cols: list[str],
-) -> DataFrame:
-    """Per-row Σaᵢ·bᵢ on the Arrow path, **bit-identical** to
-    :func:`dot`'s interpreted left fold (guide §4.2 — higher-order
-    folds never enter whole-stage codegen, ~10µs/pair·dim interpreted).
-
-    The trick that preserves exactness: vectorize over ROWS, loop over
-    DIMS — ``acc = acc + a[:, j] * b[:, j]`` performs, per scalar, the
-    identical IEEE sequence ``((0.0 + p₀) + p₁) + …`` the fold
-    performs (numpy ufuncs are separate multiply/add passes, never
-    fused), so the emitted double is the same bit pattern and every
-    downstream rounding/ranking is untouched. A BLAS matmul or
-    ``np.sum`` would NOT be (pairwise summation reorders the adds) —
-    that is the float-partial trap this helper is designed around.
-
-    ``keep_cols`` are passed through; arrays are upcast to float64
-    exactly as ``dot``'s per-element double cast does."""
-    import numpy as np
-    import pandas as pd
-
-    out_fields = [df.schema[c] for c in keep_cols]
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(out_fields + [StructField(out_col, DoubleType())])
-
-    def kern(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack(pdf[a_col].to_numpy()).astype(np.float64, copy=False)
-            b = np.stack(pdf[b_col].to_numpy()).astype(np.float64, copy=False)
-            acc = np.zeros(len(pdf), dtype=np.float64)
-            for j in range(a.shape[1]):
-                acc = acc + a[:, j] * b[:, j]
-            out = pdf[keep_cols].copy()
-            out[out_col] = acc
-            yield out
-
-    return df.mapInPandas(kern, schema)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def unit_normalize(a: Column) -> Column:
     """a / ||a|| as array<double>. Pre-normalizing each side ONCE turns
     per-pair cosine into a single dot product — the norm is otherwise
@@ -409,7 +359,7 @@ def ivf_topk(
         "cell_id", F.col(id_col).alias("neighbor_id"), unit_normalize(F.col(vec_col)).alias("_cv")
     )
     # Round-12 measured dead-end: routing this per-pair dot through
-    # pair_dot_arrow (bit-identical Arrow kernel) lost the interleaved
+    # a bit-identical Arrow kernel lost the interleaved
     # A/B 4/6 paired rounds (calm-window pairs ~7s vs ~14s) — at
     # |queries|·n_probe·cell-size ≈ 25k pairs the Arrow boundary
     # (python worker spin-up per task + serde + pipeline break between

@@ -251,9 +251,12 @@ def welch_ttest(
     )
     se2_1 = F.col("_v1") / F.col("_n1")
     se2_2 = F.col("_v2") / F.col("_n2")
-    t = (F.col("_m2") - F.col("_m1")) / F.sqrt(se2_1 + se2_2)
-    dof = (se2_1 + se2_2) ** 2 / (
-        se2_1**2 / (F.col("_n1") - 1) + se2_2**2 / (F.col("_n2") - 1)
+    # try_divide: two constant arms give x/0, which ANSI mode raises on;
+    # NULL is the DuckDB oracle's x/0
+    t = F.try_divide(F.col("_m2") - F.col("_m1"), F.sqrt(se2_1 + se2_2))
+    dof = F.try_divide(
+        (se2_1 + se2_2) ** 2,
+        se2_1**2 / (F.col("_n1") - 1) + se2_2**2 / (F.col("_n2") - 1),
     )
     exactly_two = F.col("_n_arms") == 2
     return two.select(

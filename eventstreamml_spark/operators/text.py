@@ -232,25 +232,6 @@ def language_id(
     )
 
 
-def char_shingles(
-    docs: DataFrame, k: int = 5, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Distinct character k-grams per document: (doc_id, shingle).
-    Built with sequence+explode — no UDF; this is the rolling window
-    that a rolling-hash fingerprint consumes."""
-    text = F.col(text_col)
-    return (
-        docs.filter(F.length(text) >= k)
-        .select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(1), F.length(text) - F.lit(k - 1))).alias("_i"),
-            text.alias("_t"),
-        )
-        .select(F.col(id_col), F.substring(F.col("_t"), F.col("_i").cast("int"), k).alias("shingle"))
-        .distinct()
-    )
-
-
 def fingerprint(
     docs: DataFrame, k: int = 5, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

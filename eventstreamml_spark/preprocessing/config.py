@@ -33,16 +33,3 @@ class PreprocessingConfig:
     @classmethod
     def from_json(cls, s: str) -> "PreprocessingConfig":
         return cls(**json.loads(s))
-
-
-def lt_count_or_proportion(
-    count: int, threshold: int | float | None, total: int
-) -> bool:
-    """True when ``count`` falls below the threshold — int thresholds
-    compare counts, float thresholds compare count/total
-    (reference utils.py:11-26)."""
-    if threshold is None:
-        return False
-    if isinstance(threshold, float):
-        return count < threshold * total
-    return count < threshold

@@ -26,8 +26,6 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from eventstreamml_spark.preprocessing.config import PreprocessingConfig
 
-VALUE_TYPES = ("dropped", "integer", "float", "categorical_integer", "categorical_float")
-
 
 def infer_value_types(
     df: DataFrame,

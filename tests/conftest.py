@@ -16,8 +16,7 @@ SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 # The default `pytest tests/` run must finish inside the driver's
 # budget (round 11 reported tests_ok=false purely because the run
 # TIMED OUT at ~67% with zero failures). Multi-minute blocks — 3M-row
-# scale smokes, the staged-but-unregistered operator fixture matrices,
-# and the full 490-query sf0.01 oracle replica — are @pytest.mark.slow
+# scale smokes and the full 490-query sf0.01 oracle replica — are @pytest.mark.slow
 # and skipped by default; SPARK_GRAFT_SLOW_TESTS=1 runs everything.
 # No coverage is lost: the slow tests remain runnable on demand, the
 # sf0.1 parity sweep artifact (PARITY_SF01.json) re-proves every oracle

@@ -368,6 +368,54 @@ def test_no_cache_or_persist_in_engine_source():
     assert not offenders, f".cache()/.persist( calls found: {offenders}"
 
 
+def test_no_unreferenced_definitions_in_engine_source():
+    """Every top-level ``def``/``class``/module constant in engine code
+    is referenced from code somewhere: the engine, tests, scripts,
+    perfbench, bench.py or the driver entry. References are AST names,
+    attributes and imports (f-string expressions included; comments and
+    strings are not). ``@register`` queries and dunders are exempt."""
+    import ast
+    import collections
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    pkg = repo / "eventstreamml_spark"
+    defs = {}
+    for p in sorted(pkg.rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if any("register" in ast.unparse(d) for d in node.decorator_list):
+                    continue
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for n in names:
+                if not (n.startswith("__") and n.endswith("__")):
+                    defs.setdefault(n, f"{p.relative_to(repo)}:{node.lineno}")
+    sources = [
+        *pkg.rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+        *(repo / "scripts").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    refs = collections.Counter()
+    for p in sources:
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+                refs[node.id] += 1
+            elif isinstance(node, ast.Attribute):
+                refs[node.attr] += 1
+            elif isinstance(node, ast.alias):
+                refs[node.name.rsplit(".", 1)[-1]] += 1
+    dead = sorted(f"{site} {n}" for n, site in defs.items() if not refs[n])
+    assert not dead, f"definitions nothing references: {dead}"
+
+
 def test_driver_window_names_resolve():
     """Every name pinned into the driver's 50-entry window must exist in
     the registry (modulo round-3 entries not yet registered), and the

@@ -35,6 +35,32 @@ class TestWelchArmGuard:
         assert r["n_arms"] == 2
         assert r["t_stat"] is not None
 
+    def test_constant_arms_null_not_throw(self, spark):
+        """Both arms constant: both variances are 0, so t and the
+        Welch-Satterthwaite dof divide by exactly 0. ANSI Spark must
+        return NULL there, as the DuckDB oracle does, not raise."""
+        import duckdb
+
+        from eventstreamml_spark.operators.stats import welch_ttest
+        from eventstreamml_spark.queries import oracle_sql
+
+        rows = [(u % 2, 5.0) for u in range(20)]
+        df = spark.createDataFrame(rows, "arm int, x double")
+        r = welch_ttest(df, "arm", "x").collect()[0]
+        assert (r["n_arms"], r["mean_diff"]) == (2, 0.0)
+        assert r["t_stat"] is None and r["welch_dof"] is None
+
+        conn = duckdb.connect()
+        conn.execute(
+            "CREATE TABLE events AS SELECT u AS user_id, 5.0::DOUBLE AS value "
+            "FROM range(20) t(u)"
+        )
+        cur = conn.execute(oracle_sql()["ab_welch_ttest"])
+        d = dict(zip([c[0] for c in cur.description], cur.fetchall()[0]))
+        conn.close()
+        assert (d["n_arms"], d["mean_diff"]) == (2, 0.0)
+        assert d["t_stat"] is None and d["welch_dof"] is None
+
 
 class TestQuantileSketchAllNonpos:
     def test_all_nonpos_group_still_emitted(self, spark):
