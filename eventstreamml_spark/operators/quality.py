@@ -55,8 +55,10 @@ def profile_table(
                 F.lit(c).alias("col_name"),
                 F.col("_n").alias("n_rows"),
                 F.col(f"{c}__nn").alias("n_nonnull"),
+                # try_divide: an empty table has a NULL rate (DuckDB's
+                # x/0), where ANSI division would raise
                 F.round(
-                    (F.col("_n") - F.col(f"{c}__nn")) / F.col("_n"), 6
+                    F.try_divide(F.col("_n") - F.col(f"{c}__nn"), F.col("_n")), 6
                 ).alias("null_rate"),
                 F.col(f"{c}__ndv").alias("n_distinct"),
                 F.col(f"{c}__min").alias("min_num"),

@@ -74,3 +74,27 @@ def codegen_stage_count(df: DataFrame) -> int:
     )
     m = re.search(r"Found (\d+) WholeStageCodegen subtrees", s)
     return int(m.group(1)) if m else 0
+
+
+#: HotSpot leaves any method with more bytecode than this to the
+#: interpreter (``-XX:HugeMethodLimit``, default 8000).
+JIT_METHOD_LIMIT = 8000
+
+
+def max_generated_method_bytes(df: DataFrame) -> int:
+    """Bytecode size of the largest method among ``df``'s whole-stage
+    codegen stages, compiled here from a plan taken with AQE off (under
+    AQE the stages are only generated at run time). Above
+    ``JIT_METHOD_LIMIT`` that stage's per-row loop runs interpreted."""
+    spark = df.sparkSession
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set(key, prev)
+    stages = df._sc._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+    return max(
+        (stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())), default=0
+    )

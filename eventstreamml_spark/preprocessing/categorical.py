@@ -121,34 +121,35 @@ class CategoricalPreprocessor:
         cfg = self.config
 
         # Single pass over train: per-(measurement, element) counts with
-        # null elements kept as their own group, materialized once per
-        # fit() call (localCheckpoint — vocabulary-sized, one row per
-        # distinct element). Everything downstream (per_meas, counts,
-        # status, vocab) derives from this relation; before this, each
-        # of those subtrees re-expanded the full train scan, so one fit
-        # executed the (possibly explode/join-heavy) train plan 6-8x.
-        base = (
-            train.groupBy(m, F.col(e).cast("string").alias("element"))
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .localCheckpoint()
+        # null elements kept as their own group (vocabulary-sized, one
+        # row per distinct element).
+        base = train.groupBy(m, F.col(e).cast("string").alias("element")).agg(
+            F.count(F.lit(1)).alias("_cnt")
         )
 
-        # per-measurement totals: n_obs counts non-null elements (a
-        # non-null element casts to a non-null string, so the grouped
-        # form is exactly F.count(F.col(e))); _rows counts all rows
-        per_meas = base.groupBy(m).agg(
+        if isinstance(total_possible, DataFrame):
+            base = base.join(F.broadcast(total_possible), m, "left")
+
+        # After the grouped count, one shuffle (partitionBy measurement)
+        # derives all fitted state: the first window takes the
+        # per-measurement totals, the second,
+        # over the same partitioning, ranks the vocabulary and sums what
+        # it folds into UNK. n_obs counts non-null elements (a non-null
+        # element casts to a non-null string, so the grouped form is
+        # exactly F.count(F.col(e))); _rows counts all rows.
+        w_meas = W.partitionBy(m)
+        fitted = base.select(
+            "*",
             F.sum(
                 F.when(F.col("element").isNotNull(), F.col("_cnt")).otherwise(F.lit(0))
-            ).alias("n_obs"),
-            F.sum("_cnt").alias("_rows"),
+            ).over(w_meas).alias("n_obs"),
+            F.sum("_cnt").over(w_meas).alias("_rows"),
         )
         if total_possible is None:
-            per_meas = per_meas.withColumn("total_possible", F.col("_rows"))
+            fitted = fitted.withColumn("total_possible", F.col("_rows"))
         elif isinstance(total_possible, int):
-            per_meas = per_meas.withColumn("total_possible", F.lit(total_possible))
-        else:
-            per_meas = per_meas.join(F.broadcast(total_possible), m, "left")
-        per_meas = per_meas.drop("_rows").withColumn(
+            fitted = fitted.withColumn("total_possible", F.lit(total_possible))
+        fitted = fitted.withColumn(
             "observation_frequency", F.col("n_obs") / F.col("total_possible")
         )
 
@@ -160,14 +161,10 @@ class CategoricalPreprocessor:
             col_ok = F.col("n_obs") >= F.lit(t) * F.col("total_possible")
         else:
             col_ok = F.col("n_obs") >= F.lit(t)
-        per_meas = per_meas.withColumn("_col_ok", col_ok)
 
-        # 2. vocab counts over non-null elements; freq denominator = n_obs
-        counts = (
-            base.filter(F.col("element").isNotNull())
-            .join(F.broadcast(per_meas.select(m, "n_obs", "_col_ok")), m, "inner")
-            .filter(F.col("_col_ok"))
-            .withColumn("freq", F.col("_cnt") / F.col("n_obs"))
+        # 2. vocab frequencies over non-null elements; denominator = n_obs
+        fitted = fitted.withColumn(
+            "freq", F.when(F.col("element").isNotNull(), F.col("_cnt") / F.col("n_obs"))
         )
 
         # 3. rare-element fold into UNK (per-measurement threshold)
@@ -178,42 +175,54 @@ class CategoricalPreprocessor:
             keep = F.col("freq") >= F.lit(te)
         else:
             keep = F.col("_cnt") >= F.lit(te)
-        counts = counts.withColumn("_keep", keep)
-
-        kept = counts.filter(F.col("_keep"))
-        unk_mass = counts.groupBy(m).agg(
-            F.sum(F.when(~F.col("_keep"), F.col("freq")).otherwise(F.lit(0.0))).alias("_unk_freq"),
-            F.count(F.when(F.col("_keep"), F.lit(1))).alias("_n_kept"),
+        fitted = fitted.withColumn(
+            "_keep", F.coalesce(F.col("element").isNotNull() & col_ok & keep, F.lit(False))
         )
 
-        w = W.partitionBy(m).orderBy(F.col("freq").desc(), F.col("element").asc())
-        kept = kept.withColumn("idx", F.row_number().over(w)).select(m, "element", "freq", "idx")
-        unk = unk_mass.select(
+        # kept elements rank first (freq desc, ties by element), so their
+        # row numbers are their vocabulary indices; the sums run over the
+        # whole partition in that same order
+        w = W.partitionBy(m).orderBy(
+            F.col("_keep").desc(), F.col("freq").desc(), F.col("element").asc()
+        )
+        w_all = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        fitted = (
+            fitted.select(
+                "*",
+                F.row_number().over(w).alias("idx"),
+                F.sum(F.col("_keep").cast("int")).over(w_all).alias("_n_kept"),
+                F.sum(
+                    F.when(F.col("element").isNotNull() & ~F.col("_keep"), F.col("freq"))
+                    .otherwise(F.lit(0.0))
+                ).over(w_all).alias("_unk_freq"),
+            )
+            # 4. all-rare ⇒ vocab collapses to [UNK] ⇒ measurement dropped
+            .withColumn("dropped", ~col_ok | (F.col("_n_kept") == 0))
+            .localCheckpoint()
+        )
+
+        # Pinned once above (vocabulary-sized), status and vocab are
+        # narrow filters over it, so save, transform and vocabs() each
+        # read finished rows, and the (possibly explode/join-heavy) train
+        # plan runs once per fit: every measurement has an idx-1 row,
+        # and only kept elements carry their rank.
+        first = fitted.filter(F.col("idx") == 1)
+        status = first.select(
+            m, "n_obs", "total_possible", "observation_frequency", "dropped"
+        )
+        unk = first.filter(~F.col("dropped")).select(
             m,
             F.lit(UNK).alias("element"),
             F.col("_unk_freq").alias("freq"),
             F.lit(0).alias("idx"),
         )
-
-        # 4. all-rare ⇒ vocab collapses to [UNK] ⇒ measurement dropped
-        status = per_meas.join(F.broadcast(unk_mass.select(m, "_n_kept")), m, "left").select(
-            m,
-            "n_obs",
-            "total_possible",
-            "observation_frequency",
-            (~F.col("_col_ok") | (F.coalesce(F.col("_n_kept"), F.lit(0)) == 0)).alias("dropped"),
+        kept = fitted.filter(F.col("_keep") & ~F.col("dropped")).select(
+            m, "element", "freq", "idx"
         )
-        alive = status.filter(~F.col("dropped")).select(m)
-        vocab = unk.unionByName(kept).join(F.broadcast(alive), m, "left_semi")
+        # one partition, as one file when saved: each further partition
+        # of a vocabulary is one more task in every plan that reads it
+        vocab = unk.unionByName(kept).coalesce(1)
 
-        # status/vocab stay LAZY plans over the checkpointed base: they
-        # are vocabulary-sized window/agg chains whose re-execution
-        # inside a consuming job costs less than the two extra eager
-        # localCheckpoint jobs did (r12 interleaved A/B:
-        # categorical_fit_vocab 1.57->0.96 s B 6/6, oov_transform and
-        # age_numeric_preprocess B 6/6 — the round-11 materialization
-        # boundary applies: only EXPENSIVE re-expanded subtrees pay for
-        # a checkpoint, and base is already materialized above).
         return CategoricalPreprocessorModel(
             status=status,
             vocab=vocab,

@@ -35,7 +35,10 @@ categorical rewrites done, and out-of-vocab elements mapped to UNK —
 exactly the shape :func:`eventstreamml_spark.export.tensorize`
 consumes, closing the E1→E2→E3 pipeline.
 
-The wide→long melt uses ``stack`` (one pass, no UDF); model state is
+The wide→long melt is a union of one filtered scan per measurement (no
+UDF). The union stays on purpose: the inputs are often single-row-group
+parquet files, where each scan is one task, and a merged one-scan melt
+gave the final write half the tasks and a slower pass. Model state is
 small DataFrames throughout, broadcast at transform.
 
 Saved model layout (``EventStreamPreprocessorModel.save``)::

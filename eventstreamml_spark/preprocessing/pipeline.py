@@ -104,45 +104,51 @@ class NumericPreprocessorModel:
             F.col("norm_std").alias("_sd"),
         )
         out = df.join(F.broadcast(m), keys, "left")
-        v = F.col(val)
+        v, vt = F.col(val), F.col("_vt")
+        inlier_col = f"{val}_is_inlier"
 
-        # integer rounding (half-even) before outlier/normalizer checks
-        v_typed = F.when(F.col("_vt") == "integer", F.bround(v)).otherwise(v)
-
-        is_numeric = F.col("_vt").isin("integer", "float")
-        is_inlier = F.when(
-            ~is_numeric | v_typed.isNull() | F.col("_ts").isNull(),
-            F.lit(None).cast("boolean"),
-        ).otherwise((v_typed > F.col("_ts")) & (v_typed < F.col("_tl")))
-
-        v_inlier = F.when(is_inlier.isNull() | is_inlier, v_typed)
-
-        normalized = F.when(
-            is_numeric & F.col("_mu").isNotNull() & v_inlier.isNotNull(),
-            F.when(F.col("_sd") == 0, F.lit(0.0)).otherwise(
-                (v_inlier - F.col("_mu")) / F.col("_sd")
-            ),
-        ).otherwise(v_inlier)
-
-        token = (
-            F.when(
-                F.col("_vt") == "categorical_integer", int_token(F.col(key), v)
-            )
-            .when(F.col("_vt") == "categorical_float", float_token(F.col(key), v))
-            .otherwise(F.lit(None).cast("string"))
-        )
-
-        final_val = (
-            F.when(F.col("_vt").isin("dropped", "categorical_integer", "categorical_float"),
-                   F.lit(None).cast("double"))
-            .otherwise(normalized.cast("double"))
-        )
-
+        # Each intermediate is its own column, computed once: written as
+        # one nested expression, every use re-inlined its subtree and the
+        # fused per-row loop outgrew the JVM's 8000-byte JIT limit, so it
+        # ran interpreted (tests/test_codegen_limits.py guards this).
         result = (
-            out.withColumn(f"{val}_is_inlier", is_inlier)
-            .withColumn(f"{val}_token", token)
-            .withColumn(val, final_val)
-            .drop("_vt", "_ts", "_tl", "_mu", "_sd")
+            # integer rounding (half-even) before outlier/normalizer checks
+            out.withColumn("_v", F.when(vt == "integer", F.bround(v)).otherwise(v))
+            .withColumn("_num", vt.isin("integer", "float"))
+            .withColumn(
+                inlier_col,
+                F.when(
+                    ~F.col("_num") | F.col("_v").isNull() | F.col("_ts").isNull(),
+                    F.lit(None).cast("boolean"),
+                ).otherwise((F.col("_v") > F.col("_ts")) & (F.col("_v") < F.col("_tl"))),
+            )
+            .withColumn(
+                "_vi",
+                F.when(F.col(inlier_col).isNull() | F.col(inlier_col), F.col("_v")),
+            )
+            .withColumn(
+                f"{val}_token",
+                F.when(vt == "categorical_integer", int_token(F.col(key), v))
+                .when(vt == "categorical_float", float_token(F.col(key), v))
+                .otherwise(F.lit(None).cast("string")),
+            )
+            .withColumn(
+                val,
+                F.when(
+                    vt.isin("dropped", "categorical_integer", "categorical_float"),
+                    F.lit(None).cast("double"),
+                ).otherwise(
+                    F.when(
+                        F.col("_num") & F.col("_mu").isNotNull() & F.col("_vi").isNotNull(),
+                        F.when(F.col("_sd") == 0, F.lit(0.0)).otherwise(
+                            (F.col("_vi") - F.col("_mu")) / F.col("_sd")
+                        ),
+                    )
+                    .otherwise(F.col("_vi"))
+                    .cast("double")
+                ),
+            )
+            .drop("_vt", "_ts", "_tl", "_mu", "_sd", "_v", "_num", "_vi")
         )
         if self.normalizer_cls == "quantile_transformer" and self.norm_state is not None:
             from eventstreamml_spark.preprocessing.registry import NORMALIZERS

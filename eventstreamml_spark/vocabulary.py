@@ -12,8 +12,9 @@ so ranks are reproducible across partitionings (SURVEY §7 hard parts:
 stable-sort ties).
 
 Scale: vocabularies are aggregation outputs (thousands of rows) —
-always broadcast-joinable. Building one is a single shuffle
-(groupBy element) with map-side partial counts.
+always broadcast-joinable. Building one takes two shuffles: the
+grouped count (``*by``, element) with map-side partial counts, then
+one window partition per ``by`` group that totals and ranks it.
 """
 
 from __future__ import annotations
@@ -59,27 +60,33 @@ def build_vocabulary(
             f"integer vocabularies are not supported (column {col!r} is "
             f"{dt.simpleString()}); cast to string first if intended"
         )
-    grp_total = df.groupBy(*by).agg(F.count(F.lit(1)).alias("_total"))
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(*by, F.col(col).cast("string").alias("element"))
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+    # One grouped count keeps the null group, so each group's total is
+    # the sum of its counts, taken in the same window partition that
+    # ranks the elements (null elements have no freq and rank last).
+    counts = df.groupBy(*by, F.col(col).cast("string").alias("element")).agg(
+        F.count(F.lit(1)).alias("_cnt")
+    )
+    w = W.partitionBy(*by)
+    ranked = counts.withColumn(
+        "freq",
+        F.when(F.col("element").isNotNull(), F.col("_cnt") / F.sum("_cnt").over(w)),
+    ).withColumn(
+        "idx", F.row_number().over(w.orderBy(F.col("freq").desc(), F.col("element").asc()))
     )
     if by:
-        counts = counts.join(F.broadcast(grp_total), by, "inner")
+        # one UNK row per group, all-null groups included
+        unk = ranked.filter(F.col("idx") == 1).select(*by)
     else:
-        counts = counts.crossJoin(F.broadcast(grp_total))
-    ranked = counts.select(
-        *by,
-        "element",
-        (F.col("_cnt") / F.col("_total")).alias("freq"),
-    )
-    w = W.partitionBy(*by).orderBy(F.col("freq").desc(), F.col("element").asc())
-    ranked = ranked.withColumn("idx", F.row_number().over(w))
-    unk = grp_total.select(
+        # a global vocabulary has its UNK row even over empty input
+        unk = df.sparkSession.range(1).select()
+    unk = unk.select(
         *by, F.lit(UNK).alias("element"), F.lit(0.0).alias("freq"), F.lit(0).alias("idx")
     )
-    return unk.unionByName(ranked.select(*by, "element", "freq", "idx"))
+    # one partition (no shuffle): a vocabulary is tiny, and each
+    # partition is one more task in every plan that reads it
+    return unk.unionByName(
+        ranked.filter(F.col("element").isNotNull()).select(*by, "element", "freq", "idx")
+    ).coalesce(1)
 
 
 def filter_vocabulary(

@@ -1,5 +1,8 @@
 """Degenerate inputs: both engines agree, and neither throws.
 
+An empty ``events`` table (the sf0.001 schema, no rows) is replayed
+through ``dq_profile_events``, whose null rate divides by the row count.
+
 Every oracle-checked query that reads only ``events`` and uses its
 ``value`` column is replayed against the sf0.001 events with every
 value set to one constant. Variances, pooled SDs and ranges are then
@@ -68,3 +71,16 @@ def test_constant_value_cases_include_the_dispersion_divisors():
 @pytest.mark.parametrize("name", CONSTANT_VALUE_CASES)
 def test_constant_value_matches_oracle(spark, constant_value_dir, name):
     compare(spark, constant_value_dir, q.queries()[name], q.oracle_sql()[name])
+
+
+@pytest.fixture(scope="module")
+def empty_events_dir(tmp_path_factory):
+    t = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    d = tmp_path_factory.mktemp("empty_events")
+    pq.write_table(t.slice(0, 0), d / "events.parquet")
+    return str(d)
+
+
+def test_empty_events_profile_matches_oracle(spark, empty_events_dir):
+    name = "dq_profile_events"
+    compare(spark, empty_events_dir, q.queries()[name], q.oracle_sql()[name])
