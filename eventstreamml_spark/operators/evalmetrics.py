@@ -12,7 +12,7 @@ EventStreamML's pytorch eval loop); declared-new per SURVEY §2.8b.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 
 def binary_auc(

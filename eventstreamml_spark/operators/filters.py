@@ -12,6 +12,17 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+#: the per-key bound columns :func:`drop_or_censor` takes, in its
+#: argument order
+BOUND_COLS = [
+    "drop_lower_bound",
+    "drop_lower_bound_inclusive",
+    "drop_upper_bound",
+    "drop_upper_bound_inclusive",
+    "censor_lower_bound",
+    "censor_upper_bound",
+]
+
 #: unit string → (lower, lower_inclusive, upper, upper_inclusive)
 #: reference UNIT_BOUNDS (event_stream_dataset.py:59-62)
 UNIT_BOUNDS: dict[str, tuple[float, bool, float, bool]] = {
@@ -83,24 +94,16 @@ def drop_oob_and_censor_outliers(
     joined on in front of the key."""
     out_col = out_col or value_col
     keys = [*(by or []), key_col]
-    bound_cols = [
-        "drop_lower_bound",
-        "drop_lower_bound_inclusive",
-        "drop_upper_bound",
-        "drop_upper_bound_inclusive",
-        "censor_lower_bound",
-        "censor_upper_bound",
-    ]
     b = bounds.select(
         *keys,
         *[
             (F.col(c) if c in bounds.columns else F.lit(None)).alias(f"_b_{c}")
-            for c in bound_cols
+            for c in BOUND_COLS
         ],
     )
     joined = vals.join(F.broadcast(b), keys, "left")
-    expr = drop_or_censor(F.col(value_col), *[F.col(f"_b_{c}") for c in bound_cols])
-    return joined.withColumn(out_col, expr).drop(*[f"_b_{c}" for c in bound_cols])
+    expr = drop_or_censor(F.col(value_col), *[F.col(f"_b_{c}") for c in BOUND_COLS])
+    return joined.withColumn(out_col, expr).drop(*[f"_b_{c}" for c in BOUND_COLS])
 
 
 def merge_unit_inferred_bounds(bounds: DataFrame, unit_col: str = "unit") -> DataFrame:

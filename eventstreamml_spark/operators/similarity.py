@@ -307,7 +307,6 @@ def ivf_assign(
     HOF expression: queries are few). Ties break toward the larger
     cell id, matching ``_nearest_cells``'s descending struct sort."""
     import numpy as np
-    import pandas as pd
 
     cents = sorted(
         ((r["cell_id"], r["centroid"]) for r in centroids.collect()),

@@ -202,8 +202,6 @@ def hll_distinct_estimate(
     zeros by a 15-way CASE. Plan shape: groupBy(group, bucket) max →
     groupBy(group) harmonic sum — two map-side-combined shuffles, a
     fixed-size mergeable sketch in between."""
-    import math
-
     keys = [by] if by else []
     m = 1 << p
     hx = F.md5(F.col(key_col).cast("string"))

@@ -14,6 +14,7 @@ here changes execution.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -81,19 +82,35 @@ def codegen_stage_count(df: DataFrame) -> int:
 JIT_METHOD_LIMIT = 8000
 
 
-def max_generated_method_bytes(df: DataFrame) -> int:
-    """Bytecode size of the largest method among ``df``'s whole-stage
-    codegen stages, compiled here from a plan taken with AQE off (under
-    AQE the stages are only generated at run time). Above
-    ``JIT_METHOD_LIMIT`` that stage's per-row loop runs interpreted."""
+def _plan_without_aqe(df: DataFrame):
+    """``df``'s physical plan, planned afresh with AQE off (under AQE
+    the final plan and its codegen stages only exist at run time)."""
     spark = df.sparkSession
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        plan = df.select("*")._jdf.queryExecution().executedPlan()
+        qe = df.select("*")._jdf.queryExecution()
+        qe.executedPlan()  # lazy: plan it now, while AQE is off
+        return qe
     finally:
         spark.conf.set(key, prev)
+
+
+def node_counts(df: DataFrame) -> Counter:
+    """Physical operators of ``df`` planned with AQE off, counted by
+    name (``Scan``, ``Exchange``, ``BroadcastHashJoin``, ...): one per
+    numbered node of the formatted plan."""
+    qe = _plan_without_aqe(df)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")  # type: ignore[attr-defined]
+    return Counter(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
+
+
+def max_generated_method_bytes(df: DataFrame) -> int:
+    """Bytecode size of the largest method among ``df``'s whole-stage
+    codegen stages, compiled here from a plan taken with AQE off. Above
+    ``JIT_METHOD_LIMIT`` that stage's per-row loop runs interpreted."""
+    plan = _plan_without_aqe(df).executedPlan()
     stages = df._sc._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
     return max(
         (stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())), default=0

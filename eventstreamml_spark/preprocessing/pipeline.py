@@ -55,24 +55,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from eventstreamml_spark.functions.tokens import float_token, int_token
 from eventstreamml_spark.operators.filters import (
+    BOUND_COLS,
     drop_oob_and_censor_outliers,
+    drop_or_censor,
     merge_unit_inferred_bounds,
 )
 from eventstreamml_spark.preprocessing.config import PreprocessingConfig
-from eventstreamml_spark.preprocessing.normalizer import (
-    apply_standard_scaler,
-    fit_standard_scaler,
-)
 from eventstreamml_spark.preprocessing.types_infer import infer_value_types
-
-_BOUND_COLS = [
-    "drop_lower_bound",
-    "drop_lower_bound_inclusive",
-    "drop_upper_bound",
-    "drop_upper_bound_inclusive",
-    "censor_lower_bound",
-    "censor_upper_bound",
-]
 
 
 @dataclasses.dataclass
@@ -92,11 +81,10 @@ class NumericPreprocessorModel:
     def transform(self, df: DataFrame) -> DataFrame:
         key, val, by = self.key_col, self.value_col, self.by
         keys = [*by, key]
-        df = drop_oob_and_censor_outliers(
-            df, self.state.select(*keys, *_BOUND_COLS), key, val, by=by
-        )
+        bounds = [f"_b_{c}" for c in BOUND_COLS]
         m = self.state.select(
             *keys,
+            *[F.col(c).alias(b) for c, b in zip(BOUND_COLS, bounds)],
             F.col("value_type").alias("_vt"),
             F.col("thresh_small").alias("_ts"),
             F.col("thresh_large").alias("_tl"),
@@ -112,8 +100,10 @@ class NumericPreprocessorModel:
         # fused per-row loop outgrew the JVM's 8000-byte JIT limit, so it
         # ran interpreted (tests/test_codegen_limits.py guards this).
         result = (
-            # integer rounding (half-even) before outlier/normalizer checks
-            out.withColumn("_v", F.when(vt == "integer", F.bround(v)).otherwise(v))
+            # bound drop/censor (P6), then integer rounding (half-even)
+            # before outlier/normalizer checks
+            out.withColumn(val, drop_or_censor(v, *[F.col(b) for b in bounds]))
+            .withColumn("_v", F.when(vt == "integer", F.bround(v)).otherwise(v))
             .withColumn("_num", vt.isin("integer", "float"))
             .withColumn(
                 inlier_col,
@@ -148,7 +138,7 @@ class NumericPreprocessorModel:
                     .cast("double")
                 ),
             )
-            .drop("_vt", "_ts", "_tl", "_mu", "_sd", "_v", "_num", "_vi")
+            .drop(*bounds, "_vt", "_ts", "_tl", "_mu", "_sd", "_v", "_num", "_vi")
         )
         if self.normalizer_cls == "quantile_transformer" and self.norm_state is not None:
             from eventstreamml_spark.preprocessing.registry import NORMALIZERS
@@ -210,16 +200,12 @@ class NumericPreprocessor:
         key_col: str,
         value_col: str,
         config: PreprocessingConfig | None = None,
-        fit_outliers: bool = True,
-        fit_normalizer: bool = True,
         param_round_dp: int | None = None,
         by: list[str] | None = None,
     ) -> None:
         self.key_col = key_col
         self.value_col = value_col
         self.config = config or PreprocessingConfig()
-        self.fit_outliers = fit_outliers
-        self.fit_normalizer = fit_normalizer
         # Oracle-parity mode: round fitted params (thresholds, scaler
         # mean/std) to this many decimals at each stage boundary, BEFORE
         # the next stage consumes them. Aggregates are the only cross-
@@ -240,18 +226,15 @@ class NumericPreprocessor:
             if "unit" in bounds.columns:
                 bounds = merge_unit_inferred_bounds(bounds)
             bounds_state = bounds
-            train = drop_oob_and_censor_outliers(
-                train, bounds.select(key, *[c for c in _BOUND_COLS if c in bounds.columns]),
-                key, val,
-            )
+            train = drop_oob_and_censor_outliers(train, bounds, key, val)
         else:
             bounds_state = None
 
         # 3. value types — materialized per fit() call (one row per
         # key): typed/numeric/inliers and the final state each
         # reference this relation, and without the checkpoint every
-        # reference re-expands the full inference subtree (3 grouped
-        # passes over train) inside its own job
+        # reference re-expands the full inference subtree (three chained
+        # aggregations over train) inside its own job
         types = infer_value_types(train, key, val, self.config, by=by).localCheckpoint()
 
         # 4. typed view for model fitting (integer keys rounded)
@@ -266,79 +249,63 @@ class NumericPreprocessor:
         numeric = typed.filter(F.col("value_type").isin("integer", "float"))
 
         # 5. per-key outlier fit (registry-resolved, U2)
+        from eventstreamml_spark.preprocessing.registry import NORMALIZERS, OUTLIER_DETECTORS
+
         od_cfg = dict(self.config.outlier_detector_config or {})
         od_cls = od_cfg.pop("cls", "variance_impact")
-        if self.fit_outliers:
-            from eventstreamml_spark.preprocessing.registry import OUTLIER_DETECTORS
-
-            if od_cls not in OUTLIER_DETECTORS:
-                raise KeyError(f"unknown outlier detector {od_cls!r}")
-            od = OUTLIER_DETECTORS[od_cls]
-            viod = od["fit"](numeric, key, val, by=by, **od_cfg)
-            if self.param_round_dp is not None:
-                dp = self.param_round_dp
-                viod = viod.withColumn(
-                    "thresh_small", F.round("thresh_small", dp)
-                ).withColumn("thresh_large", F.round("thresh_large", dp))
-            # per-key thresholds, tiny: materialize so the inlier
-            # apply and the state assembly reference the computed
-            # relation instead of re-running the detector fit
-            viod = viod.localCheckpoint()
-            inliers = od["apply"](numeric, viod, key, val, by=by)
-        else:
-            viod = None
-            inliers = numeric
+        if od_cls not in OUTLIER_DETECTORS:
+            raise KeyError(f"unknown outlier detector {od_cls!r}")
+        od = OUTLIER_DETECTORS[od_cls]
+        viod = od["fit"](numeric, key, val, by=by, **od_cfg)
+        if self.param_round_dp is not None:
+            dp = self.param_round_dp
+            viod = viod.withColumn("thresh_small", F.round("thresh_small", dp)).withColumn(
+                "thresh_large", F.round("thresh_large", dp)
+            )
+        # per-key thresholds, tiny: materialize so the inlier apply and
+        # the state assembly reference the computed relation instead of
+        # re-running the detector fit
+        viod = viod.localCheckpoint()
+        inliers = od["apply"](numeric, viod, key, val, by=by)
 
         # 6. normalizer fit on surviving values (registry-resolved, U2)
         n_cfg = dict(self.config.normalizer_config or {})
         normalizer_cls = n_cfg.pop("cls", "standard_scaler")
-        if self.fit_normalizer:
-            from eventstreamml_spark.preprocessing.registry import NORMALIZERS
-
-            if normalizer_cls not in NORMALIZERS:
-                raise KeyError(f"unknown normalizer {normalizer_cls!r}")
-            norm = NORMALIZERS[normalizer_cls]["fit"](inliers, key, val, by=by, **n_cfg)
-            if self.param_round_dp is not None and normalizer_cls == "standard_scaler":
-                dp = self.param_round_dp
-                norm = norm.withColumn("mean", F.round("mean", dp)).withColumn(
-                    "std", F.round("std", dp)
-                )
-            # per-key normalizer params, tiny: materialize once (the
-            # state join and non-scaler norm_state both reference it)
-            norm = norm.localCheckpoint()
-        else:
-            norm = None
+        if normalizer_cls not in NORMALIZERS:
+            raise KeyError(f"unknown normalizer {normalizer_cls!r}")
+        norm = NORMALIZERS[normalizer_cls]["fit"](inliers, key, val, by=by, **n_cfg)
+        if self.param_round_dp is not None and normalizer_cls == "standard_scaler":
+            dp = self.param_round_dp
+            norm = norm.withColumn("mean", F.round("mean", dp)).withColumn(
+                "std", F.round("std", dp)
+            )
+        # per-key normalizer params, tiny: materialize once (the state
+        # join and non-scaler norm_state both reference it)
+        norm = norm.localCheckpoint()
 
         state = types
         if bounds_state is not None:
             state = state.join(
-                bounds_state.select(key, *[c for c in _BOUND_COLS if c in bounds_state.columns]),
+                bounds_state.select(key, *[c for c in BOUND_COLS if c in bounds_state.columns]),
                 key,
                 "left",
             )
-        for c in _BOUND_COLS:
+        for c in BOUND_COLS:
             if c not in state.columns:
                 typ = "boolean" if c.endswith("_inclusive") else "double"
                 state = state.withColumn(c, F.lit(None).cast(typ))
-        if viod is not None:
-            state = state.join(
-                viod.select(*keys, "thresh_small", "thresh_large", "all_outliers"),
-                keys,
-                "left",
-            )
-            # all-outlier keys → DROPPED (reference :1204-1206)
-            state = state.withColumn(
-                "value_type",
-                F.when(F.coalesce(F.col("all_outliers"), F.lit(False)), "dropped").otherwise(
-                    F.col("value_type")
-                ),
-            ).drop("all_outliers")
-        else:
-            state = state.withColumn("thresh_small", F.lit(None).cast("double")).withColumn(
-                "thresh_large", F.lit(None).cast("double")
-            )
+        state = state.join(
+            viod.select(*keys, "thresh_small", "thresh_large", "all_outliers"), keys, "left"
+        )
+        # all-outlier keys → DROPPED (reference :1204-1206)
+        state = state.withColumn(
+            "value_type",
+            F.when(F.coalesce(F.col("all_outliers"), F.lit(False)), "dropped").otherwise(
+                F.col("value_type")
+            ),
+        ).drop("all_outliers")
         norm_state = None
-        if norm is not None and normalizer_cls == "standard_scaler":
+        if normalizer_cls == "standard_scaler":
             state = state.join(
                 norm.select(
                     *keys, F.col("mean").alias("norm_mean"), F.col("std").alias("norm_std")
@@ -350,8 +317,7 @@ class NumericPreprocessor:
             state = state.withColumn("norm_mean", F.lit(None).cast("double")).withColumn(
                 "norm_std", F.lit(None).cast("double")
             )
-            if norm is not None:
-                norm_state = norm  # already checkpointed above
+            norm_state = norm  # already checkpointed above
 
         # model state is tiny (one row per key) — materialize it per
         # fit() call so every downstream transform reuses the computed

@@ -13,7 +13,9 @@ Decision per (measurement) key, in reference order:
 
 Distinct/modal statistics are computed on the *rounded* values when
 step 2 fired (the reference converts before value_counts). Everything
-is two aggregation passes over the measurements table — no Python.
+is one read of the measurements table and three chained aggregations —
+per (key, value), per (key, rounded value), per key — with no join and
+no Python.
 
 ``by`` adds grouping columns in front of the key (e.g. the measurement
 name), so one call types the keys of many measurements at once; the
@@ -43,39 +45,39 @@ def infer_value_types(
     """
     by = list(by or [])
     keys = [*by, key_col]
-    v = F.col(value_col)
-    vr = F.bround(v)  # half-even, matching numpy/pandas .round(0)
+    val = F.col("_val")
 
-    per_key = df.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("n_key_obs"),
-        F.count(v).alias("n_vals"),
-        F.avg((v == F.floor(v)).cast("double")).alias("int_freq"),
+    # One read, three chained groupBys, no joins. Every statistic is an
+    # exact integer sum or max of counts, so the result equals per-row
+    # aggregates over the raw values.
+    # 1. count per (key, raw value); the NULL-value group is kept so
+    #    n_key_obs still counts key rows whose value is missing
+    per_val = df.groupBy(*keys, F.col(value_col).alias("_val")).agg(
+        F.count(F.lit(1)).alias("_c")
     )
-
-    # distinct/modal stats for both raw and rounded variants in one
-    # extra pass; the when-chain picks the variant the type decision
-    # needs (rounded iff INTEGER fired)
-    vc_raw = (
-        df.filter(v.isNotNull())
-        .groupBy(*keys, v.alias("_val"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_distinct_raw"),
-            F.max("_c").alias("modal_raw"),
-        )
+    # 2. regroup per (key, rounded value) — half-even, matching
+    #    numpy/pandas .round(0); the NULL group stays a NULL group, and
+    #    its raw-value statistics are NULL
+    per_rnd = per_val.groupBy(*keys, F.bround(val).alias("_rnd")).agg(
+        F.sum("_c").alias("_c"),
+        F.count(val).alias("_n_raw"),
+        F.max(F.when(val.isNotNull(), F.col("_c"))).alias("_modal_raw"),
+        F.sum(F.when(val == F.floor(val), F.col("_c")).when(val.isNotNull(), 0)).alias("_n_int"),
     )
-    vc_round = (
-        df.filter(v.isNotNull())
-        .groupBy(*keys, vr.alias("_val"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_distinct_round"),
-            F.max("_c").alias("modal_round"),
-        )
+    # 3. per key. sum/max over ``when`` (not count) leave a key with no
+    #    non-null value at NULL distinct/modal counts and int_freq
+    num = F.col("_rnd").isNotNull()
+    n_vals = F.sum(F.when(num, F.col("_c")).otherwise(0))
+    stats = per_rnd.groupBy(*keys).agg(
+        F.sum("_c").alias("n_key_obs"),
+        n_vals.alias("n_vals"),
+        # == avg of 0/1 doubles: an exact integer sum over a count
+        F.try_divide(F.sum("_n_int"), n_vals).alias("int_freq"),
+        F.sum(F.when(num, F.col("_n_raw"))).alias("n_distinct_raw"),
+        F.max("_modal_raw").alias("modal_raw"),
+        F.sum(F.when(num, 1)).alias("n_distinct_round"),
+        F.max(F.when(num, F.col("_c"))).alias("modal_round"),
     )
-    stats = per_key.join(vc_raw, keys, "left").join(vc_round, keys, "left")
 
     # column-level total = sum of per-key row counts — computed as a
     # window over the (one row per key) stats relation instead of a

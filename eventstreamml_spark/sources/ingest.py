@@ -23,7 +23,7 @@ density/parity is not required.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 MANDATORY_EVENT_COLS = ["event_id", "subject_id", "timestamp", "event_type"]
 MANDATORY_METADATA_COLS = ["metadata_id", "event_id", "event_type", "subject_id"]

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from eventstreamml_spark.plans.inspect import (
     codegen_stage_count,
+    node_counts,
     pushed_filters,
     read_schema_columns,
     shuffle_count,
@@ -504,3 +505,39 @@ def test_codegen_detector_distinguishes_zero_stages(spark):
     compiled = spark.range(1000).selectExpr("sum(id * 3 % 7) AS s")
     compiled.collect()
     assert codegen_stage_count(compiled) >= 1
+
+
+def test_value_type_inference_reads_its_input_once(spark, tmp_path):
+    """``infer_value_types`` is one chain of aggregations over one read
+    of its input: a second scan or a join means a statistic is computed
+    in a pipeline of its own and joined back."""
+    from eventstreamml_spark.preprocessing.config import PreprocessingConfig
+    from eventstreamml_spark.preprocessing.types_infer import infer_value_types
+
+    path = str(tmp_path / "m")
+    spark.createDataFrame(
+        [("lab", f"k{i % 3}", float(i % 7)) for i in range(30)],
+        "measurement string, key string, value double",
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    for by in (None, ["measurement"]):
+        counts = node_counts(infer_value_types(df, "key", "value", PreprocessingConfig(), by=by))
+        assert counts["Scan"] == 1, counts
+        assert not [n for n in counts if "Join" in n], counts
+
+
+def test_keyed_numeric_transform_joins_state_once(spark):
+    """The transform joins the fitted state once: the bounds drop/censor
+    reads its bound columns from the same broadcast join as the type,
+    outlier and scaler columns."""
+    from eventstreamml_spark.preprocessing.pipeline import NumericPreprocessor
+
+    rows = [("lab", f"k{i % 3}", float(i % 17)) for i in range(60)] + [
+        ("age", "age", 20.0 + i / 7) for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "measurement string, key string, value double")
+    model = NumericPreprocessor("key", "value", by=["measurement"]).fit(df)
+    assert model.normalizer_cls == "standard_scaler"
+    counts = node_counts(model.transform(df))
+    assert counts["BroadcastHashJoin"] == 1, counts
+    assert not [n for n in counts if "Join" in n and n != "BroadcastHashJoin"], counts

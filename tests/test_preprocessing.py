@@ -385,3 +385,78 @@ def test_infer_column_total_is_cross_key_sum_with_nulls(spark):
     assert out["rare"] == "dropped" and out["common"] == "integer"
     out2 = _infer(spark, rows, min_valid_vocab_element_observations=0.02)
     assert out2["rare"] == "integer"
+
+
+# --- infer_value_types: full rows pinned ---
+_PINNED_ROWS = (
+    [("a", "allnull", None)] * 3
+    + [("a", "partnull", v) for v in (1.5, None, 2.5, 1.5)]
+    + [("a", "round", v) for v in (1.4, 1.6, 2.5, 2.5, 3.0)]
+    + [("a", "x", v) for v in (1.0, 2.0, 7.25)]
+    + [("b", "x", v) for v in (4.0, 4.0, 4.0, 5.5)]
+    + [("b", "rare", 9.0)]
+)
+_PINNED_CONFIG = PreprocessingConfig(
+    min_valid_vocab_element_observations=2,
+    min_true_float_frequency=0.9,  # INTEGER iff int_freq > 0.1
+    min_unique_numerical_observations=3,
+    max_numerical_value_frequency=0.5,
+)
+
+
+@pytest.mark.parametrize("by", [["m"], None])
+def test_infer_value_types_rows_pinned(spark, by):
+    """Every output column, NULLs included, on: an all-NULL key (NULL
+    int_freq/n_distinct/modal_share, typed float); a partly-NULL key;
+    a key where INTEGER fires so distinct/modal are taken on rounded
+    values (raw 1.4/1.6/2.5/2.5/3.0 has 4 distinct, modal 2; rounded
+    1/2/2/2/3 has 3, modal 3); key ``x`` shared by two ``by`` groups
+    (5.5 rounds half-even to 6); a key dropped for too few rows."""
+    df = spark.createDataFrame(_PINNED_ROWS, "m string, key string, value double")
+    if by is None:
+        df = df.drop("m")
+    out = infer_value_types(df, "key", "value", _PINNED_CONFIG, by=by)
+    assert out.dtypes[-6:] == [
+        ("value_type", "string"),
+        ("n_key_obs", "bigint"),
+        ("n_vals", "bigint"),
+        ("int_freq", "double"),
+        ("n_distinct", "bigint"),
+        ("modal_share", "double"),
+    ]
+    common = [
+        ("allnull", "float", 3, 0, None, None, None),
+        ("partnull", "categorical_float", 4, 3, 0.0, 2, 2 / 3),
+        ("round", "categorical_integer", 5, 5, 1 / 5, 3, 3 / 5),
+        ("rare", "dropped", 1, 1, 1.0, 1, 1.0),
+    ]
+    if by:
+        expected = [("a", *r) for r in common[:3]] + [
+            ("a", "x", "integer", 3, 3, 2 / 3, 3, 1 / 3),
+            ("b", "rare", *common[3][1:]),
+            ("b", "x", "categorical_integer", 4, 4, 3 / 4, 2, 3 / 4),
+        ]
+    else:
+        expected = common + [("x", "integer", 7, 7, 5 / 7, 5, 3 / 7)]
+    assert sorted(tuple(r) for r in out.collect()) == sorted(expected)
+
+
+@pytest.mark.parametrize("by", [["m"], None])
+def test_infer_value_types_empty_input(spark, by):
+    df = spark.createDataFrame([], "m string, key string, value double")
+    assert infer_value_types(df, "key", "value", _PINNED_CONFIG, by=by).collect() == []
+
+
+def test_infer_null_key_is_typed_from_its_values(spark):
+    """A NULL key is one group like any other: its distinct and modal
+    counts come from its own values (1, 1, 2 → 2 distinct, modal 2/3),
+    so it is typed categorical like the non-NULL key with the same
+    values."""
+    rows = [(k, v) for k in ("k", None) for v in (1.0, 1.0, 2.0)]
+    df = spark.createDataFrame(rows, "key string, value double")
+    out = infer_value_types(
+        df, "key", "value", PreprocessingConfig(min_unique_numerical_observations=3)
+    )
+    assert {tuple(r) for r in out.collect()} == {
+        (k, "categorical_integer", 3, 3, 1.0, 2, 2 / 3) for k in ("k", None)
+    }

@@ -416,6 +416,37 @@ def test_no_unreferenced_definitions_in_engine_source():
     assert not dead, f"definitions nothing references: {dead}"
 
 
+def test_no_unused_imports_in_engine_source():
+    """Every name an engine module imports, at module level or inside a
+    function, is used somewhere in that module as an AST name. Imports
+    marked ``# noqa: F401`` (availability probes) and ``__init__.py``
+    re-exports are exempt."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    unused = []
+    for p in sorted((repo / "eventstreamml_spark").rglob("*.py")):
+        if p.name == "__init__.py":
+            continue
+        src = p.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if any("noqa: F401" in lines[i - 1] for i in range(node.lineno, node.end_lineno + 1)):
+                continue
+            for a in node.names:
+                name = a.asname or a.name.split(".")[0]
+                if name not in used:
+                    unused.append(f"{p.relative_to(repo)}:{node.lineno} {name}")
+    assert not unused, f"unused imports: {unused}"
+
+
 def test_driver_window_names_resolve():
     """Every name pinned into the driver's 50-entry window must exist in
     the registry (modulo round-3 entries not yet registered), and the
