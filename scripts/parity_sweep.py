@@ -39,6 +39,37 @@ def _data_fingerprint(sf_dir: str) -> dict[str, str]:
     return out
 
 
+def _tree_provenance() -> tuple[str, str, bool]:
+    """``(commit, verified_tree, dirty)`` of the checkout a sweep runs on.
+
+    A sweep necessarily runs BEFORE the commit that carries its
+    artifact, so the verified tree is pinned bit-exactly via a
+    `git stash create`-style tree hash (includes uncommitted tracked
+    changes) rather than parent+dirty."""
+    sha = subprocess.run(
+        ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True
+    ).stdout.strip()
+    dirty = bool(
+        subprocess.run(
+            ["git", "status", "--porcelain"],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+        ).stdout.strip()
+    )
+    tree = subprocess.run(
+        ["git", "stash", "create"], cwd=REPO, capture_output=True, text=True
+    ).stdout.strip()
+    if not tree:  # clean tree: stash create emits nothing
+        tree = subprocess.run(
+            ["git", "rev-parse", "HEAD^{tree}"],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+        ).stdout.strip()
+    return sha, tree, dirty
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = (
@@ -51,32 +82,7 @@ def main() -> int:
     from eventstreamml_spark.session import get_spark
     from tests.oracle import compare
 
-    sha = subprocess.run(
-        ["git", "rev-parse", "HEAD"], cwd=REPO, capture_output=True, text=True
-    ).stdout.strip()
-    dirty = bool(
-        subprocess.run(
-            ["git", "status", "--porcelain"],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-        ).stdout.strip()
-    )
-    # exact-tree provenance (round-10 verdict nit): the sweep necessarily
-    # runs BEFORE the commit that carries its artifact, so pin the
-    # verified tree bit-exactly via `git stash create`-style tree hash
-    # (includes uncommitted tracked changes) rather than parent+dirty.
-    tree = subprocess.run(
-        ["git", "stash", "create"], cwd=REPO, capture_output=True, text=True
-    ).stdout.strip()
-    if not tree:  # clean tree: stash create emits nothing
-        tree = subprocess.run(
-            ["git", "rev-parse", "HEAD^{tree}"],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-        ).stdout.strip()
-
+    sha, tree, dirty = _tree_provenance()
     spark = get_spark("parity-sweep", shuffle_partitions=16)
     results: dict[str, dict] = {}
     fails = 0
