@@ -234,8 +234,16 @@ class NumericPreprocessor:
         # key): typed/numeric/inliers and the final state each
         # reference this relation, and without the checkpoint every
         # reference re-expands the full inference subtree (three chained
-        # aggregations over train) inside its own job
-        types = infer_value_types(train, key, val, self.config, by=by).localCheckpoint()
+        # aggregations over train) inside its own job. A NULL key is a
+        # missing key (the reference's per-key pandas groupby drops NaN
+        # keys; SURVEY P6): it gets no state row, so transform passes
+        # its values through raw. Its values still count in the column
+        # totals that type every other key.
+        types = (
+            infer_value_types(train, key, val, self.config, by=by)
+            .where(F.col(key).isNotNull())
+            .localCheckpoint()
+        )
 
         # 4. typed view for model fitting (integer keys rounded)
         typed = train.join(

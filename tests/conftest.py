@@ -38,3 +38,25 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     s = get_spark("eventstreamml_spark_tests", shuffle_partitions=8)
     yield s
+
+
+DURATIONS_JSON = "/tmp/tier1_durations.json"
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Write every test's duration (setup + call + teardown, seconds) to
+    ``DURATIONS_JSON``, slowest first, so two runs' budgets can be
+    diffed."""
+    import json
+
+    totals: dict[str, float] = {}
+    for reports in terminalreporter.stats.values():
+        for rep in reports:
+            if getattr(rep, "when", None) and hasattr(rep, "duration"):
+                totals[rep.nodeid] = totals.get(rep.nodeid, 0.0) + rep.duration
+    ranked = sorted(totals.items(), key=lambda kv: kv[1], reverse=True)
+    with open(DURATIONS_JSON, "w") as f:
+        json.dump(
+            [{"test": k, "seconds": round(v, 3)} for k, v in ranked], f, indent=0
+        )
+        f.write("\n")

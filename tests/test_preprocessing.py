@@ -460,3 +460,27 @@ def test_infer_null_key_is_typed_from_its_values(spark):
     assert {tuple(r) for r in out.collect()} == {
         (k, "categorical_integer", 3, 3, 1.0, 2, 2 / 3) for k in ("k", None)
     }
+
+
+def test_numeric_preprocessor_null_key_is_a_missing_key(spark):
+    """A NULL key counts as a missing key (the reference's per-key
+    pandas groupby drops NaN keys; SURVEY P6: missing keys pass
+    through). fit keeps no state row for it, transform passes its
+    values through raw, and the ``k`` rows beside it are typed and
+    tokenized exactly as without the NULL key's rows."""
+    rows = [(k, v) for k in ("k", None) for v in (1.0, 1.0, 2.0)]
+    df = spark.createDataFrame(rows, "key string, value double")
+    config = PreprocessingConfig(min_unique_numerical_observations=3)
+    model = NumericPreprocessor("key", "value", config).fit(df)
+    state = model.state.collect()
+    assert [r["key"] for r in state] == ["k"]
+    assert tuple(state[0])[:7] == ("k", "categorical_integer", 3, 3, 1.0, 2, 2 / 3)
+    assert all(v is None for v in tuple(state[0])[7:])
+
+    out = model.transform(df).select("key", "value", "value_token").collect()
+    assert sorted(
+        (r["value"], r["value_token"]) for r in out if r["key"] is None
+    ) == [(1.0, None), (1.0, None), (2.0, None)]
+    assert sorted(
+        (r["value"], r["value_token"]) for r in out if r["key"] == "k"
+    ) == [(None, "k__EQ_1"), (None, "k__EQ_1"), (None, "k__EQ_2")]

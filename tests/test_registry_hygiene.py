@@ -104,27 +104,6 @@ def _pandas_datetime_roundtrip(cols, rows) -> None:
             col.astype("datetime64[ns]")
 
 
-def test_oracle_values_survive_pandas_roundtrip():
-    """Every oracle's *values* (not just types) must survive the
-    driver's DuckDB→pandas conversion. Executes each oracle at the
-    smoke SF and round-trips the raw rows the way the driver does; an
-    out-of-range timestamp (pandas ns ceiling 2262-04-11) fails here
-    locally instead of burning a driver window slot."""
-    from tests.oracle import duckdb_conn
-
-    conn = duckdb_conn(SF_SMOKE)
-    errors = {}
-    for name, sql in q.oracle_sql().items():
-        try:
-            res = conn.execute(sql)
-            cols = [d[0] for d in res.description]
-            _pandas_datetime_roundtrip(cols, res.fetchall())
-        except Exception as exc:  # noqa: BLE001 — any conversion failure is a finding
-            errors[name] = f"{type(exc).__name__}: {exc}"
-    conn.close()
-    assert not errors, f"oracles with pandas-unconvertible values: {errors}"
-
-
 def _negative_zero_cells(cols, rows) -> list[str]:
     import math as _math
 
@@ -136,31 +115,47 @@ def _negative_zero_cells(cols, rows) -> list[str]:
     return sorted(bad)
 
 
-def test_oracle_outputs_have_no_negative_zero():
-    """IEEE signed zero is engine-unstable: DuckDB's ``round()``
-    preserves ``-0.0`` where Spark's ``F.round`` returns ``+0.0``, and
-    the driver's hasher distinguishes the two (round-7 red row:
-    ``theil_sen_trend_by_subject``, the only wrong answer to reach a
-    driver row since round 4 — it shipped through a green local sweep
-    because the old comparator normalized ``v == 0 → 0.0``). Any oracle
-    that rounds a possibly-tiny-negative float (slopes, drifts,
-    correlations, diffs) is exposed; the fix is ``+ 0.0`` after the
-    round on BOTH engines. This executes every oracle at the oracle SF
-    and rejects any ``-0.0`` cell."""
+def test_oracle_outputs_survive_pandas_and_have_no_negative_zero():
+    """Executes every oracle once at the oracle SF and applies two
+    checks to its rows, each with its own offender map:
+
+    - *pandas round trip*: the values (not just the types) survive the
+      driver's DuckDB→pandas conversion. An out-of-range timestamp
+      (pandas ns ceiling 2262-04-11) fails here locally instead of
+      burning a driver window slot. An oracle that fails to execute is
+      reported here too.
+    - *no negative zero*: IEEE signed zero is engine-unstable. DuckDB's
+      ``round()`` preserves ``-0.0`` where Spark's ``F.round`` returns
+      ``+0.0``, and the driver's hasher distinguishes the two (round-7
+      red row: ``theil_sen_trend_by_subject``, the only wrong answer to
+      reach a driver row since round 4 — it shipped through a green
+      local sweep because the old comparator normalized ``v == 0 →
+      0.0``). Any oracle that rounds a possibly-tiny-negative float
+      (slopes, drifts, correlations, diffs) is exposed; the fix is
+      ``+ 0.0`` after the round on BOTH engines."""
     from tests.conftest import SF_ORACLE
     from tests.oracle import duckdb_conn
 
     conn = duckdb_conn(SF_ORACLE)
-    offenders = {}
+    unconvertible, negative_zero = {}, {}
     for name, sql in q.oracle_sql().items():
-        res = conn.execute(sql)
-        cols = [d[0] for d in res.description]
-        if bad := _negative_zero_cells(cols, res.fetchall()):
-            offenders[name] = bad
+        try:
+            res = conn.execute(sql)
+            cols = [d[0] for d in res.description]
+            rows = res.fetchall()
+            _pandas_datetime_roundtrip(cols, rows)
+        except Exception as exc:  # noqa: BLE001 — any conversion failure is a finding
+            unconvertible[name] = f"{type(exc).__name__}: {exc}"
+            continue
+        if bad := _negative_zero_cells(cols, rows):
+            negative_zero[name] = bad
     conn.close()
-    assert not offenders, (
+    assert not unconvertible, (
+        f"oracles with pandas-unconvertible values: {unconvertible}"
+    )
+    assert not negative_zero, (
         f"oracles emitting -0.0 cells (add `+ 0.0` after the round on both "
-        f"engines): {offenders}"
+        f"engines): {negative_zero}"
     )
 
 
@@ -366,6 +361,56 @@ def test_no_cache_or_persist_in_engine_source():
             if a.string == "." and b.string in ("cache", "persist") and c.string == "("
         ]
     assert not offenders, f".cache()/.persist( calls found: {offenders}"
+
+
+# Hand-written zero-filled grids that do not fit ``_zero_filled``'s shape
+# (the grid is ``c``'s own distinct keys × its min..max bucket span).
+HAND_ZERO_FILL = {
+    "q_friedman_test_hour_blocks": "grid is days × spark.range(4) blocks",
+    "q_page_trend_test_hour_blocks": "grid is days × spark.range(4) blocks",
+    "q_bandit_egreedy_daily_replay": "key domain is the broadcast arms table",
+    "q_weekday_weekend_lift_by_type": "counts span days, fills nothing",
+    "q_cronbach_alpha_hour_types": "broadcast-hinted grid; the builder's "
+    "plan carries no hint",
+}
+
+
+def test_zero_filled_series_go_through_the_builder():
+    """A zero-filled bucket series in queries.py is built by
+    ``_zero_filled``: its ``F.sequence(F.col("_lo"), F.col("_hi"))``
+    span explode appears nowhere else but in the ``HAND_ZERO_FILL``
+    functions, each listed with the reason it stays hand-written."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(q.__file__)
+    src = path.read_text()
+    lines = src.splitlines()
+    funcs = [
+        n
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+    def enclosing(lineno):
+        inside = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
+        return max(inside, key=lambda f: f.lineno).name if inside else None
+
+    hits = [
+        (i + 1, enclosing(i + 1))
+        for i, line in enumerate(lines)
+        if 'F.sequence(F.col("_lo"), F.col("_hi"))' in line
+    ]
+    offenders = [
+        f"queries.py:{ln} {fn}"
+        for ln, fn in hits
+        if fn != "_zero_filled" and fn not in HAND_ZERO_FILL
+    ]
+    assert not offenders, (
+        f"hand-copied zero-fill scaffolds (use _zero_filled): {offenders}"
+    )
+    stale = sorted(set(HAND_ZERO_FILL) - {fn for _, fn in hits})
+    assert not stale, f"HAND_ZERO_FILL lists functions with no scaffold: {stale}"
 
 
 def test_no_unreferenced_definitions_in_engine_source():
