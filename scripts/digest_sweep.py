@@ -22,9 +22,13 @@ For every registered query, at sf0.01, records:
 A refactor that should not change any query re-runs the sweep and
 compares it with the committed manifest:
 
-    python scripts/digest_sweep.py                    # rewrite the manifest
-    python scripts/digest_sweep.py --check            # sweep, diff, exit 1 on any diff
-    python scripts/digest_sweep.py --check --names a,b  # only those queries
+    python scripts/digest_sweep.py           # rewrite the manifest
+    python scripts/digest_sweep.py --check   # sweep, diff, exit 1 on any diff
+
+``--check`` always sweeps every registered query and writes its own run
+to ``/tmp/digest_sweep_check.json``; it rebuilds each query whose plan
+hash mismatches up to 8 more times (``settle_plans``) before counting it
+as changed.
 
 Spark only (no DuckDB), one session, ``SPARK_GRAFT_CPUS`` cores. Plan
 hashes compare only at the manifest's ``default_parallelism`` (the
@@ -48,9 +52,11 @@ sys.path.insert(0, REPO)
 from pyspark.sql import DataFrame  # noqa: E402
 
 from scripts.parity_sweep import _data_fingerprint, _tree_provenance  # noqa: E402
+from tests.conftest import SF_ORACLE  # noqa: E402
 from tests.oracle import _norm_rows  # noqa: E402
 
 MANIFEST = os.path.join(REPO, "DIGESTS_SF001.json")
+CHECK_OUT = os.path.join("/tmp", "digest_sweep_check.json")
 PARTITIONS = (8, 200)
 
 _PLAN_NOISE = (
@@ -112,10 +118,12 @@ def digest_query(spark, sf_dir: str, fn) -> dict:
     return rec
 
 
-def sweep(spark, sf_dir: str, names) -> dict[str, dict]:
+def sweep(spark, sf_dir: str) -> dict[str, dict]:
+    """Digest every registered query, in name order."""
     from eventstreamml_spark import queries as q
 
     reg = q.queries()
+    names = sorted(reg)
     out: dict[str, dict] = {}
     for i, name in enumerate(names, 1):
         t0 = time.perf_counter()
@@ -176,9 +184,6 @@ def diff(base: dict[str, dict], new: dict[str, dict]) -> list[str]:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=None, help=f"default: {MANIFEST}")
-    ap.add_argument("--names", default="", help="comma list (default: all)")
     ap.add_argument(
         "--check",
         action="store_true",
@@ -186,24 +191,20 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from eventstreamml_spark import queries as q
     from eventstreamml_spark.session import get_spark
 
-    names = sorted(q.queries())
-    if args.names:
-        names = [n for n in args.names.split(",") if n]
     sha, tree, dirty = _tree_provenance()
     spark = get_spark("digest-sweep", shuffle_partitions=PARTITIONS[0])
     parallelism = spark.sparkContext.defaultParallelism
     t0 = time.perf_counter()
-    results = sweep(spark, args.sf_dir, names)
+    results = sweep(spark, SF_ORACLE)
     if args.check:
         with open(MANIFEST) as f:
             base = json.load(f)
-        settle_plans(spark, args.sf_dir, base["results"], results)
+        settle_plans(spark, SF_ORACLE, base["results"], results)
     spark.stop()
     artifact = {
-        "sf_dir": args.sf_dir,
+        "sf_dir": SF_ORACLE,
         "commit": sha,
         "verified_tree": tree,
         "working_tree_dirty": dirty,
@@ -218,12 +219,10 @@ def main() -> int:
         ),
         "n_plan_unstable": sum(bool(r.get("plan_unstable")) for r in results.values()),
         "sweep_s": round(time.perf_counter() - t0, 1),
-        "data_md5": _data_fingerprint(args.sf_dir),
+        "data_md5": _data_fingerprint(SF_ORACLE),
         "results": results,
     }
-    out = args.out or (
-        os.path.join("/tmp", "digest_sweep_check.json") if args.check else MANIFEST
-    )
+    out = CHECK_OUT if args.check else MANIFEST
     with open(out, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=True)
         f.write("\n")

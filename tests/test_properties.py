@@ -438,8 +438,15 @@ def test_cohens_kappa_matches_reference(spark, pairs):
     """Kappa equals the direct p_o/p_e formula over marginals of
     classes seen in either role; bounded above by 1."""
     from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
 
     from eventstreamml_spark.operators.evalmetrics import cohens_kappa
+
+    def round6(x):
+        # Spark's F.round rounds the double's shortest decimal form half
+        # up; Python's round() rounds its binary value half to even, so
+        # at a 7th-digit tie (0.4765625) the two land 1e-6 apart.
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
 
     df = spark.createDataFrame(
         [(str(a), str(b)) for a, b in pairs], "label string, pred string"
@@ -453,11 +460,11 @@ def test_cohens_kappa_matches_reference(spark, pairs):
         rows_.get(k, 0) * cols_.get(k, 0)
         for k in set(rows_) | set(cols_)
     ) / (n * n)
-    assert abs(row["p_observed"] - round(po, 6)) <= 1e-6
-    assert abs(row["p_expected"] - round(pe, 6)) <= 1e-6
+    assert abs(row["p_observed"] - round6(po)) <= 1e-6
+    assert abs(row["p_expected"] - round6(pe)) <= 1e-6
     if abs(1 - pe) > 1e-12:
         kap = (po - pe) / (1 - pe)
-        assert abs(row["kappa"] - round(kap, 6)) <= 1e-6
+        assert abs(row["kappa"] - round6(kap)) <= 1e-6
         assert row["kappa"] <= 1.0 + 1e-9
     else:
         assert row["kappa"] is None
