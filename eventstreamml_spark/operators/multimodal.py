@@ -377,9 +377,10 @@ def image_phash_dct(
 
     Distributed shape: ZERO shuffles — pixels, coefficients, and bit
     packing are three chained per-row projections. The coefficient
-    stage is generated SQL text — 16 loop-sized integer folds over a
-    single pixel-array column (the inline 16x64 term form blew
-    janino's 64KB method limit and ran interpreted; the join-fan-out
+    stage is generated SQL text — 15 loop-sized integer folds over a
+    single pixel-array column, plus the DC term from the pixel sum
+    (the inline 16x64 term form blew janino's 64KB method limit and
+    ran interpreted; the join-fan-out
     alternative shuffles size²·n_freq² rows per asset through a
     group-by, measured 6.1s at sf0.1). Building the tree through the
     Python Column API would cost a py4j round trip per node (the
@@ -393,14 +394,24 @@ def image_phash_dct(
     # earlier 16x64 inline term projection blew janino's 64KB method
     # limit and silently ran interpreted (the kmeans_elbow lesson);
     # integer sums are order-free, so the fold is value-identical.
-    px_cells = ", ".join(
+    px_cells = [
         f"CAST(conv(substring(md5(concat(CAST(`{id_col}` AS STRING),"
         f" '-{i}-{j}')), 1, 2), 16, 10) AS BIGINT) % 256"
         for i in range(size)
         for j in range(size)
-    )
-    px_exprs = [f"`{id_col}`", f"array({px_cells}) AS _px"]
-    coeff_exprs = [f"`{id_col}`"] + [
+    ]
+    # The pixel sum _s gives every pixel a second use in the same
+    # projection, so whole-stage codegen computes each one once in its
+    # own subexpression method; the array alone inlined all 64 md5
+    # pipelines into one 17,800-byte method, over the JIT limit. _s is
+    # also the DC coefficient: the u = 0 basis row is a constant
+    # (cos 0), so c_0_0 = w00² · Σ pixels.
+    px_exprs = [
+        f"`{id_col}`",
+        f"array({', '.join(px_cells)}) AS _px",
+        f"{' + '.join(px_cells)} AS _s",
+    ]
+    coeff_exprs = [f"`{id_col}`", f"_s * {w[(0, 0)] ** 2} AS _c_0_0"] + [
         (
             "aggregate(zip_with(_px, array({}), (x, y) -> x * y),"
             " cast(0 as bigint), (a, z) -> a + z) AS _c_{}_{}".format(
@@ -415,6 +426,7 @@ def image_phash_dct(
         )
         for u in range(n_freq)
         for v in range(n_freq)
+        if (u, v) != (0, 0)
     ]
     ac_bits = " + ".join(
         f"(CASE WHEN _c_{u}_{v} > 0 THEN CAST({1 << (u * n_freq + v - 1)}"

@@ -7,13 +7,12 @@ rotting" (null-rate drift, cardinality collapse, range excursions) and
 expressed as ordinary aggregations so they ride the same scan the
 pipeline already pays for.
 
-Scale notes: ``profile_table`` is ONE aggregation over the candidate
-columns; the exact distinct counts use Spark's multi-distinct rewrite
-(an Expand of #cols×rows before the shuffle) — fine for profiling
-passes; swap ``exact_distinct=False`` for HyperLogLog sketches
-(``approx_count_distinct``) when cardinality estimates suffice, which
-drops the Expand entirely. ``orphaned_keys`` is one left-anti join on
-the key.
+Scale notes: ``profile_table`` unpivots the candidate columns into
+(column, value) cells, counts each distinct cell in one grouped
+aggregation and folds those counts into one row per column: one scan,
+#cols×rows cells before the first shuffle, the same volume as Spark's
+multi-distinct ``Expand`` but without it. ``orphaned_keys`` is one
+left-anti join on the key.
 """
 
 from __future__ import annotations
@@ -21,34 +20,62 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def profile_table(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    exact_distinct: bool = True,
-) -> DataFrame:
+def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Per-column profile: (col_name, n_rows, n_nonnull, null_rate,
     n_distinct, min_num, max_num).
 
     ``min_num``/``max_num`` are over ``try_cast(col AS DOUBLE)`` so the
     profile has one uniform schema across column types (non-numeric
     columns profile as null min/max, numeric strings still profile).
+
+    Distinct values are counted as distinct (column, value-as-string)
+    cells, not with one ``count_distinct`` per column: several distinct
+    aggregates in one ``agg`` make Catalyst add an ``Expand`` whose group
+    order follows expression-id hashes, so each build of the same
+    profile generated different code and missed the codegen cache.
     """
     columns = columns or df.columns
-    ndv = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact_distinct
-        else (lambda c: F.approx_count_distinct(F.col(c)))
+    types = dict(df.dtypes)
+
+    def key(c: str):
+        v = F.col(c)
+        if types[c] in ("float", "double"):
+            v = v + 0.0  # -0.0 and 0.0 are one value, as in count(DISTINCT)
+        return v.cast("string")
+
+    cells = df.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("i"),
+                        key(c).alias("v"),
+                        F.col(c).try_cast("double").alias("x"),
+                    )
+                    for i, c in enumerate(columns)
+                ]
+            )
+        ).alias("_c")
+    ).select("_c.*")
+    values = cells.groupBy("i", "v").agg(
+        F.count(F.lit(1)).alias("_cnt"), F.min("x").alias("_min"), F.max("x").alias("_max")
     )
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    for c in columns:
-        num = F.col(c).try_cast("double")
+
+    def of(i: int, col):
+        return F.when(F.col("i") == i, col)
+
+    # a global aggregate: one row even on an empty table
+    aggs = [F.coalesce(F.sum(of(0, F.col("_cnt"))), F.lit(0)).alias("_n")]
+    for i, c in enumerate(columns):
         aggs += [
-            F.count(F.col(c)).alias(f"{c}__nn"),
-            ndv(c).alias(f"{c}__ndv"),
-            F.min(num).alias(f"{c}__min"),
-            F.max(num).alias(f"{c}__max"),
+            F.coalesce(
+                F.sum(of(i, F.when(F.col("v").isNotNull(), F.col("_cnt")))), F.lit(0)
+            ).alias(f"{c}__nn"),
+            F.count(of(i, F.col("v"))).alias(f"{c}__ndv"),
+            F.min(of(i, F.col("_min"))).alias(f"{c}__min"),
+            F.max(of(i, F.col("_max"))).alias(f"{c}__max"),
         ]
-    wide = df.agg(*aggs)
+    wide = values.agg(*aggs)
     per_col = F.array(
         *[
             F.struct(

@@ -115,3 +115,15 @@ def max_generated_method_bytes(df: DataFrame) -> int:
     return max(
         (stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())), default=0
     )
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """Generated classes Janino has compiled in this JVM so far, and the
+    milliseconds those compiles took: ``CodegenMetrics``'s compilation
+    histogram count and ``CodeGenerator.compileTime``, both cumulative
+    and never reset. Diff two readings around a span to see its compile
+    layer. A class served from the codegen cache counts in neither."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6

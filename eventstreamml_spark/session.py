@@ -24,6 +24,21 @@ RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
 }
 
+# Entries of Spark's compiled-class cache (the static conf
+# spark.sql.codegen.cache.maxEntries, an LRU). An entry is one class
+# Janino compiled from generated source, keyed by that exact source: a
+# hit reuses compiled code, never data or a result. The entry count
+# grows with the distinct plan shapes a session runs, never with data
+# volume. Spark's default of 100 is below one pass of either benchmark
+# workload (registry_fixed_cost: 169 classes, esds_pipeline: 220-253 by
+# seed), so a repeated pass evicted each class before it came round
+# again and recompiled all of them. 1024 holds the larger pass four
+# times over, or both workloads' passes in one session.
+# A cached class costs about 8 KB of metaspace and 33 KB of heap (the
+# whole registry in one session, 5762 distinct classes, retained vs
+# evicted), so a full cache costs about 40 MB.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 import weakref
 
@@ -115,6 +130,7 @@ def get_spark(
         # code). 1min keeps long-lived sessions flat; single-query jobs
         # never notice it.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
