@@ -166,24 +166,21 @@ def bootstrap_mean_ci(
     )
 
 
-def chi_square_independence(
-    df: DataFrame, a_col: str, b_col: str
-) -> DataFrame:
-    """Pearson chi-square test of independence between two categorical
-    columns: χ² = Σ (O−E)²/E over the contingency table, E = (row
-    total · column total)/N, dof = (|A|−1)(|B|−1).
+def _contingency_chi2(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """One row ``(_chi2, _r, _k, _n)``: the unrounded Pearson χ² of the
+    ``a_col`` × ``b_col`` contingency table, its level counts and N.
 
     One groupBy over the data builds the |A|·|B| contingency relation;
     the marginals come from window sums OVER THAT TINY RELATION (not
-    the raw data), so the raw table is read exactly once. Output is a
-    single row (chi2, dof, n) — the p-value lookup is a client-side
-    table concern, the cluster's job is the statistic.
-
-    Cells with zero observations never appear in the groupBy output,
-    but each contributes (0−E)²/E = E to χ²; since ΣE over the FULL
-    r×c grid is exactly N, the missing-cell mass is N − ΣE(observed)
-    — added as a closed-form correction, no dense grid materialized.
-    """
+    the raw data), so the raw table is read exactly once. Cells with
+    zero observations never appear in the groupBy output, but each
+    contributes (0−E)²/E = E to χ²; since ΣE over the FULL r×c grid is
+    exactly N, the missing-cell mass is N − ΣE(observed) — added as a
+    closed-form correction, no dense grid materialized. The level
+    counts are ``size(collect_set)`` over that relation: two
+    ``count_distinct``s in one aggregate would plan an ``Expand``
+    whose group order follows expression-id hashes, so the plan would
+    change from build to build."""
     from pyspark.sql import Window as W
 
     obs = df.groupBy(
@@ -201,14 +198,26 @@ def chi_square_independence(
         e.alias("_e"),
     )
     return cells.groupBy().agg(
-        F.round(
-            F.sum("_c") + (F.sum("_o") - F.sum("_e")), 6
-        ).alias("chi2"),
-        (
-            (F.count_distinct(F.col("_a")) - 1)
-            * (F.count_distinct(F.col("_b")) - 1)
-        ).alias("dof"),
-        F.sum("_o").cast("long").alias("n"),
+        (F.sum("_c") + (F.sum("_o") - F.sum("_e"))).alias("_chi2"),
+        F.size(F.collect_set("_a")).cast("long").alias("_r"),
+        F.size(F.collect_set("_b")).cast("long").alias("_k"),
+        F.sum("_o").alias("_n"),
+    )
+
+
+def chi_square_independence(
+    df: DataFrame, a_col: str, b_col: str
+) -> DataFrame:
+    """Pearson chi-square test of independence between two categorical
+    columns: χ² = Σ (O−E)²/E over the contingency table, E = (row
+    total · column total)/N, dof = (|A|−1)(|B|−1), from the single-scan
+    plan of ``_contingency_chi2``. Output is a single row (chi2, dof,
+    n) — the p-value lookup is a client-side table concern, the
+    cluster's job is the statistic."""
+    return _contingency_chi2(df, a_col, b_col).select(
+        F.round(F.col("_chi2"), 6).alias("chi2"),
+        ((F.col("_r") - 1) * (F.col("_k") - 1)).alias("dof"),
+        F.col("_n").cast("long").alias("n"),
     )
 
 
@@ -607,7 +616,8 @@ def mann_whitney_u(
         j.crossJoin(F.broadcast(arms))
         .groupBy()
         .agg(
-            F.max("n_arms").alias("n_arms"),
+            # an empty j (no non-NULL value) still has 0 arms
+            F.coalesce(F.max("n_arms"), F.lit(0)).alias("n_arms"),
             F.sum(F.when(F.col("_g") == F.col("_ga"), F.col("_t_vg"))).alias(
                 "_n0"
             ),
@@ -1549,33 +1559,10 @@ def cramers_v(df: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Cramér's V association strength between two categoricals:
     V = √(χ² / (N · (min(r,c) − 1))), the bounded-[0,1] effect size
     the chi-square statistic alone doesn't give. Same single-scan
-    contingency plan as chi_square_independence, including its
-    zero-cell correction (each unobserved cell contributes E to χ²
-    and ΣE over the full grid is N, so the missing mass is
-    N − ΣE(observed)); a single-level factor on either side NULLs V
-    (0/0) via try_divide."""
-    from pyspark.sql import Window as W
-
-    obs = df.groupBy(
-        F.col(a_col).alias("_a"), F.col(b_col).alias("_b")
-    ).agg(F.count(F.lit(1)).cast("double").alias("_o"))
-    row_t = F.sum("_o").over(W.partitionBy("_a"))
-    col_t = F.sum("_o").over(W.partitionBy("_b"))
-    n_t = F.sum("_o").over(W.partitionBy())
-    e = row_t * col_t / n_t
-    cells = obs.select(
-        "_a",
-        "_b",
-        "_o",
-        ((F.col("_o") - e) ** 2 / e).alias("_c"),
-        e.alias("_e"),
-    )
-    agg = cells.groupBy().agg(
-        (F.sum("_c") + (F.sum("_o") - F.sum("_e"))).alias("_chi2"),
-        F.count_distinct(F.col("_a")).alias("_r"),
-        F.count_distinct(F.col("_b")).alias("_k"),
-        F.sum("_o").alias("_n"),
-    )
+    contingency plan as chi_square_independence (``_contingency_chi2``);
+    a single-level factor on either side NULLs V (0/0) via
+    try_divide."""
+    agg = _contingency_chi2(df, a_col, b_col)
     mindim = F.least(F.col("_r"), F.col("_k")) - 1
     return agg.select(
         F.round(F.col("_chi2"), 6).alias("chi2"),
@@ -1979,10 +1966,14 @@ def wilcoxon_signed_rank(
         rk.groupBy("_ad")
         .agg(F.count(F.lit(1)).cast("long").alias("_t"))
         .agg(
-            F.sum(
-                F.col("_t").cast("decimal(38,0)") * F.col("_t")
-                * F.col("_t")
-                - F.col("_t")
+            # no non-zero pair has no tie group: 0, not NULL
+            F.coalesce(
+                F.sum(
+                    F.col("_t").cast("decimal(38,0)") * F.col("_t")
+                    * F.col("_t")
+                    - F.col("_t")
+                ),
+                F.lit(0),
             ).cast("decimal(38,0)").alias("tie3")
         )
     )

@@ -15,9 +15,8 @@ For every registered query, at sf0.01, records:
   Normalization strips expression ids (``#12L``), the ``_common_expr_N``
   and ``_gen_alias_N`` numbering, the lambda-variable numbering
   (``lambda x_1#`` vs ``lambda x_4#``) and the per-session hash in
-  bucketed table names. Each query is built a second time
-  and a query whose plan hash still differs between the two builds is
-  marked ``plan_unstable``: its plan hash says nothing.
+  bucketed table names. Every plan is stable between builds, so a
+  plan that changes from one build to the next shows up as a diff.
 
 A refactor that should not change any query re-runs the sweep and
 compares it with the committed manifest:
@@ -26,9 +25,7 @@ compares it with the committed manifest:
     python scripts/digest_sweep.py --check   # sweep, diff, exit 1 on any diff
 
 ``--check`` always sweeps every registered query and writes its own run
-to ``/tmp/digest_sweep_check.json``; it rebuilds each query whose plan
-hash mismatches up to 8 more times (``settle_plans``) before counting it
-as changed.
+to ``/tmp/digest_sweep_check.json``.
 
 Spark only (no DuckDB), one session, ``SPARK_GRAFT_CPUS`` cores. Plan
 hashes compare only at the manifest's ``default_parallelism`` (the
@@ -112,9 +109,6 @@ def digest_query(spark, sf_dir: str, fn) -> dict:
             rec["plan"] = plan
         rec["rows"], rec["columns"], rec[f"digest_p{n}"] = rows_digest(df)
     spark.conf.set("spark.sql.shuffle.partitions", str(PARTITIONS[0]))
-    _, again = build_with_plan(fn, spark, sf_dir)
-    if again != rec["plan"]:
-        rec["plan_unstable"] = True
     return rec
 
 
@@ -143,40 +137,15 @@ def sweep(spark, sf_dir: str) -> dict[str, dict]:
     return out
 
 
-def settle_plans(spark, sf_dir: str, base: dict[str, dict], results, tries=8):
-    """Some plans are not stable between builds (Catalyst orders the
-    ``Expand`` groups of its distinct-aggregate rewrite by expression-id
-    hashes), and two builds need not show it. A query whose plan hash
-    differs from ``base`` is rebuilt up to ``tries`` times: if a build
-    reaches the base hash, its plan did not change and it is marked
-    ``plan_unstable``; a changed plan never reaches it."""
-    from eventstreamml_spark import queries as q
-
-    reg = q.queries()
-    for name, rec in results.items():
-        want = base.get(name, {}).get("plan")
-        if "plan" not in rec or rec["plan"] == want or rec.get("plan_unstable"):
-            continue
-        spark.conf.set("spark.sql.shuffle.partitions", str(PARTITIONS[0]))
-        for _ in range(tries):
-            if build_with_plan(reg[name], spark, sf_dir)[1] == want:
-                rec["plan_unstable"] = True
-                break
-
-
 def diff(base: dict[str, dict], new: dict[str, dict]) -> list[str]:
-    """Human-readable differences of ``new`` against ``base``; the plan
-    hash of a query unstable on either side is not compared."""
+    """Human-readable differences of ``new`` against ``base``."""
     lines = []
     for name in sorted(new):
         a, b = base.get(name), new[name]
         if a is None:
             lines.append(f"{name}: not in the base manifest")
             continue
-        skip = {"plan_unstable"}
-        if a.get("plan_unstable") or b.get("plan_unstable"):
-            skip.add("plan")
-        for key in sorted((set(a) | set(b)) - skip):
+        for key in sorted(set(a) | set(b)):
             if a.get(key) != b.get(key):
                 lines.append(f"{name}.{key}: {a.get(key)!r} -> {b.get(key)!r}")
     return lines
@@ -198,10 +167,6 @@ def main() -> int:
     parallelism = spark.sparkContext.defaultParallelism
     t0 = time.perf_counter()
     results = sweep(spark, SF_ORACLE)
-    if args.check:
-        with open(MANIFEST) as f:
-            base = json.load(f)
-        settle_plans(spark, SF_ORACLE, base["results"], results)
     spark.stop()
     artifact = {
         "sf_dir": SF_ORACLE,
@@ -217,7 +182,6 @@ def main() -> int:
             for r in results.values()
             if "error" not in r
         ),
-        "n_plan_unstable": sum(bool(r.get("plan_unstable")) for r in results.values()),
         "sweep_s": round(time.perf_counter() - t0, 1),
         "data_md5": _data_fingerprint(SF_ORACLE),
         "results": results,
@@ -228,11 +192,12 @@ def main() -> int:
         f.write("\n")
     print(
         f"digest sweep: {len(results)} queries, {artifact['n_error']} errors, "
-        f"{artifact['n_partition_dependent']} partition-dependent, "
-        f"{artifact['n_plan_unstable']} plan-unstable -> {out}"
+        f"{artifact['n_partition_dependent']} partition-dependent -> {out}"
     )
     if not args.check:
         return 0
+    with open(MANIFEST) as f:
+        base = json.load(f)
     for key in ("data_md5", "default_parallelism"):
         if base[key] != artifact[key]:
             # spark.range splits default to the core count and print in

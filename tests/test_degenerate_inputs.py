@@ -11,6 +11,10 @@ sits on its edge. That is where the engines part: DuckDB's x/0 is NULL
 while ANSI Spark raises DIVIDE_BY_ZERO (fix: ``try_divide``), and a
 double-rounded centred sum just below 0 makes DuckDB's sqrt raise
 while Spark's gives NaN (fix: clamp at 0 on both sides).
+
+The same events with every ``value`` NULL are replayed through the
+value-histogram two-sample tests and the rank tests, where an empty
+histogram must still give DuckDB's one row and its zero counts.
 """
 
 from __future__ import annotations
@@ -71,6 +75,45 @@ def test_constant_value_cases_include_the_dispersion_divisors():
 @pytest.mark.parametrize("name", CONSTANT_VALUE_CASES)
 def test_constant_value_matches_oracle(spark, constant_value_dir, name):
     compare(spark, constant_value_dir, q.queries()[name], q.oracle_sql()[name])
+
+
+# Every query built on ``_arm_value_hist``/``_arm_values`` plus the
+# three that disagreed with DuckDB on all-NULL values (0 rows vs 1 all-NULL
+# row; NULL vs 0 counts).
+ALL_NULL_VALUE_CASES = [
+    "ansari_bradley_scale_arms",
+    "anderson_darling_value_arms",
+    "cliffs_delta_value_arms",
+    "conover_squared_ranks_arms",
+    "cramer_von_mises_value_arms",
+    "cucconi_test_arms",
+    "distribution_distance_arms",
+    "energy_distance_arms",
+    "fligner_policello_arms",
+    "lepage_test_arms",
+    "mood_scale_rank_test_arms",
+    "mw_u_test_value_by_arm",
+    "value_qq_octiles_arms",
+    "wilcoxon_signed_rank_halves",
+]
+
+
+@pytest.fixture(scope="module")
+def all_null_value_dir(tmp_path_factory):
+    t = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    t = t.set_column(
+        t.schema.get_field_index("value"),
+        "value",
+        pa.nulls(t.num_rows, pa.float64()),
+    )
+    d = tmp_path_factory.mktemp("all_null_value")
+    pq.write_table(t, d / "events.parquet")
+    return str(d)
+
+
+@pytest.mark.parametrize("name", ALL_NULL_VALUE_CASES)
+def test_all_null_value_matches_oracle(spark, all_null_value_dir, name):
+    compare(spark, all_null_value_dir, q.queries()[name], q.oracle_sql()[name])
 
 
 @pytest.fixture(scope="module")

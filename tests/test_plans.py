@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from eventstreamml_spark.plans.inspect import (
@@ -541,3 +542,22 @@ def test_keyed_numeric_transform_joins_state_once(spark):
     counts = node_counts(model.transform(df))
     assert counts["BroadcastHashJoin"] == 1, counts
     assert not [n for n in counts if "Join" in n and n != "BroadcastHashJoin"], counts
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "chi_square_type_segment",
+        "cramers_v_type_segment",
+        "dq_profile_events",
+        "tpch_q21_waiting_supplier",
+    ],
+)
+def test_distinct_counts_plan_no_expand(spark, name):
+    """Several distinct aggregates in one ``agg`` plan an ``Expand``
+    whose group order follows expression-id hashes, so the plan changes
+    from build to build and no plan hash can guard it. These queries
+    count levels without one."""
+    from eventstreamml_spark import queries as q
+
+    assert node_counts(q.queries()[name](spark, SF))["Expand"] == 0

@@ -11,6 +11,8 @@ may return arrays; everything with an oracle must emit scalar cells.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql.types import ArrayType, MapType
 
@@ -192,7 +194,6 @@ def test_every_registry_name_appears_in_survey_2_8c():
     registry name must appear in the §2.8c registry block specifically,
     and the §2.8c header counts must equal the registry's."""
     import pathlib
-    import re
 
     survey = (
         pathlib.Path(__file__).resolve().parents[1] / "SURVEY.md"
@@ -280,7 +281,6 @@ def test_every_new_registry_name_has_a_survey_row_outside_2_8c():
     SURVEY §2 OTHER than the §2.8c list — i.e. a §2.8b row or a core
     table row."""
     import pathlib
-    import re
 
     survey = (
         pathlib.Path(__file__).resolve().parents[1] / "SURVEY.md"
@@ -372,45 +372,66 @@ HAND_ZERO_FILL = {
     "q_weekday_weekend_lift_by_type": "counts span days, fills nothing",
     "q_cronbach_alpha_hour_types": "broadcast-hinted grid; the builder's "
     "plan carries no hint",
+    "q_cross_correlation_click_purchase": "one grid spans every event's "
+    "hour and is shared by two count series, neither of which sets it",
+    "q_hourly_seasonal_naive_mae": "grid starts 168 buckets after the "
+    "first and is joined to the counts twice, once shifted by a season",
+}
+
+# One entry per shared query substrate in queries.py: the builder that
+# owns it, a pattern for its hand-written form, and the functions
+# allowed to keep a hand-written copy, each with its reason. The
+# pattern is matched against each top-level function's source with
+# whitespace runs collapsed to one space.
+SUBSTRATES = {
+    "_zero_filled": (r"F\.sequence\(F\.col\(", HAND_ZERO_FILL),
+    "_arm_values": (
+        r'"user_id % 2 AS arm", "CAST\(floor\(value \* 1000\) AS BIGINT\) AS vm"',
+        {},
+    ),
+    "_hash_graph_edges": (r'F\.col\("user_id"\) % 997|"user_id % 997', {}),
+    "_scored_events": (
+        r'F\.md5\(F\.col\("event_id"\)\.cast\("string"\)\), 1, 4\), 16, 10\)',
+        {},
+    ),
+    "_h4": (r"F\.md5\(F\.concat\(F\.lit\(salt\)", {}),
+    "_word_counts": (
+        r'F\.explode\(F\.split\(F\.lower\(F\.col\("text"\)\), " "\)\)',
+        {},
+    ),
+    "_sessions": (r'alias\("is_start"\)', {}),
 }
 
 
-def test_zero_filled_series_go_through_the_builder():
-    """A zero-filled bucket series in queries.py is built by
-    ``_zero_filled``: its ``F.sequence(F.col("_lo"), F.col("_hi"))``
-    span explode appears nowhere else but in the ``HAND_ZERO_FILL``
-    functions, each listed with the reason it stays hand-written."""
+@pytest.fixture(scope="module")
+def queries_functions():
+    """``{name: source}`` of every top-level function in queries.py,
+    whitespace runs collapsed to one space."""
     import ast
     import pathlib
 
-    path = pathlib.Path(q.__file__)
-    src = path.read_text()
+    src = pathlib.Path(q.__file__).read_text()
     lines = src.splitlines()
-    funcs = [
-        n
-        for n in ast.walk(ast.parse(src))
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-    ]
+    return {
+        n.name: re.sub(r"\s+", " ", "\n".join(lines[n.lineno - 1 : n.end_lineno]))
+        for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef)
+    }
 
-    def enclosing(lineno):
-        inside = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
-        return max(inside, key=lambda f: f.lineno).name if inside else None
 
-    hits = [
-        (i + 1, enclosing(i + 1))
-        for i, line in enumerate(lines)
-        if 'F.sequence(F.col("_lo"), F.col("_hi"))' in line
-    ]
-    offenders = [
-        f"queries.py:{ln} {fn}"
-        for ln, fn in hits
-        if fn != "_zero_filled" and fn not in HAND_ZERO_FILL
-    ]
-    assert not offenders, (
-        f"hand-copied zero-fill scaffolds (use _zero_filled): {offenders}"
-    )
-    stale = sorted(set(HAND_ZERO_FILL) - {fn for _, fn in hits})
-    assert not stale, f"HAND_ZERO_FILL lists functions with no scaffold: {stale}"
+@pytest.mark.parametrize("builder", sorted(SUBSTRATES))
+def test_shared_substrate_goes_through_its_builder(queries_functions, builder):
+    """A shared substrate is built by its builder: its hand-written
+    form appears in no other function of queries.py but the ones the
+    builder's allow-list names, each with the reason it stays
+    hand-written."""
+    pattern, allowed = SUBSTRATES[builder]
+    hits = {fn for fn, body in queries_functions.items() if re.search(pattern, body)}
+    offenders = sorted(hits - {builder} - set(allowed))
+    assert not offenders, f"hand-copied {builder} substrates: {offenders}"
+    assert builder in hits, f"{builder}'s pattern no longer matches the builder"
+    stale = sorted(set(allowed) - hits)
+    assert not stale, f"{builder}'s allow-list names functions with no copy: {stale}"
 
 
 def test_no_unreferenced_definitions_in_engine_source():
