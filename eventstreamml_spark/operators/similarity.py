@@ -816,7 +816,6 @@ def pca_top_component(
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
     d = dim if dim is not None else embedding_dim(df, vec_col)
-    spark = df.sparkSession
 
     # NULL vectors would crash np.stack in the Gram stage and inflate
     # the n-1 divisor — drop them up front (oracle mirrors IS NOT NULL)

@@ -434,6 +434,65 @@ def test_shared_substrate_goes_through_its_builder(queries_functions, builder):
     assert not stale, f"{builder}'s allow-list names functions with no copy: {stale}"
 
 
+# Oracles that still spell out an ``_*_SQL`` twin's text by hand, each
+# with the reason it stays hand-written.
+HAND_SQL_TWIN = {
+    "_SHINGLE_SQL": {
+        "q_dedup_minhash_jaccard_estimate": "oracle outside the six "
+        "consolidated substrates; its text is kept byte-identical",
+    },
+}
+
+SQL_TWINS = sorted(
+    n
+    for n, v in vars(q).items()
+    if n.startswith("_") and n.endswith("_SQL") and isinstance(v, str)
+)
+
+
+@pytest.fixture(scope="module")
+def queries_literals():
+    """``{name: [literal, ...]}``: the string literals of every
+    top-level function and assigned constant in queries.py,
+    whitespace runs collapsed to one space."""
+    import ast
+    import pathlib
+
+    out = {}
+    for node in ast.parse(pathlib.Path(q.__file__).read_text()).body:
+        if isinstance(node, ast.FunctionDef):
+            label = node.name
+        elif isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+            label = node.targets[0].id
+        else:
+            continue
+        out[label] = [
+            re.sub(r"\s+", " ", c.value)
+            for c in ast.walk(node)
+            if isinstance(c, ast.Constant) and isinstance(c.value, str)
+        ]
+    return out
+
+
+@pytest.mark.parametrize("twin", SQL_TWINS)
+def test_oracles_use_their_sql_twin(queries_literals, twin):
+    """An oracle CTE with an ``_*_SQL`` twin in queries.py is written
+    through the constant: no other string literal (whitespace runs
+    collapsed) spells out the twin's text, except the ones
+    ``HAND_SQL_TWIN`` names with a reason."""
+    text = re.sub(r"\s+", " ", getattr(q, twin)).strip()
+    hits = {
+        label
+        for label, lits in queries_literals.items()
+        if label != twin and any(text in lit for lit in lits)
+    }
+    allowed = HAND_SQL_TWIN.get(twin, {})
+    offenders = sorted(hits - set(allowed))
+    assert not offenders, f"hand-copied {twin} text (use the constant): {offenders}"
+    stale = sorted(set(allowed) - hits)
+    assert not stale, f"HAND_SQL_TWIN[{twin!r}] names definitions with no copy: {stale}"
+
+
 def test_no_unreferenced_definitions_in_engine_source():
     """Every top-level ``def``/``class``/module constant in engine code
     is referenced from code somewhere: the engine, tests, scripts,
