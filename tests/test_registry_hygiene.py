@@ -394,7 +394,11 @@ SUBSTRATES = {
         r'F\.md5\(F\.col\("event_id"\)\.cast\("string"\)\), 1, 4\), 16, 10\)',
         {},
     ),
-    "_h4": (r"F\.md5\(F\.concat\(F\.lit\(salt\)", {}),
+    "_h4": (
+        r'F\.md5\(F\.concat\(F\.lit\([^()]*\), F\.col\("event_id"\)'
+        r'\.cast\("string"\)\)\), 1, 4,',
+        {},
+    ),
     "_word_counts": (
         r'F\.explode\(F\.split\(F\.lower\(F\.col\("text"\)\), " "\)\)',
         {},
