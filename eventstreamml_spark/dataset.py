@@ -40,7 +40,6 @@ from eventstreamml_spark.sources.ingest import (
     _ordered,
     backfill_metadata,
     explode_metadata,
-    nest_metadata,
 )
 
 
@@ -102,25 +101,17 @@ class EventStreamDataset:
         when a subjects relation exists."""
         return events_per_subject(self.events, self.subjects)
 
-    def events_with_metadata(self, nested_col: str = "metadata") -> DataFrame:
-        """J3 denormalized nested view (pure derivation — no manual
-        cache/staleness protocol, SURVEY §4)."""
-        return nest_metadata(self.events, self.metadata, nested_col)
-
     # -- filtered views (P2/P3, event_stream_dataset.py:781-863) -------
     def metadata_view(
         self,
         event_types: list[str] | None = None,
-        subject_ids: list | None = None,
         drop_null_cols: bool = False,
     ) -> DataFrame:
-        """P2: conjunctive event_type/subject membership filter, then
-        optionally drop all-null measurement columns (one agg pass)."""
+        """P2: event_type membership filter, then optionally drop
+        all-null measurement columns (one agg pass)."""
         df = self.metadata
         if event_types is not None:
             df = df.filter(F.col("event_type").isin(event_types))
-        if subject_ids is not None:
-            df = df.filter(F.col("subject_id").isin(subject_ids))
         if drop_null_cols:
             df = drop_all_null_columns(df, keep=MANDATORY_METADATA_COLS)
         return df

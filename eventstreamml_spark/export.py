@@ -256,11 +256,8 @@ def tensorize(
     return out
 
 
-def export_tensorized(df: DataFrame, path: str, n_files: int | None = None) -> None:
-    """Write the export relation for DataLoader consumption. One row
-    group per subject batch; repartition to bound file count/size."""
-    if n_files:
-        df = df.repartition(n_files, "subject_id")
+def export_tensorized(df: DataFrame, path: str) -> None:
+    """Write the export relation for DataLoader consumption."""
     df.write.mode("overwrite").parquet(path)
 
 
@@ -268,7 +265,6 @@ def pad_sequences(
     df: DataFrame,
     max_seq_len: int,
     side: str = "right",
-    time_col: str = "time",
     nested_cols: tuple[str, ...] = (
         "dynamic_indices",
         "dynamic_values",
@@ -289,7 +285,7 @@ def pad_sequences(
     if side not in ("left", "right"):
         raise ValueError(f"side must be left|right, got {side!r}")
     L = F.lit(max_seq_len)
-    n = F.least(F.size(F.col(time_col)), L)
+    n = F.least(F.size(F.col("time")), L)
     pad_n = L - n
 
     def padded(col: str, fill):
@@ -305,7 +301,7 @@ def pad_sequences(
 
     # single withColumns: every expression's length terms must resolve
     # against the ORIGINAL time column, not an already-padded one
-    new_cols = {"event_mask": mask, time_col: padded(time_col, F.lit(0.0))}
+    new_cols = {"event_mask": mask, "time": padded("time", F.lit(0.0))}
     for c in nested_cols:
         if c in df.columns:
             elem_type = df.schema[c].dataType.elementType

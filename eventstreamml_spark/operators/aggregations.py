@@ -49,29 +49,28 @@ def agg_by_time_type(
 def remap_event_ids(
     metadata: DataFrame,
     dedup: DataFrame,
-    id_col: str = "event_id",
 ) -> DataFrame:
     """J7: point metadata at post-dedup event ids via a join-based remap
     (the reference's dict ``replace`` OOM workaround,
     event_stream_dataset.py:687-699, redesigned as a join)."""
     mapping = dedup.select(
-        F.explode("old_event_ids").alias("_old_id"), F.col(id_col).alias("_new_id")
+        F.explode("old_event_ids").alias("_old_id"), F.col("event_id").alias("_new_id")
     )
     return (
-        metadata.withColumnRenamed(id_col, "_old_id")
+        metadata.withColumnRenamed("event_id", "_old_id")
         .join(mapping, "_old_id", "left")
-        .withColumn(id_col, F.col("_new_id"))
+        .withColumn("event_id", F.col("_new_id"))
         .drop("_old_id", "_new_id")
     )
 
 
-def event_type_histogram(df: DataFrame, type_col: str = "event_type") -> DataFrame:
+def event_type_histogram(df: DataFrame) -> DataFrame:
     """A2: event types by descending frequency
     (``Counter.most_common()``, event_stream_dataset.py:658)."""
     return (
-        df.groupBy(type_col)
+        df.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy(F.col("n_events").desc(), F.col(type_col).asc())
+        .orderBy(F.col("n_events").desc(), F.col("event_type").asc())
     )
 
 
@@ -98,7 +97,6 @@ def inter_event_time_stats(
     subject_col: str = "subject_id",
     ts_col: str = "timestamp",
     id_col: str | None = "event_id",
-    unit_seconds: float = 60.0,
     by: list[str] | None = None,
 ) -> DataFrame:
     """A9: stats of log(Δt+1) over per-subject inter-event times.
@@ -112,7 +110,7 @@ def inter_event_time_stats(
     from eventstreamml_spark.operators.windows import with_inter_event_time
 
     with_tte = with_inter_event_time(
-        df, subject_col, ts_col, id_col, unit_seconds=unit_seconds, out_col="_tte"
+        df, subject_col, ts_col, id_col, out_col="_tte"
     ).filter(F.col("_tte").isNotNull())
     log_tte = F.log(F.col("_tte") + F.lit(1.0))
     aggs = [
@@ -147,36 +145,26 @@ def safe_weighted_avg(
     value_col: str,
     weight_col: str,
     by: list[str] | None = None,
-    out_col: str = "weighted_avg",
 ) -> DataFrame:
     """A15: zero-safe weighted mean — ``sum(x*w)/sum(w)`` guarded to 0
     when total weight is 0 (EventStreamTransformer/utils.py:13-38)."""
     x, w_ = F.col(value_col), F.col(weight_col)
     expr = F.when(F.sum(w_) > 0, F.sum(x * w_) / F.sum(w_)).otherwise(F.lit(0.0))
     if by:
-        return df.groupBy(*by).agg(expr.alias(out_col))
-    return df.agg(expr.alias(out_col))
+        return df.groupBy(*by).agg(expr.alias("weighted_avg"))
+    return df.agg(expr.alias("weighted_avg"))
 
 
 def two_level_macro_avg(
     df: DataFrame,
     value_col: str,
     subject_col: str = "subject_id",
-    weight_col: str | None = None,
-    out_col: str = "macro_avg",
 ) -> DataFrame:
     """A15/A16: macro average — mean per subject first, then mean over
     subjects (weighted_loss / TTE LL aggregation,
     EventStreamTransformer/utils.py:40-62, model.py:112-142)."""
-    x = F.col(value_col)
-    if weight_col is not None:
-        w_ = F.col(weight_col)
-        per_subj = df.groupBy(subject_col).agg(
-            F.when(F.sum(w_) > 0, F.sum(x * w_) / F.sum(w_)).otherwise(F.lit(0.0)).alias("_m")
-        )
-    else:
-        per_subj = df.groupBy(subject_col).agg(F.avg(x).alias("_m"))
-    return per_subj.agg(F.avg("_m").alias(out_col))
+    per_subj = df.groupBy(subject_col).agg(F.avg(F.col(value_col)).alias("_m"))
+    return per_subj.agg(F.avg("_m").alias("macro_avg"))
 
 
 def cohort_retention(
@@ -276,8 +264,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
     weight: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration weighted PageRank over an edge list — node
@@ -301,10 +287,10 @@ def pagerank(
     single task while AQE already right-sizes these tiny shuffles.)
     """
     if weight is None:
-        e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
+        e0 = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"),
                           F.lit(1.0).alias("_w"))
     else:
-        e0 = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
+        e0 = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"),
                           F.col(weight).cast("double").alias("_w"))
     # Materialize the edge list ONCE before the loop: nodes/outw/e/
     # nstats below all reference e0, and every iteration's checkpoint
@@ -431,8 +417,6 @@ def moments_of(
 
 def type_cooccurrence_lift(
     events: DataFrame,
-    subject_col: str = "user_id",
-    type_col: str = "event_type",
     min_subjects: int = 5,
 ) -> DataFrame:
     """Market-basket lift over per-subject event-type sets:
@@ -448,13 +432,13 @@ def type_cooccurrence_lift(
     per-type marginals are a |types|-row broadcast. min_subjects
     thresholds membership so output is not float-rank sensitive.
     """
-    st = events.select(subject_col, type_col).distinct()
+    st = events.select("user_id", "event_type").distinct()
     n_subj = st.agg(
-        F.count_distinct(F.col(subject_col)).cast("double").alias("_ns")
+        F.count_distinct(F.col("user_id")).cast("double").alias("_ns")
     )
-    marg = st.groupBy(type_col).agg(F.count(F.lit(1)).alias("_n"))
-    a = st.select(F.col(subject_col).alias("_s"), F.col(type_col).alias("type_a"))
-    b = st.select(F.col(subject_col).alias("_s"), F.col(type_col).alias("type_b"))
+    marg = st.groupBy("event_type").agg(F.count(F.lit(1)).alias("_n"))
+    a = st.select(F.col("user_id").alias("_s"), F.col("event_type").alias("type_a"))
+    b = st.select(F.col("user_id").alias("_s"), F.col("event_type").alias("type_b"))
     pairs = (
         a.join(b, "_s")
         .filter(F.col("type_a") < F.col("type_b"))
@@ -462,8 +446,8 @@ def type_cooccurrence_lift(
         .agg(F.count(F.lit(1)).alias("n_both"))
         .filter(F.col("n_both") >= min_subjects)
     )
-    ma = marg.select(F.col(type_col).alias("type_a"), F.col("_n").alias("_na"))
-    mb = marg.select(F.col(type_col).alias("type_b"), F.col("_n").alias("_nb"))
+    ma = marg.select(F.col("event_type").alias("type_a"), F.col("_n").alias("_na"))
+    mb = marg.select(F.col("event_type").alias("type_b"), F.col("_n").alias("_nb"))
     return (
         pairs.join(F.broadcast(ma), "type_a")
         .join(F.broadcast(mb), "type_b")
@@ -482,9 +466,6 @@ def type_cooccurrence_lift(
 def time_decay_features(
     events: DataFrame,
     half_life_hours: float = 24.0,
-    subject_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Exponential time-decay features per subject — the feature-store
     recency encoding: each event contributes 2^(−Δt/half_life) toward a
@@ -496,15 +477,15 @@ def time_decay_features(
     One scalar aggregate (the reference instant) broadcasts into a pure
     projection; one map-side-combined groupBy does the rest — the decay
     weights never materialize per row beyond the projection."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     now = events.agg(F.max(us).alias("_now"))
     hl_us = half_life_hours * 3_600_000_000.0
     w = F.pow(F.lit(2.0), -(F.col("_now") - us) / F.lit(hl_us))
-    x = F.col(value_col).cast("double")
+    x = F.col("value").cast("double")
     return (
         events.crossJoin(F.broadcast(now))
-        .select(F.col(subject_col), w.alias("_w"), (w * x).alias("_wx"))
-        .groupBy(subject_col)
+        .select(F.col("user_id"), w.alias("_w"), (w * x).alias("_wx"))
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.round(F.sum("_w"), 6).alias("decayed_count"),

@@ -46,9 +46,7 @@ EMAIL_TOKEN = "<EMAIL>"
 NUMBER_TOKEN = "<NUMBER>"
 
 
-def redact_pii(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Rule-based PII scrub: replace e-mail addresses and long digit
     runs with typed placeholder tokens, and count what was removed.
 
@@ -57,12 +55,12 @@ def redact_pii(
     keeps working on scrubbed content; select the full redacted column
     via :func:`redacted_text` when materializing a cleaned corpus.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     # digit runs are counted AFTER the email pass: digits inside an
     # address belong to the email redaction, not the number count
     no_email = F.regexp_replace(text, EMAIL_REGEX, EMAIL_TOKEN)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.regexp_extract_all(text, F.lit(EMAIL_REGEX), F.lit(0))).alias(
             "n_emails"
         ),
@@ -85,8 +83,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_chars: int = 500,
     stride: int = 400,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_text: bool = False,
 ) -> DataFrame:
     """Overlapping fixed-width character chunks (RAG/window-attention
@@ -101,7 +97,7 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_chars <= 0 or stride > chunk_chars:
         raise ValueError("need 0 < stride <= chunk_chars")
-    text = F.col(text_col)
+    text = F.col("text")
     n = F.length(text)
     n_chunks = F.when(n <= chunk_chars, F.lit(1)).otherwise(
         F.ceil((n - F.lit(chunk_chars)) / F.lit(stride)).cast("long") + 1
@@ -110,13 +106,13 @@ def chunk_documents(
         F.col("chunk_no").cast("int") * F.lit(stride) + F.lit(1), F.lit(chunk_chars)
     )
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         text,
         F.explode(F.sequence(F.lit(0).cast("long"), (n_chunks - 1).cast("long"))).alias(
             "chunk_no"
         ),
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_no").cast("long").alias("chunk_no"),
         F.length(chunk).alias("chunk_len"),
         F.md5(chunk).alias("chunk_md5"),
@@ -128,9 +124,6 @@ def chunk_documents(
 def pack_documents(
     docs: DataFrame,
     capacity_tokens: int = 2048,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sequence-packing plan: assign each document to a fixed-capacity
     pack by the *offset* of its first token in the stratum's
@@ -139,7 +132,7 @@ def pack_documents(
     stratum, deterministic, and docs longer than the capacity simply
     span bins (they would be split at tokenization time anyway).
 
-    Packs are formed within strata (``stratum_col``) rather than
+    Packs are formed within strata (``source``) rather than
     globally — a global order funnels everything through one partition;
     per-stratum packing is one keyed shuffle and matches the
     shard-local layout pretraining pipelines want.
@@ -149,18 +142,18 @@ def pack_documents(
     from eventstreamml_spark.operators.text import token_count
 
     w = (
-        W.partitionBy(stratum_col)
-        .orderBy(id_col)
+        W.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     toks = docs.select(
-        F.col(id_col),
-        F.col(stratum_col),
-        token_count(F.col(text_col)).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        F.col("source"),
+        token_count(F.col("text")).cast("long").alias("n_tokens"),
     )
     return toks.select(
-        id_col,
-        stratum_col,
+        "doc_id",
+        "source",
         "n_tokens",
         (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("start_offset"),
     ).withColumn(
@@ -172,7 +165,6 @@ def quota_sample(
     docs: DataFrame,
     k: int,
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Deterministic per-stratum quota: keep the ``k`` docs per stratum
     that rank first by ``md5(id)`` — a seed-free uniform draw that is
@@ -185,10 +177,10 @@ def quota_sample(
     Returns (stratum, id, rk) with rk in 1..k.
     """
     rk = F.row_number().over(
-        W.partitionBy(stratum_col).orderBy(F.md5(F.col(id_col).cast("string")))
+        W.partitionBy(stratum_col).orderBy(F.md5(F.col("doc_id").cast("string")))
     )
     return (
-        docs.select(F.col(stratum_col), F.col(id_col))
+        docs.select(F.col(stratum_col), F.col("doc_id"))
         .withColumn("rk", rk)
         .filter(F.col("rk") <= k)
     )
@@ -199,8 +191,6 @@ def ngram_contamination(
     benchmark: DataFrame,
     k: int = 4,
     min_shared: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: for every candidate doc, the number
     of distinct word ``k``-gram shingles it shares with ANY benchmark
@@ -216,22 +206,22 @@ def ngram_contamination(
     """
     from eventstreamml_spark.operators.dedup import word_shingles
 
-    cand_sh = word_shingles(docs, k=k, id_col=id_col, text_col=text_col)
+    cand_sh = word_shingles(docs, k=k)
     bench_sh = (
-        word_shingles(benchmark, k=k, id_col=id_col, text_col=text_col)
+        word_shingles(benchmark, k=k)
         .select("shingle")
         .distinct()
     )
     hits = (
         cand_sh.join(bench_sh, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
-    base = docs.select(id_col).distinct()
+    base = docs.select("doc_id").distinct()
     return (
-        base.join(hits, id_col, "left")
+        base.join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_shared"), F.lit(0)).alias("n_shared"),
         )
         .withColumn("contaminated", F.col("n_shared") >= min_shared)
@@ -241,8 +231,6 @@ def ngram_contamination(
 def shard_plan(
     docs: DataFrame,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    size_col: str = "n_chars",
 ) -> DataFrame:
     """Plan globally-shuffled training shards: every document lands in
     shard ``md5(id) % n_shards``, and the plan reports per-shard volume
@@ -256,12 +244,12 @@ def shard_plan(
     so each shard is internally hash-ordered and shards are mutually
     independent (re-shufflable, resumable, skew-bounded by the hash).
     One keyed shuffle; hash skew is statistically bounded at any SF."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     shard = (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_shards
     ).alias("shard")
     return (
-        docs.select(shard, F.col(size_col).alias("_sz"), h.alias("_h"))
+        docs.select(shard, F.col("n_chars").alias("_sz"), h.alias("_h"))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -275,8 +263,6 @@ def shard_plan(
 def incremental_new_docs(
     incoming: DataFrame,
     reference: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Incremental-ingest exact dedup: keep only incoming documents
     whose content digest does NOT already exist in the reference
@@ -287,20 +273,17 @@ def incremental_new_docs(
     before the shuffle (text never crosses the wire), the reference
     side is pre-distincted so the join input is its digest SET, and
     Catalyst/AQE pick broadcast vs shuffled-hash by the (small) digest
-    relation's size. Returns ``(id_col, digest)`` for surviving docs."""
+    relation's size. Returns ``(doc_id, digest)`` for surviving docs."""
     inc = incoming.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("digest")
+        F.col("doc_id"), F.md5(F.col("text")).alias("digest")
     )
-    ref = reference.select(F.md5(F.col(text_col)).alias("digest")).distinct()
-    return inc.join(ref, "digest", "left_anti").select(id_col, "digest")
+    ref = reference.select(F.md5(F.col("text")).alias("digest")).distinct()
+    return inc.join(ref, "digest", "left_anti").select("doc_id", "digest")
 
 
 def dsir_importance(
     docs: DataFrame,
     target_pred: Column,
-    n_buckets: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """DSIR-style importance weights (Data Selection via Importance
     Resampling, Xie et al. 2023, arXiv:2302.03169): score every
@@ -313,7 +296,7 @@ def dsir_importance(
 
     Scale shape: ONE words explode feeds (a) the two bucket models —
     a single groupBy on the bucket key with conditional sums, emitting
-    exactly ``n_buckets`` rows — and (b) per-doc bucket counts (one
+    exactly 1024 rows — and (b) per-doc bucket counts (one
     groupBy on (doc, bucket)). The model relation is buckets-sized,
     so it broadcast-joins onto the per-doc counts; the final score is
     a map-side-combined groupBy on the doc key. Nothing here scales
@@ -323,13 +306,13 @@ def dsir_importance(
     """
     bucket = (
         F.conv(F.substring(F.md5(F.lower(F.col("_w"))), 1, 8), 16, 10)
-        .cast("long") % n_buckets
+        .cast("long") % 1024
     )
     words = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         target_pred.alias("_t"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("_w"),
-    ).select(id_col, "_t", bucket.alias("_b"))
+        F.explode(F.split(F.col("text"), r"\s+")).alias("_w"),
+    ).select("doc_id", "_t", bucket.alias("_b"))
     model = words.groupBy("_b").agg(
         F.sum(F.when(F.col("_t"), 1).otherwise(0)).alias("_ct"),
         F.sum(F.when(~F.col("_t"), 1).otherwise(0)).alias("_cr"),
@@ -340,18 +323,18 @@ def dsir_importance(
     llr = model.crossJoin(F.broadcast(totals)).select(
         "_b",
         (
-            F.log((F.col("_ct") + 1.0) / (F.col("_Tt") + float(n_buckets)))
-            - F.log((F.col("_cr") + 1.0) / (F.col("_Tr") + float(n_buckets)))
+            F.log((F.col("_ct") + 1.0) / (F.col("_Tt") + 1024.0))
+            - F.log((F.col("_cr") + 1.0) / (F.col("_Tr") + 1024.0))
         ).alias("_llr"),
     )
     doc_counts = (
         words.filter(~F.col("_t"))
-        .groupBy(id_col, "_b")
+        .groupBy("doc_id", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     return (
         doc_counts.join(F.broadcast(llr), "_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_c").cast("long").alias("n_tokens"),
             F.round(F.sum(F.col("_c") * F.col("_llr")), 6).alias("log_w"),
@@ -362,30 +345,27 @@ def dsir_importance(
 def mixture_weights(
     docs: DataFrame,
     temperature: float = 2.0,
-    stratum_col: str = "source",
-    size_col: str | None = None,
 ) -> DataFrame:
     """Temperature-scaled sampling weights per stratum (the
     mT5/multilingual mixing rule): p_i ∝ (n_i/N)^(1/τ). τ=1 keeps the
     natural distribution, τ→∞ approaches uniform — the knob that stops
     a dominant source from drowning the tail without discarding it.
 
-    Returns (stratum, n, nat_share, weight, expected_share) — feed
-    ``weight`` into a Bernoulli/quota sampler per stratum. One tiny
+    Returns (source, n, nat_share, expected_share, upweight) — feed
+    ``upweight`` into a Bernoulli/quota sampler per stratum. One tiny
     keyed groupBy; the power/normalize arithmetic runs on the
     |strata|-row relation."""
-    size = F.count(F.lit(1)) if size_col is None else F.sum(size_col)
-    counts = docs.groupBy(stratum_col).agg(size.alias("n"))
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     total = counts.agg(F.sum("n").alias("_tot"))
     shares = counts.crossJoin(F.broadcast(total)).select(
-        stratum_col,
+        "source",
         "n",
         (F.col("n") / F.col("_tot")).alias("nat_share"),
         F.pow(F.col("n") / F.col("_tot"), 1.0 / temperature).alias("_w"),
     )
     wtot = shares.agg(F.sum("_w").alias("_wtot"))
     return shares.crossJoin(F.broadcast(wtot)).select(
-        stratum_col,
+        "source",
         "n",
         F.round("nat_share", 6).alias("nat_share"),
         F.round(F.col("_w") / F.col("_wtot"), 6).alias("expected_share"),
@@ -397,8 +377,6 @@ def mixture_weights(
 
 def negative_sample_interactions(
     events: DataFrame,
-    subject_col: str = "user_id",
-    type_col: str = "event_type",
     neg_pct: int = 30,
 ) -> DataFrame:
     """Deterministic negative sampling for interaction modeling: the
@@ -413,17 +391,17 @@ def negative_sample_interactions(
     anti-join on the pair key; the thinning is a pure expression. On a
     10⁹-subject corpus the output is O(subjects · |types| · pct) with
     exactly two shuffles (the two distincts)."""
-    pos = events.select(subject_col, type_col).distinct()
-    types = events.select(type_col).distinct()
-    grid = pos.select(subject_col).distinct().crossJoin(F.broadcast(types))
+    pos = events.select("user_id", "event_type").distinct()
+    types = events.select("event_type").distinct()
+    grid = pos.select("user_id").distinct().crossJoin(F.broadcast(types))
     u = (
         F.conv(
             F.substring(
                 F.md5(
                     F.concat_ws(
                         ":",
-                        F.col(subject_col).cast("string"),
-                        F.col(type_col),
+                        F.col("user_id").cast("string"),
+                        F.col("event_type"),
                     )
                 ),
                 1,
@@ -435,11 +413,11 @@ def negative_sample_interactions(
         % 100
     )
     negs = (
-        grid.join(pos, [subject_col, type_col], "left_anti")
+        grid.join(pos, ["user_id", "event_type"], "left_anti")
         .filter(u < neg_pct)
-        .select(subject_col, type_col, F.lit(0).alias("label"))
+        .select("user_id", "event_type", F.lit(0).alias("label"))
     )
-    return pos.select(subject_col, type_col, F.lit(1).alias("label")).unionAll(
+    return pos.select("user_id", "event_type", F.lit(1).alias("label")).unionAll(
         negs
     )
 
@@ -447,14 +425,7 @@ def negative_sample_interactions(
 GOPHER_STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 
-def gopher_quality_flags(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality_flags(docs: DataFrame) -> DataFrame:
     """Gopher/C4-style document quality rules (Rae et al. 2021 §A1.1,
     Raffel et al. 2020 §2.2 — published heuristics, re-expressed as
     pure Spark expressions), aggregated to per-language rule-violation
@@ -466,11 +437,11 @@ def gopher_quality_flags(
     engine boundary. One scan, zero shuffle before the final |langs|
     groupBy; at 100 TB this is a mapper-only pass.
 
-    Rules: word count in [min_words, max_words]; mean word length in
+    Rules: word count in [50, 100000]; mean word length in
     [3, 10]; ≥80% of words contain an alphabetic character; at least 2
     distinct canonical stopwords; symbol-to-word ratio (#, …) ≤ 0.1;
     no 'lorem ipsum' / '{' boilerplate."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.filter(F.split(text, r"\s+"), lambda w: w != "")
     n = F.size(words)
     chars = F.length(F.regexp_replace(text, r"\s+", ""))
@@ -490,8 +461,8 @@ def gopher_quality_flags(
     low = F.lower(text)
 
     flags = docs.select(
-        F.col(lang_col).alias("lang"),
-        ((n < min_words) | (n > max_words)).cast("int").alias("bad_word_count"),
+        F.col("lang").alias("lang"),
+        ((n < 50) | (n > 100_000)).cast("int").alias("bad_word_count"),
         (~((chars >= 3 * n) & (chars <= 10 * n))).cast("int").alias(
             "bad_mean_word_len"
         ),

@@ -18,9 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 
-def exact_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content digest: keeps the minimum id
     as the canonical representative.
 
@@ -28,16 +26,14 @@ def exact_dedup(
     on keep_id to materialize the deduplicated corpus.
     """
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("content_hash"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_dups"))
         .select("keep_id", "n_dups", "content_hash")
     )
 
 
-def word_shingles(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     """Distinct word k-gram shingles per document: (doc_id, shingle).
 
     Form chosen by measurement (sf0.1, 5000 docs): posexplode once +
@@ -50,12 +46,12 @@ def word_shingles(
     """
     from eventstreamml_spark.operators.text import words_table
 
-    words = words_table(docs, id_col, text_col)
-    w = W.partitionBy(id_col).orderBy("pos")
+    words = words_table(docs)
+    w = W.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("word")] + [F.lead("word", i).over(w) for i in range(1, k)]
     return (
         words.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.concat_ws(" ", *parts).alias("shingle"),
             F.lead("word", k - 1).over(w).alias("_last"),
         )
@@ -65,9 +61,7 @@ def word_shingles(
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_perm: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
+def minhash_signatures(shingles: DataFrame, n_perm: int = 16) -> DataFrame:
     """MinHash signature per document: for permutation i, the minimum
     md5 of ``shingle || ':' || i`` (lexicographic min over hex — a
     uniform hash family, portable across engines).
@@ -85,14 +79,13 @@ def minhash_signatures(
         F.min(F.md5(F.concat_ws(":", F.col("shingle"), F.lit(i)))).alias(f"mh{i}")
         for i in range(n_perm)
     ]
-    return shingles.groupBy(id_col).agg(*aggs)
+    return shingles.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
     n_perm: int = 16,
     n_bands: int = 4,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """LSH banding: documents agreeing on ALL rows of any band become
     candidate pairs. Band hash = md5 of the band's concatenated
@@ -121,18 +114,18 @@ def lsh_candidate_pairs(
         for b in range(n_bands)
     ]
     banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_rows)).alias("_b")
-    ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.band_hash").alias("band_hash"))
+        F.col("doc_id"), F.explode(F.array(*band_rows)).alias("_b")
+    ).select("doc_id", F.col("_b.band").alias("band"), F.col("_b.band_hash").alias("band_hash"))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .distinct()
     )
@@ -141,7 +134,6 @@ def lsh_candidate_pairs(
 def jaccard_pairs(
     shingles: DataFrame,
     threshold: float = 0.0,
-    id_col: str = "doc_id",
     candidates: DataFrame | None = None,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
@@ -182,12 +174,12 @@ def jaccard_pairs(
         # calls), so every run still computes from the raw inputs.
         cand_pairs = candidates.select("id_a", "id_b").localCheckpoint()
         cand_ids = (
-            cand_pairs.select(F.col("id_a").alias(id_col))
-            .union(cand_pairs.select(F.col("id_b").alias(id_col)))
+            cand_pairs.select(F.col("id_a").alias("doc_id"))
+            .union(cand_pairs.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        shingles = shingles.join(cand_ids, id_col, "left_semi").localCheckpoint()
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+        shingles = shingles.join(cand_ids, "doc_id", "left_semi").localCheckpoint()
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     if max_shingle_df is not None:
         cold = (
             shingles.groupBy("shingle")
@@ -201,17 +193,17 @@ def jaccard_pairs(
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     if cand_pairs is not None:
         inter = inter.join(cand_pairs, ["id_a", "id_b"], "left_semi")
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     out = (
         inter.join(F.broadcast(sa), "id_a")
         .join(F.broadcast(sb), "id_b")
@@ -227,7 +219,6 @@ def jaccard_pairs(
 def simhash(
     shingles: DataFrame,
     bits: int = 64,
-    id_col: str = "doc_id",
     hash_col: Column | None = None,
 ) -> DataFrame:
     """SimHash: per-document ``bits``-bit signature where bit j is the
@@ -245,16 +236,16 @@ def simhash(
     h = hash_col if hash_col is not None else F.xxhash64(F.col("shingle"))
     bit = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
     per_bit = (
-        shingles.select(F.col(id_col), bit, h.alias("_h"))
+        shingles.select(F.col("doc_id"), bit, h.alias("_h"))
         .select(
-            F.col(id_col), F.col("bit"),
+            F.col("doc_id"), F.col("bit"),
             # shiftright with a *column* shift needs the SQL form
             F.when(F.expr("shiftright(_h, bit) & 1") == 1, 1).otherwise(-1).alias("contrib"),
         )
-        .groupBy(id_col, "bit")
+        .groupBy("doc_id", "bit")
         .agg(F.sum("contrib").alias("s"))
     )
-    return per_bit.groupBy(id_col).agg(
+    return per_bit.groupBy("doc_id").agg(
         F.sum(
             F.when(F.col("s") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)"))
             .otherwise(F.lit(0).cast("long"))
@@ -262,9 +253,7 @@ def simhash(
     )
 
 
-def simhash_near_pairs(
-    sims: DataFrame, max_hamming: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ k, using the
     pigeonhole trick: split the 64-bit signature into (k+1) chunks —
     any pair within distance k agrees exactly on ≥1 chunk → equi-join
@@ -272,7 +261,7 @@ def simhash_near_pairs(
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
     chunk = F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))).alias("chunk")
-    chunks = sims.select(F.col(id_col), F.col("simhash"), chunk)
+    chunks = sims.select(F.col("doc_id"), F.col("simhash"), chunk)
     if width >= 64:  # single full-width chunk (max_hamming == 0)
         chunks = chunks.withColumn("chunk_val", F.col("simhash"))
     else:
@@ -287,11 +276,11 @@ def simhash_near_pairs(
             b,
             (F.col("a.chunk") == F.col("b.chunk"))
             & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
             F.col("a.simhash").alias("sh_a"),
             F.col("b.simhash").alias("sh_b"),
         )
@@ -306,8 +295,6 @@ def simhash_near_pairs(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (brute force). Quadratic —
     intended for within-bucket verification after an LSH/IVF prefilter
@@ -315,10 +302,10 @@ def embedding_near_dup_pairs(
     from eventstreamml_spark.operators.similarity import dot, unit_normalize
 
     a = emb.select(
-        F.col(id_col).alias("id_a"), unit_normalize(F.col(vec_col)).alias("_va")
+        F.col("vec_id").alias("id_a"), unit_normalize(F.col("embedding")).alias("_va")
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"), unit_normalize(F.col(vec_col)).alias("_vb")
+        F.col("vec_id").alias("id_b"), unit_normalize(F.col("embedding")).alias("_vb")
     )
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     # each side unit-normalized once; the quadratic stage pays one dot
@@ -335,8 +322,6 @@ def embedding_near_dup_lsh(
     n_bands: int = 4,
     seed: int = 42,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs at scale: banded hyperplane LSH
     proposes candidates, exact cosine verifies — the vector analog of
@@ -364,7 +349,7 @@ def embedding_near_dup_lsh(
     if dim is None:
         from eventstreamml_spark.operators.similarity import embedding_dim
 
-        dim = embedding_dim(emb, vec_col)
+        dim = embedding_dim(emb)
     if n_planes % n_bands != 0:
         raise ValueError("n_bands must divide n_planes evenly")
     width = n_planes // n_bands
@@ -384,7 +369,7 @@ def embedding_near_dup_lsh(
     # is 3 longs across the shuffle, not 2×dim floats; vectors join
     # back after dedup (one row per surviving pair side)
     sig = (
-        emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         .withColumn("_b", F.explode(bands))
         .select("_id", F.col("_b.band").alias("band"), F.col("_b.bval").alias("bval"))
     )
@@ -399,10 +384,10 @@ def embedding_near_dup_lsh(
         .select("id_a", "id_b")
     )
     va = emb.select(
-        F.col(id_col).alias("id_a"), unit_normalize(F.col(vec_col)).alias("_va")
+        F.col("vec_id").alias("id_a"), unit_normalize(F.col("embedding")).alias("_va")
     )
     vb = emb.select(
-        F.col(id_col).alias("id_b"), unit_normalize(F.col(vec_col)).alias("_vb")
+        F.col("vec_id").alias("id_b"), unit_normalize(F.col("embedding")).alias("_vb")
     )
     return (
         cand.join(va, "id_a")
@@ -416,8 +401,6 @@ def embedding_near_dup_lsh(
 def near_dup_groups(
     pairs: DataFrame,
     all_ids: DataFrame | None = None,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over near-duplicate pairs → dedup groups:
     every document gets the MINIMUM reachable doc id as ``group_id``
@@ -435,7 +418,7 @@ def near_dup_groups(
     shuffle (join on the edge list) + a map-side min; frames are
     persisted per round and released after the convergence check, so
     lineage stays flat. ``pairs`` columns: (id_a, id_b), any extras
-    ignored. ``all_ids`` (one ``id_col`` column) adds isolated
+    ignored. ``all_ids`` (one ``doc_id`` column) adds isolated
     documents as their own singleton groups.
     """
     edges = (
@@ -444,28 +427,28 @@ def near_dup_groups(
         .distinct()
         .localCheckpoint()  # truncate lineage: edges re-join every round
     )
-    nodes = edges.select(F.col("src").alias(id_col)).distinct()
+    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
     if all_ids is not None:
-        nodes = nodes.unionByName(all_ids.select(id_col)).distinct()
+        nodes = nodes.unionByName(all_ids.select("doc_id")).distinct()
     # localCheckpoint (eager) per round keeps the logical plan flat —
     # an iterative persist() chain still grows the ANALYZED plan and
     # trips ambiguous-self-join resolution on the convergence check
-    labels = nodes.withColumn("group_id", F.col(id_col)).localCheckpoint()
+    labels = nodes.withColumn("group_id", F.col("doc_id")).localCheckpoint()
 
-    for _ in range(max_iter):
+    for _ in range(25):
         # min over each node's own label and all neighbor labels; the
         # convergence flag rides in the SAME select, so the per-round
         # check is a filter-count over the just-materialized frame —
         # no extra join, no extra shuffle
         nbr = (
-            edges.join(labels.withColumnRenamed(id_col, "dst"), "dst")
-            .groupBy(F.col("src").alias(id_col))
+            edges.join(labels.withColumnRenamed("doc_id", "dst"), "dst")
+            .groupBy(F.col("src").alias("doc_id"))
             .agg(F.min("group_id").alias("_nbr_min"))
         )
         new_labels = (
-            labels.join(nbr, id_col, "left")
+            labels.join(nbr, "doc_id", "left")
             .select(
-                id_col,
+                "doc_id",
                 F.least(
                     F.col("group_id"), F.coalesce(F.col("_nbr_min"), F.col("group_id"))
                 ).alias("group_id"),
@@ -481,14 +464,12 @@ def near_dup_groups(
         if changed == 0:
             break
 
-    return labels.withColumn("is_canonical", F.col(id_col) == F.col("group_id"))
+    return labels.withColumn("is_canonical", F.col("doc_id") == F.col("group_id"))
 
 
 def containment_pairs(
     shingles: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric n-gram CONTAINMENT |A∩B| / min(|A|,|B|) for pairs
     sharing ≥1 shingle — the near-dup measure for unequal lengths:
@@ -497,34 +478,24 @@ def containment_pairs(
     the longer side). The standard second pass after Jaccard in a
     curation pipeline ("drop docs fully contained in another").
 
-    Same scale shape as ``jaccard_pairs``: optional candidate
-    restriction semi-joins BOTH self-join inputs first; intersections
-    come from the shingle equi-join; sizes broadcast back. Emits
+    Same scale shape as ``jaccard_pairs``: intersections come from the
+    shingle equi-join; sizes broadcast back. Emits
     (id_a, id_b, n_inter, containment) with id_a < id_b."""
-    if candidates is not None:
-        cand_ids = (
-            candidates.select(F.col("id_a").alias(id_col))
-            .union(candidates.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        shingles = shingles.join(cand_ids, id_col, "left_semi")
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = shingles.alias("a"), shingles.alias("b")
     inter = (
         a.join(
             b,
             (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    if candidates is not None:
-        inter = inter.join(candidates.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
     return (
         inter.join(F.broadcast(sa), "id_a")
         .join(F.broadcast(sb), "id_b")
@@ -539,8 +510,6 @@ def containment_pairs(
 def duplicate_passage_stats(
     docs: DataFrame,
     k: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document duplicated-passage measure (the word-granular
     analog of ExactSubstr dedup, Lee et al. 2022 "Deduplicating
@@ -559,12 +528,12 @@ def duplicate_passage_stats(
     """
     from eventstreamml_spark.operators.text import words_table
 
-    words = words_table(docs, id_col, text_col)
-    w = W.partitionBy(id_col).orderBy("pos")
+    words = words_table(docs)
+    w = W.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("word")] + [F.lead("word", i).over(w) for i in range(1, k)]
     grams = (
         words.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.md5(F.concat_ws(" ", *parts)).alias("gh"),
             F.lead("word", k - 1).over(w).alias("_last"),
         )
@@ -573,9 +542,9 @@ def duplicate_passage_stats(
     )
     counts = grams.groupBy("gh").agg(F.count(F.lit(1)).alias("cnt"))
     flagged = grams.join(counts, "gh").select(
-        F.col(id_col), (F.col("cnt") >= 2).cast("int").alias("_dup")
+        F.col("doc_id"), (F.col("cnt") >= 2).cast("int").alias("_dup")
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum("_dup").alias("n_dup"),
         F.round(F.sum("_dup") / F.count(F.lit(1)), 6).alias("dup_ratio"),

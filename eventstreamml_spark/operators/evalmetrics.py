@@ -17,8 +17,6 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 def binary_auc(
     scored: DataFrame,
-    label_col: str = "label",
-    score_col: str = "score",
     by: str | None = None,
 ) -> DataFrame:
     """ROC AUC via the Mann-Whitney U rank statistic with midrank tie
@@ -36,14 +34,14 @@ def binary_auc(
     """
     keys = [by] if by else []
     part = W.partitionBy(*keys) if keys else W.partitionBy()
-    rk_min = F.rank().over(part.orderBy(F.col(score_col).asc()))
+    rk_min = F.rank().over(part.orderBy(F.col("score").asc()))
     n_ties = F.count(F.lit(1)).over(
-        part.orderBy(F.col(score_col).asc()).rangeBetween(0, 0)
+        part.orderBy(F.col("score").asc()).rangeBetween(0, 0)
     )
     midrank = rk_min + (n_ties - F.lit(1)) / F.lit(2.0)
     ranked = scored.select(
         *keys,
-        F.col(label_col).cast("int").alias("_y"),
+        F.col("label").cast("int").alias("_y"),
         midrank.alias("_r"),
     )
     agg = ranked.groupBy(*keys).agg(
@@ -69,7 +67,6 @@ def binary_auc(
 
 def calibration_bins(
     scored: DataFrame,
-    score_col: str = "score",
     label_col: str = "label",
     n_bins: int = 10,
 ) -> DataFrame:
@@ -80,13 +77,13 @@ def calibration_bins(
     exactly 1.0 fold into the top bin rather than spilling into an
     n_bins+1st."""
     b = F.least(
-        F.floor(F.col(score_col) * n_bins).cast("long"), F.lit(n_bins - 1)
+        F.floor(F.col("score") * n_bins).cast("long"), F.lit(n_bins - 1)
     )
     return (
         scored.groupBy(b.alias("bin"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.col(score_col)), 6).alias("mean_score"),
+            F.round(F.avg(F.col("score")), 6).alias("mean_score"),
             F.round(F.avg(F.col(label_col).cast("double")), 6).alias("event_rate"),
         )
         .withColumn(
@@ -98,7 +95,6 @@ def calibration_bins(
 def threshold_metrics(
     scored: DataFrame,
     thresholds: list[float],
-    score_col: str = "score",
     label_col: str = "label",
 ) -> DataFrame:
     """Operating-point sweep: precision / recall / F1 at each cut in
@@ -111,8 +107,8 @@ def threshold_metrics(
         F.array(*[F.lit(float(x)) for x in sorted(thresholds)])
     ).alias("threshold")
     y = F.col(label_col).cast("int")
-    pred = (F.col(score_col) >= F.col("threshold")).cast("int")
-    base = scored.select(y.alias("_y"), F.col(score_col), t).select(
+    pred = (F.col("score") >= F.col("threshold")).cast("int")
+    base = scored.select(y.alias("_y"), F.col("score"), t).select(
         "threshold",
         (F.col("_y") * pred).alias("_tp"),
         ((1 - F.col("_y")) * pred).alias("_fp"),
@@ -139,9 +135,6 @@ def threshold_metrics(
 
 def ndcg_at_k(
     results: DataFrame,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    rel_col: str = "rel",
     k: int = 10,
 ) -> DataFrame:
     """nDCG@k per query over a (query, item, score, graded-relevance)
@@ -157,26 +150,26 @@ def ndcg_at_k(
     item asc) so both rankings are reproducible. Queries whose IDCG is
     0 (no relevant items) emit NULL, not NaN.
     """
-    part = W.partitionBy(query_col)
+    part = W.partitionBy("query_id")
     item_cols = [
-        c for c in results.columns if c not in (query_col, score_col, rel_col)
+        c for c in results.columns if c not in ("query_id", "score", "rel")
     ]
     tiebreak = [F.col(c).asc() for c in item_cols]
     r_score = F.row_number().over(
-        part.orderBy(F.col(score_col).desc(), *tiebreak)
+        part.orderBy(F.col("score").desc(), *tiebreak)
     )
     r_ideal = F.row_number().over(
-        part.orderBy(F.col(rel_col).desc(), *tiebreak)
+        part.orderBy(F.col("rel").desc(), *tiebreak)
     )
-    gain = F.pow(F.lit(2.0), F.col(rel_col).cast("double")) - 1.0
+    gain = F.pow(F.lit(2.0), F.col("rel").cast("double")) - 1.0
     ranked = results.select(
-        query_col,
+        "query_id",
         gain.alias("_g"),
         r_score.alias("_rs"),
         r_ideal.alias("_ri"),
     )
     disc = lambda r: F.log2(r.cast("double") + 1.0)  # noqa: E731
-    agg = ranked.groupBy(query_col).agg(
+    agg = ranked.groupBy("query_id").agg(
         F.sum(F.when(F.col("_rs") <= k, F.col("_g") / disc(F.col("_rs")))).alias(
             "_dcg"
         ),
@@ -185,18 +178,14 @@ def ndcg_at_k(
         ),
     )
     return agg.select(
-        query_col,
+        "query_id",
         F.round(F.coalesce(F.col("_dcg"), F.lit(0.0)), 6).alias("dcg"),
         F.round(F.coalesce(F.col("_idcg"), F.lit(0.0)), 6).alias("idcg"),
         F.round(F.try_divide(F.col("_dcg"), F.col("_idcg")), 6).alias("ndcg"),
     )
 
 
-def multiclass_metrics(
-    preds: DataFrame,
-    label_col: str = "label",
-    pred_col: str = "pred",
-) -> DataFrame:
+def multiclass_metrics(preds: DataFrame) -> DataFrame:
     """Per-class precision / recall / F1 from a (label, pred) relation.
 
     ONE map-side-combined groupBy over the data reduces 10¹¹ rows to a
@@ -208,7 +197,7 @@ def multiclass_metrics(
     the ratio is 0/0 — macro-F1 is then a trivial avg over this output.
     """
     counts = preds.groupBy(
-        F.col(label_col).alias("_l"), F.col(pred_col).alias("_p")
+        F.col("label").alias("_l"), F.col("pred").alias("_p")
     ).agg(F.count(F.lit(1)).alias("_n"))
     # Both marginals from ONE pass over the confusion relation: each
     # (label, pred, n) row is exploded into a label-role and a
@@ -264,9 +253,6 @@ def multiclass_metrics(
 
 def average_precision_at_k(
     results: DataFrame,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    rel_col: str = "rel",
     k: int = 10,
 ) -> DataFrame:
     """Average precision @k per query (the per-query term of MAP):
@@ -279,22 +265,22 @@ def average_precision_at_k(
     SAME partitioning — Catalyst plans a single exchange; the final
     groupBy is map-side combined. Queries with zero relevant items
     emit NULL ap."""
-    part = W.partitionBy(query_col)
+    part = W.partitionBy("query_id")
     item_cols = [
-        c for c in results.columns if c not in (query_col, score_col, rel_col)
+        c for c in results.columns if c not in ("query_id", "score", "rel")
     ]
     tiebreak = [F.col(c).asc() for c in item_cols]
-    order = part.orderBy(F.col(score_col).desc(), *tiebreak)
+    order = part.orderBy(F.col("score").desc(), *tiebreak)
     rk = F.row_number().over(order)
-    hit = (F.col(rel_col) > 0).cast("int")
+    hit = (F.col("rel") > 0).cast("int")
     cum_hits = F.sum(hit).over(order.rowsBetween(W.unboundedPreceding, 0))
     ranked = results.select(
-        query_col,
+        "query_id",
         hit.alias("_h"),
         rk.alias("_rk"),
         cum_hits.alias("_ch"),
     )
-    agg = ranked.groupBy(query_col).agg(
+    agg = ranked.groupBy("query_id").agg(
         F.sum(
             F.when(
                 (F.col("_rk") <= k) & (F.col("_h") == 1),
@@ -305,7 +291,7 @@ def average_precision_at_k(
     )
     denom = F.least(F.col("n_rel"), F.lit(k))
     return agg.select(
-        query_col,
+        "query_id",
         "n_rel",
         F.round(
             F.try_divide(F.coalesce(F.col("_psum"), F.lit(0.0)), denom), 6
@@ -413,11 +399,7 @@ def brier_decomposition(
     )
 
 
-def cohens_kappa(
-    preds: DataFrame,
-    label_col: str = "label",
-    pred_col: str = "pred",
-) -> DataFrame:
+def cohens_kappa(preds: DataFrame) -> DataFrame:
     """Cohen's kappa chance-corrected agreement between two labelings:
     κ = (p_o − p_e)/(1 − p_e) with p_o the diagonal mass and p_e the
     product-of-marginals mass Σ_k (row_k · col_k)/N². Same
@@ -427,7 +409,7 @@ def cohens_kappa(
     (p_e = 1, a single shared class) NULLs κ via try_divide rather
     than fabricating 0/0."""
     counts = preds.groupBy(
-        F.col(label_col).alias("_l"), F.col(pred_col).alias("_p")
+        F.col("label").alias("_l"), F.col("pred").alias("_p")
     ).agg(F.count(F.lit(1)).cast("double").alias("_n"))
     # p_e = Σ_k row_k · col_k / N² where k ranges over classes seen in
     # EITHER role. ONE pass over the confusion relation: each (l, p, n)
@@ -575,8 +557,6 @@ def kendall_tau_groups(
 
 def pr_auc(
     scored: DataFrame,
-    label_col: str = "label",
-    score_col: str = "score",
     by: str | None = None,
 ) -> DataFrame:
     """Precision-recall AUC (average precision over the full ranking):
@@ -592,9 +572,9 @@ def pr_auc(
     """
     keys = [by] if by else []
     g = scored.groupBy(
-        *keys, F.col(score_col).alias("_s")
+        *keys, F.col("score").alias("_s")
     ).agg(
-        F.sum(F.col(label_col).cast("long")).alias("_np"),
+        F.sum(F.col("label").cast("long")).alias("_np"),
         F.count(F.lit(1)).alias("_n"),
     )
     part = W.partitionBy(*keys) if keys else W.partitionBy()
@@ -621,9 +601,6 @@ def pr_auc(
 
 def mrr_at_k(
     results: DataFrame,
-    query_col: str = "query_id",
-    score_col: str = "score",
-    rel_col: str = "rel",
     k: int = 10,
 ) -> DataFrame:
     """Per-query reciprocal rank @k (the per-query term of MRR): the
@@ -635,20 +612,20 @@ def mrr_at_k(
     window on the query key with a deterministic item tiebreak, then a
     map-side-combined groupBy — the min-over-relevant reduction never
     materializes a global sort."""
-    part = W.partitionBy(query_col)
+    part = W.partitionBy("query_id")
     item_cols = [
-        c for c in results.columns if c not in (query_col, score_col, rel_col)
+        c for c in results.columns if c not in ("query_id", "score", "rel")
     ]
     tiebreak = [F.col(c).asc() for c in item_cols]
     rk = F.row_number().over(
-        part.orderBy(F.col(score_col).desc(), *tiebreak)
+        part.orderBy(F.col("score").desc(), *tiebreak)
     )
     ranked = results.select(
-        query_col,
-        (F.col(rel_col) > 0).cast("int").alias("_h"),
+        "query_id",
+        (F.col("rel") > 0).cast("int").alias("_h"),
         rk.alias("_rk"),
     )
-    agg = ranked.groupBy(query_col).agg(
+    agg = ranked.groupBy("query_id").agg(
         F.min(F.when(F.col("_h") == 1, F.col("_rk"))).alias("first_rel_rank"),
         F.sum("_h").cast("long").alias("n_rel"),
     )
@@ -656,7 +633,7 @@ def mrr_at_k(
         F.col("first_rel_rank") <= k, F.round(1.0 / F.col("first_rel_rank"), 6)
     ).otherwise(F.lit(0.0))
     return agg.select(
-        query_col,
+        "query_id",
         "n_rel",
         "first_rel_rank",
         F.when(F.col("n_rel") > 0, rr).alias("rr"),
@@ -665,7 +642,6 @@ def mrr_at_k(
 
 def expected_calibration_error(
     scored: DataFrame,
-    score_col: str = "score",
     label_col: str = "label",
     n_bins: int = 10,
 ) -> DataFrame:
@@ -676,7 +652,7 @@ def expected_calibration_error(
     oracle-stable bin relation — engine float drift can't leak in
     below the output grid. One groupBy over |bins| rows."""
     bins = calibration_bins(
-        scored, score_col=score_col, label_col=label_col, n_bins=n_bins
+        scored, label_col=label_col, n_bins=n_bins
     )
     return bins.groupBy().agg(
         F.sum("n").cast("long").alias("n"),

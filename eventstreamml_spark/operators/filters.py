@@ -85,28 +85,25 @@ def drop_oob_and_censor_outliers(
     key_col: str,
     value_col: str,
     out_col: str | None = None,
-    by: list[str] | None = None,
 ) -> DataFrame:
     """P6/J1: join values to a per-key bounds table (broadcast — bounds
     are measurement metadata, always small) and apply :func:`drop_or_censor`
     rowwise; keys missing from ``bounds`` pass through unchanged
-    (event_stream_dataset.py:213-266). ``by`` columns, when given, are
-    joined on in front of the key."""
+    (event_stream_dataset.py:213-266)."""
     out_col = out_col or value_col
-    keys = [*(by or []), key_col]
     b = bounds.select(
-        *keys,
+        key_col,
         *[
             (F.col(c) if c in bounds.columns else F.lit(None)).alias(f"_b_{c}")
             for c in BOUND_COLS
         ],
     )
-    joined = vals.join(F.broadcast(b), keys, "left")
+    joined = vals.join(F.broadcast(b), key_col, "left")
     expr = drop_or_censor(F.col(value_col), *[F.col(f"_b_{c}") for c in BOUND_COLS])
     return joined.withColumn(out_col, expr).drop(*[f"_b_{c}" for c in BOUND_COLS])
 
 
-def merge_unit_inferred_bounds(bounds: DataFrame, unit_col: str = "unit") -> DataFrame:
+def merge_unit_inferred_bounds(bounds: DataFrame) -> DataFrame:
     """Unit-implied bounds merge (event_stream_dataset.py:64-141).
 
     Tightens ``drop_lower_bound`` to max(existing, unit-implied) and
@@ -124,7 +121,7 @@ def merge_unit_inferred_bounds(bounds: DataFrame, unit_col: str = "unit") -> Dat
         )
         for u, (lo, loi, hi, hii) in UNIT_BOUNDS.items()
     ]
-    lookup = F.filter(F.array(*entries), lambda e: e["u"] == F.col(unit_col))
+    lookup = F.filter(F.array(*entries), lambda e: e["u"] == F.col("unit"))
     inferred = F.get(lookup, 0)  # null struct when unit unknown (ANSI-safe)
 
     def pick(old_b, old_i, new_b, new_i, minmax):
@@ -164,9 +161,9 @@ def merge_unit_inferred_bounds(bounds: DataFrame, unit_col: str = "unit") -> Dat
     )
 
 
-def restrict_event_types(df: DataFrame, event_types: list[str], type_col: str = "event_type") -> DataFrame:
+def restrict_event_types(df: DataFrame, event_types: list[str]) -> DataFrame:
     """P2 (partial): conjunctive event-type membership filter."""
-    return df.filter(F.col(type_col).isin(event_types))
+    return df.filter(F.col("event_type").isin(event_types))
 
 
 def restrict_subjects(df: DataFrame, subject_ids, subject_col: str = "subject_id") -> DataFrame:

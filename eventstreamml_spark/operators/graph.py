@@ -100,8 +100,6 @@ def triangle_count(
 def random_walks(
     edges: DataFrame,
     n_steps: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_degree: int | None = None,
 ) -> DataFrame:
     """Deterministic uniform random-walk corpus generation — the
@@ -121,7 +119,7 @@ def random_walks(
 
     Emits (start, path, end) with path as '->'-joined node ids; walks
     from isolated nodes don't exist (no neighbors to hop to)."""
-    und = canonical_edges(edges, src_col, dst_col)
+    und = canonical_edges(edges)
     both = und.select(
         F.col("lo").alias("node"), F.col("hi").alias("nbr")
     ).unionAll(und.select(F.col("hi").alias("node"), F.col("lo").alias("nbr")))
@@ -172,8 +170,6 @@ def random_walks(
 def common_neighbor_link_scores(
     edges: DataFrame,
     top_k: int = 10,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_hub_degree: int | None = None,
 ) -> DataFrame:
     """Jaccard common-neighbor link prediction over an undirected
@@ -191,7 +187,7 @@ def common_neighbor_link_scores(
     set → degree lookups. Every join is an equi-join on node ids;
     the score is an exact ratio of integers, so cross-engine ordering
     is bit-stable."""
-    und = canonical_edges(edges, src_col, dst_col)
+    und = canonical_edges(edges)
     adj = und.select(
         F.col("lo").alias("a"), F.col("hi").alias("b")
     ).unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
@@ -261,9 +257,6 @@ def kcore_peel_stats(
     edges: DataFrame,
     k: int = 3,
     rounds: int = 3,
-    src_col: str = "lo",
-    dst_col: str = "hi",
-    checkpoint_partitions: int | None = 1,
 ) -> DataFrame:
     """Fixed-round k-core peeling audit: repeatedly drop nodes with
     degree < k and the edges touching them, reporting (round, n_nodes,
@@ -278,7 +271,7 @@ def kcore_peel_stats(
     k), round ``rounds`` IS the k-core. All outputs are integer
     counts — engine-exact."""
     e = edges.select(
-        F.col(src_col).alias("lo"), F.col(dst_col).alias("hi")
+        F.col("lo").alias("lo"), F.col("hi").alias("hi")
     )
     out_rows = []
     cur = e
@@ -305,14 +298,10 @@ def kcore_peel_stats(
             # cut lineage every round: the per-round stats rows each
             # re-evaluate their own depth of the peel otherwise
             # (measured at sf0.1: 16.98s plain / 6.63s cache-the-edges
-            # / 2.21s cache-rounds / 0.52s THIS). checkpoint_partitions
-            # defaults to 1 for the audit's hashed/sampled graphs; pass
-            # None to keep the natural partitioning on a graph too big
-            # for one partition — the lineage cut is the part that
-            # matters at every scale.
-            if checkpoint_partitions:
-                cur = cur.coalesce(checkpoint_partitions)
-            cur = cur.localCheckpoint()
+            # / 2.21s cache-rounds / 0.52s THIS). One partition suits
+            # the audit's hashed/sampled graphs; the lineage cut is the
+            # part that matters at every scale.
+            cur = cur.coalesce(1).localCheckpoint()
     res = out_rows[0]
     for s in out_rows[1:]:
         res = res.unionByName(s)
@@ -322,8 +311,6 @@ def kcore_peel_stats(
 def adamic_adar_link_scores(
     edges: DataFrame,
     top_k: int = 10,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_hub_degree: int | None = None,
 ) -> DataFrame:
     """Adamic-Adar link prediction over an undirected graph: for every
@@ -337,7 +324,7 @@ def adamic_adar_link_scores(
     is floor-quantized ONCE to integer micro-units (deg >= 2 inside a
     wedge, so ln > 0), and pair scores are exact BIGINT sums of those
     — ordering can never disagree across engines."""
-    und = canonical_edges(edges, src_col, dst_col)
+    und = canonical_edges(edges)
     adj = und.select(
         F.col("lo").alias("a"), F.col("hi").alias("b")
     ).unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))
@@ -391,8 +378,6 @@ def adamic_adar_link_scores(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Synchronous label propagation (fixed ``rounds`` sweeps): every
     node starts labeled with its own id; each sweep it adopts the most
@@ -404,7 +389,7 @@ def label_propagation(
     group-by + one per-node rank per sweep; lineage depth is
     ``rounds`` (bounded; for rounds > ~6 interleave localCheckpoint
     per the pagerank/kcore lesson)."""
-    und = canonical_edges(edges, src_col, dst_col)
+    und = canonical_edges(edges)
     adj = und.select(
         F.col("lo").alias("a"), F.col("hi").alias("b")
     ).unionAll(und.select(F.col("hi").alias("a"), F.col("lo").alias("b")))

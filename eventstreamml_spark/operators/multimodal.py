@@ -44,14 +44,12 @@ IMAGE_FEATURES_SCHEMA = (
 )
 
 
-def binary_metadata(
-    df: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def binary_metadata(df: DataFrame) -> DataFrame:
     """Cheap metadata over binary payloads — pure JVM expressions
     (no decode): byte length + content digest."""
-    p = F.col(payload_col)
+    p = F.col("payload")
     return df.select(
-        F.col(id_col),
+        F.col("media_id"),
         F.length(p).alias("n_bytes"),
         F.sha2(p, 256).alias("sha256"),
     )
@@ -346,9 +344,9 @@ def image_ahash(df: DataFrame, fake: bool = False) -> DataFrame:
     return df.mapInPandas(run, schema=AHASH_SCHEMA)
 
 
-def dct_weights_q10(n_freq: int = 4, size: int = 8) -> list[tuple[int, int, int]]:
+def dct_weights_q10() -> list[tuple[int, int, int]]:
     """Integer Q10 (×1024, round-to-nearest) 1-D DCT-II basis weights
-    w[u][i] = round(cos((2i+1)·u·π/(2·size)) · 1024) for u < n_freq —
+    w[u][i] = round(cos((2i+1)·u·π/16) · 1024) for u < 4, i < 8 —
     shared VERBATIM by the Spark operator and the DuckDB oracle so the
     2-D coefficient Σ pixel·w[u][i]·w[v][j] is exact INTEGER
     arithmetic on both engines (no libm cos at query time; the cosine
@@ -356,22 +354,20 @@ def dct_weights_q10(n_freq: int = 4, size: int = 8) -> list[tuple[int, int, int]
     import math
 
     return [
-        (u, i, int(round(math.cos((2 * i + 1) * u * math.pi / (2 * size)) * 1024)))
-        for u in range(n_freq)
-        for i in range(size)
+        (u, i, int(round(math.cos((2 * i + 1) * u * math.pi / 16) * 1024)))
+        for u in range(4)
+        for i in range(8)
     ]
 
 
 def image_phash_dct(
     media: DataFrame,
     id_col: str = "media_id",
-    n_freq: int = 4,
-    size: int = 8,
 ) -> DataFrame:
     """Perceptual DCT hash (pHash) plumbing over deterministic fake
-    grayscale tiles: per asset, an ``size×size`` pixel grid derives
+    grayscale tiles: per asset, an 8×8 pixel grid derives
     from md5 bytes (the honest stand-in while real decode is
-    PIL-gated), the top ``n_freq×n_freq`` 2-D DCT coefficients are
+    PIL-gated), the top 4×4 2-D DCT coefficients are
     computed as exact integer sums against the Q10 basis literals, and
     the hash packs the sign bits of the AC coefficients.
 
@@ -381,14 +377,14 @@ def image_phash_dct(
     single pixel-array column, plus the DC term from the pixel sum
     (the inline 16x64 term form blew janino's 64KB method limit and
     ran interpreted; the join-fan-out
-    alternative shuffles size²·n_freq² rows per asset through a
+    alternative shuffles 8²·4² rows per asset through a
     group-by, measured 6.1s at sf0.1). Building the tree through the
     Python Column API would cost a py4j round trip per node (the
     pq_encode SQL-text lesson). All arithmetic is integer, so the hash is
     engine- and partitioning-exact by construction. At real-decode
     scale the pixel projection is replaced by the Arrow-batched
     decoder; everything downstream is unchanged."""
-    w = {(u, i): wt for u, i, wt in dct_weights_q10(n_freq, size)}
+    w = {(u, i): wt for u, i, wt in dct_weights_q10()}
     # pixels land in ONE array column and each coefficient is a
     # loop-sized integer fold against a literal weight array: the
     # earlier 16x64 inline term projection blew janino's 64KB method
@@ -397,8 +393,8 @@ def image_phash_dct(
     px_cells = [
         f"CAST(conv(substring(md5(concat(CAST(`{id_col}` AS STRING),"
         f" '-{i}-{j}')), 1, 2), 16, 10) AS BIGINT) % 256"
-        for i in range(size)
-        for j in range(size)
+        for i in range(8)
+        for j in range(8)
     ]
     # The pixel sum _s gives every pixel a second use in the same
     # projection, so whole-stage codegen computes each one once in its
@@ -417,28 +413,28 @@ def image_phash_dct(
             " cast(0 as bigint), (a, z) -> a + z) AS _c_{}_{}".format(
                 ", ".join(
                     f"{w[(u, i)] * w[(v, j)]}L"
-                    for i in range(size)
-                    for j in range(size)
+                    for i in range(8)
+                    for j in range(8)
                 ),
                 u,
                 v,
             )
         )
-        for u in range(n_freq)
-        for v in range(n_freq)
+        for u in range(4)
+        for v in range(4)
         if (u, v) != (0, 0)
     ]
     ac_bits = " + ".join(
-        f"(CASE WHEN _c_{u}_{v} > 0 THEN CAST({1 << (u * n_freq + v - 1)}"
+        f"(CASE WHEN _c_{u}_{v} > 0 THEN CAST({1 << (u * 4 + v - 1)}"
         f" AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for u in range(n_freq)
-        for v in range(n_freq)
+        for u in range(4)
+        for v in range(4)
         if (u, v) != (0, 0)
     )
     n_pos = " + ".join(
         f"(CASE WHEN _c_{u}_{v} > 0 THEN 1 ELSE 0 END)"
-        for u in range(n_freq)
-        for v in range(n_freq)
+        for u in range(4)
+        for v in range(4)
         if (u, v) != (0, 0)
     )
     return (

@@ -101,14 +101,12 @@ def orphaned_keys(
     child: DataFrame,
     parent: DataFrame,
     key: str,
-    parent_key: str | None = None,
 ) -> DataFrame:
     """Referential integrity: child rows whose ``key`` has no match in
     ``parent`` (nulls excluded — null FKs are a null-rate concern, not
     an orphan). One left-anti join, broadcast when the parent's key
     column is small."""
-    parent_key = parent_key or key
-    p = parent.select(F.col(parent_key).alias(key)).distinct()
+    p = parent.select(key).distinct()
     return child.filter(F.col(key).isNotNull()).join(p, key, "left_anti")
 
 
@@ -117,13 +115,12 @@ def population_stability_index(
     current: DataFrame,
     value_col: str,
     breaks: list[float],
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Distribution-drift detection between two slices of a numeric
     column: fixed-break histograms of both sides and the per-bin
     Population Stability Index contribution
     ``(p − q)·ln(p/q)`` (p = current share, q = baseline share,
-    ``eps``-floored so empty bins stay finite). ``sum(psi)`` > 0.2 is
+    floored at 1e-6 so empty bins stay finite). ``sum(psi)`` > 0.2 is
     the conventional "significant drift" alarm between a training
     snapshot and serving traffic.
 
@@ -171,8 +168,8 @@ def population_stability_index(
             F.coalesce("p_curr", F.lit(0.0)).alias("p_curr"),
         )
     )
-    pe = F.greatest(F.col("p_curr"), F.lit(eps))
-    qe = F.greatest(F.col("q_base"), F.lit(eps))
+    pe = F.greatest(F.col("p_curr"), F.lit(1e-6))
+    qe = F.greatest(F.col("q_base"), F.lit(1e-6))
     return out.withColumn("psi", (pe - qe) * F.log(pe / qe))
 
 
@@ -358,11 +355,7 @@ def cusum_changepoint(
     )
 
 
-def seasonal_hourweek_anomaly(
-    events: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def seasonal_hourweek_anomaly(events: DataFrame) -> DataFrame:
     """Seasonal-profile anomaly detection: per (type, hour-of-week)
     slot, compare the LAST week's event count against the mean/std of
     all prior weeks in the same slot — the weekly-seasonality z-score
@@ -380,11 +373,11 @@ def seasonal_hourweek_anomaly(
     Emits (type, hour_of_week, n_weeks, mean_c, std_c, last_c, z); z
     is NULL when the slot lacks ≥2 prior weeks or has zero variance.
     """
-    epoch = F.unix_timestamp(F.col(ts_col))
+    epoch = F.unix_timestamp(F.col("ts"))
     slot = ((epoch / 3600).cast("long") % 168).alias("hour_of_week")
     week = (epoch / (168 * 3600)).cast("long").alias("_wk")
-    counts = events.select(F.col(type_col), slot, week).groupBy(
-        type_col, "hour_of_week", "_wk"
+    counts = events.select(F.col("event_type"), slot, week).groupBy(
+        "event_type", "hour_of_week", "_wk"
     ).agg(F.count(F.lit(1)).alias("_c"))
     # Zero-fill: a week with NO events in a slot is a 0 observation —
     # the exact signal an anomaly detector must not silently drop from
@@ -393,15 +386,15 @@ def seasonal_hourweek_anomaly(
     wk_dim = counts.agg(
         F.min("_wk").alias("_w0"), F.max("_wk").alias("_w1")
     ).select(F.explode(F.sequence("_w0", "_w1")).alias("_wk"))
-    slot_dim = counts.select(type_col, "hour_of_week").distinct()
+    slot_dim = counts.select("event_type", "hour_of_week").distinct()
     wc = (
         slot_dim.crossJoin(F.broadcast(wk_dim))
-        .join(counts, [type_col, "hour_of_week", "_wk"], "left")
+        .join(counts, ["event_type", "hour_of_week", "_wk"], "left")
         .withColumn("_c", F.coalesce(F.col("_c"), F.lit(0)))
     )
     last_wk = wc.agg(F.max("_wk").alias("_last"))
     wc = wc.crossJoin(F.broadcast(last_wk))
-    base = wc.groupBy(type_col, "hour_of_week").agg(
+    base = wc.groupBy("event_type", "hour_of_week").agg(
         F.sum(F.when(F.col("_wk") < F.col("_last"), 1).otherwise(0))
         .cast("long")
         .alias("n_weeks"),
@@ -418,7 +411,7 @@ def seasonal_hourweek_anomaly(
         (F.coalesce(F.col("last_c"), F.lit(0)) - F.col("_mean")) / F.col("_std"),
     )
     return base.select(
-        type_col,
+        "event_type",
         "hour_of_week",
         "n_weeks",
         F.round("_mean", 6).alias("mean_c"),
@@ -431,7 +424,6 @@ def seasonal_hourweek_anomaly(
 def cascade_delete_audit(
     tables: list[tuple[str, DataFrame, str]],
     subjects: DataFrame,
-    subject_col: str = "subject_id",
 ) -> DataFrame:
     """Right-to-erasure cascade audit: given a deletion list of
     subjects and the tables referencing them, report per table how many
@@ -446,7 +438,7 @@ def cascade_delete_audit(
     execution share a plan shape."""
     outs = []
     keys = F.broadcast(
-        subjects.select(F.col(subject_col).alias("_k")).distinct()
+        subjects.select(F.col("subject_id").alias("_k")).distinct()
     )
     for name, df, key_col in tables:
         joined = df.join(

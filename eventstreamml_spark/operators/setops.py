@@ -35,7 +35,6 @@ def assign_splits(
     fractions: dict[str, float],
     seed: int = 1,
     subject_col: str = "subject_id",
-    out_col: str = "split",
 ) -> DataFrame:
     """O6: disjoint split assignment table ``(subject_id, split)``.
 
@@ -59,7 +58,7 @@ def assign_splits(
     for n, c in cuts:  # ascending cut order — first match wins
         expr = F.when(u < F.lit(c), F.lit(n)) if expr is None else expr.when(u < F.lit(c), F.lit(n))
     expr = expr.otherwise(F.lit(names[-1]) if acc >= 1.0 - 1e-9 else F.lit("held_out"))
-    return subjects.select(subject_col).distinct().withColumn(out_col, expr)
+    return subjects.select(subject_col).distinct().withColumn("split", expr)
 
 
 def assign_splits_exact(
@@ -67,7 +66,6 @@ def assign_splits_exact(
     fractions: dict[str, float],
     seed: int = 1,
     subject_col: str = "subject_id",
-    out_col: str = "split",
     id_strategy: str = "auto",
 ) -> DataFrame:
     """O6, exact-size variant: reproduce the reference's
@@ -114,8 +112,8 @@ def assign_splits_exact(
     for name, b in reversed(list(zip(names, bounds))):
         expr = F.when(F.col("_pos") < F.lit(b), F.lit(name)).otherwise(expr)
     return (
-        pos.withColumn(out_col, expr)
-        .filter(F.col(out_col).isNotNull())
+        pos.withColumn("split", expr)
+        .filter(F.col("split").isNotNull())
         .drop("_pos")
     )
 
@@ -149,8 +147,6 @@ def union_distinct(*dfs: DataFrame) -> DataFrame:
 def stratified_sample(
     df: DataFrame,
     fractions: dict[str, float] | float,
-    stratum_col: str = "event_type",
-    id_col: str = "event_id",
     seed: int = 1,
 ) -> DataFrame:
     """Deterministic stratified downsampling: keep a row iff its
@@ -166,12 +162,12 @@ def stratified_sample(
     one global float. Same id-domain caveat as split_uniform: ids must
     stay well under 2^31 for overflow-free arithmetic.
     """
-    u = split_uniform(id_col, seed)
+    u = split_uniform("event_id", seed)
     if isinstance(fractions, float):
         return df.filter(u < F.lit(fractions))
     expr = None
     for name, frac in fractions.items():
-        cond = (F.col(stratum_col) == name) & (u < F.lit(frac))
+        cond = (F.col("event_type") == name) & (u < F.lit(frac))
         expr = cond if expr is None else expr | cond
     return df.filter(expr)
 
@@ -180,7 +176,6 @@ def pps_systematic_sample(
     df: DataFrame,
     n_target: int,
     size_col: str,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Probability-proportional-to-size systematic sample: order rows
     by a content-free md5 of the id (deterministic shuffle), take the
@@ -198,11 +193,11 @@ def pps_systematic_sample(
     absorb several grid lines each (they still count once). The prefix sum
     runs over the md5 order — a single global window over (id, size)
     pairs; at 100 TB shard it per stratum like pack_documents."""
-    h = F.md5(F.col(id_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     w = W.orderBy(h).rowsBetween(W.unboundedPreceding, W.currentRow)
     tot = df.select(F.sum(F.col(size_col).cast("long")).alias("_tot"))
     cum = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(size_col).cast("long").alias("_w"),
         F.sum(F.col(size_col).cast("long")).over(w).alias("_cum"),
     )
@@ -213,7 +208,7 @@ def pps_systematic_sample(
     )
     crosses = F.expr("(_cum - _w) DIV _step") < F.expr("_cum DIV _step")
     return out.filter(crosses).select(
-        id_col, F.col("_w").alias("size"), F.col("_cum").alias("cum_size")
+        "doc_id", F.col("_w").alias("size"), F.col("_cum").alias("cum_size")
     )
 
 
@@ -309,7 +304,6 @@ def temporal_embargo_split(
     events: DataFrame,
     test_frac: float = 0.2,
     embargo_us: int = 3_600_000_000,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Leakage-safe temporal split: the newest ``test_frac`` of events
     (by exact time quantile) becomes test, an ``embargo_us`` gap before
@@ -321,7 +315,7 @@ def temporal_embargo_split(
     The cutoff is one exact-percentile aggregate broadcast as a
     one-row relation (the engine's scalar-crossJoin convention); the
     split itself is a pure projection — no sort, no repartition."""
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     cut = events.agg(
         F.percentile(us, F.lit(1.0 - test_frac)).alias("_cut")
     )

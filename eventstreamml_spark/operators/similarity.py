@@ -34,10 +34,10 @@ def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int:
     )
 
 
-def with_embedding_dim(df: DataFrame, dim: int, vec_col: str = "embedding") -> DataFrame:
+def with_embedding_dim(df: DataFrame, dim: int) -> DataFrame:
     """Stamp ``{"dim": N}`` schema metadata on the embedding column so
     downstream operators never need a dim parameter or a row peek."""
-    return df.withColumn(vec_col, F.col(vec_col).alias(vec_col, metadata={"dim": dim}))
+    return df.withColumn("embedding", F.col("embedding").alias("embedding", metadata={"dim": dim}))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -72,18 +72,16 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
     corpus, rank per query. Returns (query_id, neighbor_id, cosine, rk)
     excluding self-matches. Ties broken by neighbor id for determinism.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), unit_normalize(F.col(vec_col)).alias("_qv")
+        F.col("vec_id").alias("query_id"), unit_normalize(F.col("embedding")).alias("_qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), unit_normalize(F.col(vec_col)).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), unit_normalize(F.col("embedding")).alias("_cv")
     )
     scored = (
         F.broadcast(q)
@@ -128,10 +126,7 @@ def lsh_topk(
     corpus: DataFrame,
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 42,
     dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_probe_bits: int = 0,
 ) -> DataFrame:
     """Approximate cosine top-k: hyperplane LSH bucketing + within-
@@ -150,12 +145,12 @@ def lsh_topk(
     :func:`embedding_dim`) — plan construction never launches a job.
     """
     if dim is None:
-        dim = embedding_dim(corpus, vec_col)
-    planes = _hyperplanes(dim, n_planes, seed)
+        dim = embedding_dim(corpus)
+    planes = _hyperplanes(dim, n_planes, 42)
     # unit-normalize once per row (sign pattern unchanged: positive
     # scale) so the within-bucket rerank is a dot, not a cosine refold
     q = queries.select(
-        F.col(id_col).alias("query_id"), unit_normalize(F.col(vec_col)).alias("_qv")
+        F.col("vec_id").alias("query_id"), unit_normalize(F.col("embedding")).alias("_qv")
     ).withColumn("bucket", hyperplane_bucket(F.col("_qv"), planes))
     if n_probe_bits >= 1:
         probes = F.array(
@@ -164,7 +159,7 @@ def lsh_topk(
         )
         q = q.withColumn("bucket", F.explode(probes))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), unit_normalize(F.col(vec_col)).alias("_cv")
+        F.col("vec_id").alias("neighbor_id"), unit_normalize(F.col("embedding")).alias("_cv")
     ).withColumn("bucket", hyperplane_bucket(F.col("_cv"), planes))
     scored = (
         F.broadcast(q)
@@ -190,76 +185,51 @@ def fit_ivf_centroids(
     n_cells: int = 16,
     seed: int = 42,
     max_iter: int = 10,
-    vec_col: str = "embedding",
-    strategy: str = "sample",
     sample_cap: int = 16384,
 ) -> DataFrame:
     """Coarse quantizer fit. Returns (cell_id int, centroid array<double>).
 
-    ``strategy="sample"`` (default, the IVF-standard approach — FAISS
-    trains its coarse quantizer on a bounded sample): pull at most
-    ``sample_cap`` vectors to the driver with one job and run Lloyd's
-    iterations in numpy. A coarse quantizer partitions space; it does
-    not need to see every vector — cell quality converges long before
-    the sample does, so this is the 100 TB path too, with a training
-    set that stays O(sample_cap × dim) regardless of corpus size. One
-    Spark job total.
-
-    ``strategy="mllib"``: MLlib KMeans over the full corpus (each Lloyd
-    iteration is a distributed job). Use when cells must be fit on the
-    complete distribution; at bench scale job-scheduling overhead
-    dominates.
+    The IVF-standard approach (FAISS trains its coarse quantizer on a
+    bounded sample): pull at most ``sample_cap`` vectors to the driver
+    with one job and run Lloyd's iterations in numpy. A coarse
+    quantizer partitions space; it does not need to see every vector —
+    cell quality converges long before the sample does, so this is the
+    100 TB path too, with a training set that stays
+    O(sample_cap × dim) regardless of corpus size. One Spark job total.
     """
+    import numpy as np
+
     spark = corpus.sparkSession
     # NULL vectors would reach the driver-side kmeans as None and turn
     # the sample matrix into object dtype (the pca_top_component
     # lesson): fit on non-null rows only
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    if strategy == "sample":
-        import numpy as np
-
-        n = corpus.count()
-        frac = min(1.0, (sample_cap * 1.25) / max(1, n))
-        sampled = corpus.select(vec_col) if frac >= 1.0 else corpus.select(vec_col).sample(
-            fraction=frac, seed=seed
-        )
-        x = np.asarray(
-            [r[0] for r in sampled.limit(sample_cap).collect()], dtype="float64"
-        )
-        rng = np.random.default_rng(seed)
-        k = min(n_cells, len(x))
-        cent = x[rng.choice(len(x), size=k, replace=False)]
-        for _ in range(max_iter):
-            # assign: cosine == dot on unit-normalized centroids
-            cn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-            assign = (x @ cn.T).argmax(axis=1)
-            new = np.stack(
-                [
-                    x[assign == c].mean(axis=0) if (assign == c).any() else cent[c]
-                    for c in range(k)
-                ]
-            )
-            if np.allclose(new, cent, atol=1e-9):
-                cent = new
-                break
-            cent = new
-        rows = [(i, [float(v) for v in c]) for i, c in enumerate(cent)]
-        return spark.createDataFrame(rows, "cell_id int, centroid array<double>")
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    # a coarse quantizer needs rough cells, not converged clustering:
-    # random init (kmeans|| costs extra passes) and few, fat partitions
-    # (each Lloyd iteration is a job — task overhead dominates on small
-    # inputs)
-    feats = feats.coalesce(max(2, min(8, feats.sparkSession.sparkContext.defaultParallelism // 4)))
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="features", initMode="random"
+    corpus = corpus.filter(F.col("embedding").isNotNull())
+    n = corpus.count()
+    frac = min(1.0, (sample_cap * 1.25) / max(1, n))
+    sampled = corpus.select("embedding") if frac >= 1.0 else corpus.select("embedding").sample(
+        fraction=frac, seed=seed
     )
-    model = km.fit(feats)
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
+    x = np.asarray(
+        [r[0] for r in sampled.limit(sample_cap).collect()], dtype="float64"
+    )
+    rng = np.random.default_rng(seed)
+    k = min(n_cells, len(x))
+    cent = x[rng.choice(len(x), size=k, replace=False)]
+    for _ in range(max_iter):
+        # assign: cosine == dot on unit-normalized centroids
+        cn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+        assign = (x @ cn.T).argmax(axis=1)
+        new = np.stack(
+            [
+                x[assign == c].mean(axis=0) if (assign == c).any() else cent[c]
+                for c in range(k)
+            ]
+        )
+        if np.allclose(new, cent, atol=1e-9):
+            cent = new
+            break
+        cent = new
+    rows = [(i, [float(v) for v in c]) for i, c in enumerate(cent)]
     return spark.createDataFrame(rows, "cell_id int, centroid array<double>")
 
 
@@ -294,8 +264,6 @@ def _nearest_cells(vec: Column, centroids: list[tuple[int, list[float]]], n: int
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Index build: each vector lands in its nearest cell. At scale,
     write partitioned by cell_id so probes prune to the touched cells.
@@ -327,7 +295,7 @@ def ivf_assign(
 
     def assign(batches):
         for pdf in batches:
-            v = np.array(list(pdf[vec_col]), dtype="float64")
+            v = np.array(list(pdf["embedding"]), dtype="float64")
             best = ids[np.argmax(v @ m.T, axis=1)]
             pdf = pdf.copy()
             pdf["cell_id"] = best.astype("int32")
@@ -342,8 +310,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF search: probe each query's ``n_probe`` nearest cells, exact
     cosine rerank within the probed candidate set. ``n_probe=n_cells``
@@ -352,10 +318,10 @@ def ivf_topk(
     on cell_id — the corpus side never broadcasts or replicates."""
     cents = [(r["cell_id"], r["centroid"]) for r in centroids.collect()]
     q = queries.select(
-        F.col(id_col).alias("query_id"), unit_normalize(F.col(vec_col)).alias("_qv")
+        F.col("vec_id").alias("query_id"), unit_normalize(F.col("embedding")).alias("_qv")
     ).withColumn("cell_id", F.explode(_nearest_cells(F.col("_qv"), cents, n_probe)))
     c = corpus_assigned.select(
-        "cell_id", F.col(id_col).alias("neighbor_id"), unit_normalize(F.col(vec_col)).alias("_cv")
+        "cell_id", F.col("vec_id").alias("neighbor_id"), unit_normalize(F.col("embedding")).alias("_cv")
     )
     # Round-12 measured dead-end: routing this per-pair dot through
     # a bit-identical Arrow kernel lost the interleaved
@@ -379,9 +345,7 @@ def ivf_topk(
     )
 
 
-def quantize_embeddings_int8(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_embeddings_int8(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization (the storage/transport
     compression ANN indexes ship with): scale = max|x|/127, qᵢ =
     round(xᵢ/scale), so values span [-127, 127] and dequantization is
@@ -395,11 +359,11 @@ def quantize_embeddings_int8(
     bit-stable across engines. Pure higher-order expressions — zero
     shuffle, codegen'd, no Python.
     """
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
+    x = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     scale = (
         F.aggregate(x, F.lit(0.0), lambda a, v: F.greatest(a, F.abs(v))) / F.lit(127.0)
     )
-    base = df.select(F.col(id_col), x.alias("_x"), scale.alias("_scale")).filter(
+    base = df.select(F.col("vec_id"), x.alias("_x"), scale.alias("_scale")).filter(
         F.col("_scale") > 0
     )
     q = F.transform(F.col("_x"), lambda v: F.round(v / F.col("_scale"), 0))
@@ -409,7 +373,7 @@ def quantize_embeddings_int8(
     )
     acc = lambda arr: F.aggregate(arr, F.lit(0.0), lambda a, v: a + v)  # noqa: E731
     return base.select(
-        id_col,
+        "vec_id",
         F.round(F.col("_scale"), 6).alias("scale"),
         acc(q).cast("long").alias("q_sum"),
         acc(F.transform(q, F.abs)).cast("long").alias("q_abs_sum"),
@@ -417,12 +381,7 @@ def quantize_embeddings_int8(
     )
 
 
-def label_centroid_stats(
-    emb: DataFrame,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_centroid_stats(emb: DataFrame) -> DataFrame:
     """Per-label embedding centroids and intra-cluster cohesion:
     ``(label, n_vecs, centroid_norm, mean_cos)`` where ``mean_cos`` is
     the average cosine of each member to its label centroid — the
@@ -437,9 +396,9 @@ def label_centroid_stats(
     every shuffle row is a scalar triple, and the centroid relation is
     |labels|·dim rows — broadcast-sized for any real label space."""
     comp = emb.select(
-        F.col(label_col).alias("label"),
-        F.col(id_col).alias("vid"),
-        F.posexplode(F.col(vec_col)).alias("pos", "v"),
+        F.col("label").alias("label"),
+        F.col("vec_id").alias("vid"),
+        F.posexplode(F.col("embedding")).alias("pos", "v"),
     ).withColumn("v", F.col("v").cast("double"))
     cent = comp.groupBy("label", "pos").agg(F.avg("v").alias("c"))
     per_vec = (
@@ -461,9 +420,6 @@ def label_centroid_stats(
 def knn_label_agreement(
     emb: DataFrame,
     sample_mod: int = 11,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-quality probe: for a deterministic ~1/``sample_mod``
     hash-sample of vectors, find each one's exact cosine 1-NN among
@@ -476,28 +432,28 @@ def knn_label_agreement(
     past it once — the same O(|sample|·|C|) shape as cosine_topk. Ties
     break by ascending neighbor id so both engines pick the same
     neighbor. Returns ``(vec_id, label, nn_id, nn_label, agree)``."""
-    bucket = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10).cast(
+    bucket = F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10).cast(
         "long"
     ) % sample_mod
     q = emb.filter(bucket == 0).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias(vec_col)
+        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("embedding")
     )
     # score on the Arrow/BLAS path (one matmul per corpus batch against
     # the broadcast-small sample) — measured ~5x the interpreted
     # HOF-dot cross join at dim 64; identical results, same tie-break
-    top1 = pandas_cosine_topk(q, emb, k=1, id_col=id_col, vec_col=vec_col)
-    labels = emb.select(F.col(id_col), F.col(label_col))
+    top1 = pandas_cosine_topk(q, emb, k=1)
+    labels = emb.select(F.col("vec_id"), F.col("label"))
     return (
         top1.join(
             labels.select(
-                F.col(id_col).alias("query_id"), F.col(label_col).alias("label")
+                F.col("vec_id").alias("query_id"), F.col("label").alias("label")
             ),
             "query_id",
         )
         .join(
             labels.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(label_col).alias("nn_label"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("label").alias("nn_label"),
             ),
             "neighbor_id",
         )
@@ -514,9 +470,6 @@ def knn_label_agreement(
 def contrastive_triplets(
     emb: DataFrame,
     sample_mod: int = 11,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Mine (anchor, positive, negative) training triplets for metric
     learning: for each md5-mod-sampled anchor, the positive is its
@@ -531,17 +484,17 @@ def contrastive_triplets(
     across runs and engines. Returns (anchor_id, label, pos_id,
     pos_cos, neg_id)."""
     bucket = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10
+        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
     ).cast("long") % sample_mod
     a = emb.filter(bucket == 0).select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(label_col).alias("label"),
-        unit_normalize(F.col(vec_col)).alias("av"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("label").alias("label"),
+        unit_normalize(F.col("embedding")).alias("av"),
     )
     c = emb.select(
-        F.col(id_col).alias("cid"),
-        F.col(label_col).alias("clabel"),
-        unit_normalize(F.col(vec_col)).alias("cv"),
+        F.col("vec_id").alias("cid"),
+        F.col("label").alias("clabel"),
+        unit_normalize(F.col("embedding")).alias("cv"),
     )
     joined = c.crossJoin(F.broadcast(a)).filter(F.col("cid") != F.col("anchor_id"))
     same = joined.filter(F.col("clabel") == F.col("label")).select(
@@ -575,8 +528,6 @@ def pandas_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k on the Arrow path: the (broadcast-small)
     query matrix rides to executors inside a ``mapInPandas`` closure
@@ -593,14 +544,14 @@ def pandas_cosine_topk(
     import numpy as np
     import pandas as pd
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in q_rows], dtype="int64")
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype="float64")
+    q_rows = queries.select("vec_id", "embedding").collect()
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype="int64")
+    q_mat = np.array([r["embedding"] for r in q_rows], dtype="float64")
     q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
 
     def score(batches):
         for pdf in batches:
-            c_mat = np.array(list(pdf[vec_col]), dtype="float64")
+            c_mat = np.array(list(pdf["embedding"]), dtype="float64")
             norms = np.linalg.norm(c_mat, axis=1, keepdims=True)
             c_mat = c_mat / norms
             sims = c_mat @ q_mat.T  # (batch, n_queries)
@@ -608,12 +559,12 @@ def pandas_cosine_topk(
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(q_ids, n_b),
-                    "neighbor_id": np.tile(pdf[id_col].to_numpy(), len(q_ids)),
+                    "neighbor_id": np.tile(pdf["vec_id"].to_numpy(), len(q_ids)),
                     "cosine": sims.T.reshape(-1),
                 }
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
+    scored = corpus.select("vec_id", "embedding").mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
     )
     scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -632,9 +583,7 @@ def fit_pq_codebooks(
     m: int = 8,
     n_codes: int = 16,
     seed: int = 42,
-    max_iter: int = 8,
     sample_cap: int = 16384,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization codebook fit: split the vector space into
     ``m`` contiguous subspaces and run Lloyd's iterations per subspace
@@ -645,13 +594,13 @@ def fit_pq_codebooks(
     Returns (subspace int, code int, centroid array<double>)."""
     import numpy as np
 
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    corpus = corpus.filter(F.col("embedding").isNotNull())
     n = corpus.count()
     frac = min(1.0, (sample_cap * 1.25) / max(1, n))
     sampled = (
-        corpus.select(vec_col)
+        corpus.select("embedding")
         if frac >= 1.0
-        else corpus.select(vec_col).sample(fraction=frac, seed=seed)
+        else corpus.select("embedding").sample(fraction=frac, seed=seed)
     )
     x = np.asarray(
         [r[0] for r in sampled.limit(sample_cap).collect()], dtype="float64"
@@ -665,7 +614,7 @@ def fit_pq_codebooks(
         xs = x[:, s * d_sub : (s + 1) * d_sub]
         k = min(n_codes, len(xs))
         cent = xs[rng.choice(len(xs), size=k, replace=False)]
-        for _ in range(max_iter):
+        for _ in range(8):
             d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             new = np.stack(
@@ -691,8 +640,6 @@ def fit_pq_codebooks(
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[tuple[int, int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Product-quantization encoding: every vector becomes ``m`` small
     codes (one per subspace, nearest sub-centroid by L2) — the 64×
@@ -738,11 +685,11 @@ def pq_encode(
     }
 
     base = corpus.selectExpr(
-        id_col, f"CAST({vec_col} AS array<double>) AS _v"
+        "vec_id", "CAST(embedding AS array<double>) AS _v"
     )
     schema = StructType(
         [
-            base.schema[id_col],
+            base.schema["vec_id"],
             StructField("subspace", IntegerType(), False),
             StructField("code", IntegerType(), False),
             StructField("_sq", DoubleType(), False),
@@ -755,7 +702,7 @@ def pq_encode(
             if n == 0:
                 continue
             X = np.stack(pdf["_v"].to_numpy())
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             id_out, sub_out, code_out, sq_out = [], [], [], []
             for s in subs:
                 Xs = X[:, s * d_sub : (s + 1) * d_sub]
@@ -771,7 +718,7 @@ def pq_encode(
                 sq_out.append(acc[np.arange(n), best])
             yield pd.DataFrame(
                 {
-                    id_col: np.concatenate(id_out),
+                    "vec_id": np.concatenate(id_out),
                     "subspace": np.concatenate(sub_out),
                     "code": np.concatenate(code_out),
                     "_sq": np.concatenate(sq_out),
@@ -779,7 +726,7 @@ def pq_encode(
             )
 
     return base.mapInPandas(encode, schema).select(
-        id_col,
+        "vec_id",
         "subspace",
         "code",
         F.round("_sq", 6).alias("sq_err"),
@@ -933,12 +880,7 @@ def pca_top_component(
     )
 
 
-def simplified_silhouette(
-    emb: DataFrame,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def simplified_silhouette(emb: DataFrame) -> DataFrame:
     """Per-label simplified silhouette (centroid-based): for each
     vector, a = euclidean distance to its OWN label centroid, b = min
     distance to any OTHER label centroid, s = (b − a)/max(a, b);
@@ -954,12 +896,12 @@ def simplified_silhouette(
     |labels|, not rows. NULL embeddings and NULL labels are filtered
     (the round-6 PCA lesson)."""
     base = emb.filter(
-        F.col(vec_col).isNotNull() & F.col(label_col).isNotNull()
+        F.col("embedding").isNotNull() & F.col("label").isNotNull()
     )
     comp = base.select(
-        F.col(label_col).alias("_own"),
-        F.col(id_col).alias("_vid"),
-        F.posexplode(F.col(vec_col)).alias("pos", "v"),
+        F.col("label").alias("_own"),
+        F.col("vec_id").alias("_vid"),
+        F.posexplode(F.col("embedding")).alias("pos", "v"),
     ).withColumn("v", F.col("v").cast("double"))
     cent = comp.groupBy(F.col("_own").alias("_cand"), "pos").agg(
         F.avg("v").alias("c")
@@ -987,8 +929,6 @@ def simplified_silhouette(
 
 def item_item_cosine_topk(
     baskets: DataFrame,
-    user_col: str = "user_id",
-    item_col: str = "item_id",
     k: int = 3,
     max_basket: int = 15,
     min_cooccur: int = 2,
@@ -1027,7 +967,7 @@ def item_item_cosine_topk(
     # nothing persists across calls.
     b = (
         baskets.select(
-            F.col(user_col).alias("u"), F.col(item_col).alias("i")
+            F.col("user_id").alias("u"), F.col("item_id").alias("i")
         )
         .groupBy("u")
         .agg(

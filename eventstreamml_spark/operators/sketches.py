@@ -84,14 +84,13 @@ def quantile_sketch(
     value_col: str,
     by: str,
     probs: list[float] = (0.5, 0.95, 0.99),
-    bins_per_e: int = 20,
 ) -> DataFrame:
     """Log-binned mergeable quantile sketch: per-group quantile
     ESTIMATES with bounded relative error from a fixed-size histogram —
     the cluster-scale alternative to exact percentiles, whose sort (or
     full-value shuffle) is the thing that dies at 100 TB.
 
-    Positive values land in bin ⌊ln(x)·k⌋ (k = ``bins_per_e`` bins per
+    Positive values land in bin ⌊ln(x)·k⌋ (k = 20 bins per
     e-fold, so every estimate is within a factor e^(1/2k) ≈ 2.5% of the
     truth at k=20); the per-group histogram is the sketch — it merges
     by bucket addition (map-side combined), its size is bounded by the
@@ -114,7 +113,7 @@ def quantile_sketch(
     binned = pos.select(
         by,
         F.when(
-            F.col("_x") > 0, F.floor(F.log(F.col("_x")) * bins_per_e)
+            F.col("_x") > 0, F.floor(F.log(F.col("_x")) * 20)
         ).alias("_bin"),
     )
     hist = binned.groupBy(by, "_bin").agg(F.count(F.lit(1)).alias("_c"))
@@ -151,7 +150,7 @@ def quantile_sketch(
             by,
             "p",
             F.round(
-                F.exp((F.col("_qbin") + 0.5) / F.lit(float(bins_per_e))), 6
+                F.exp((F.col("_qbin") + 0.5) / F.lit(20.0)), 6
             ).alias("estimate"),
             F.col("n_pos").cast("long").alias("n_pos"),
             F.col("n_nonpos").cast("long").alias("n_nonpos"),

@@ -42,28 +42,23 @@ def salted_collect_list(
     keys: list[str],
     value_col: str,
     n_salt: int = 32,
-    sort_result: bool = True,
 ) -> DataFrame:
     """Two-phase ``collect_list`` that survives hot keys.
 
-    Returns one row per key tuple with column ``values``
-    (array of ``value_col``). ``sort_result`` sorts the final array —
-    ``collect_list`` order is nondeterministic anyway, so sorting is
-    the only way to get a stable result; pass False to skip the
-    per-row sort when downstream order doesn't matter.
+    Returns one row per key tuple with column ``values`` (array of
+    ``value_col``), sorted — ``collect_list`` order is nondeterministic
+    anyway, so sorting is the only way to get a stable result.
     """
     phase1 = (
         df.withColumn("_salt", _salt(n_salt))
         .groupBy(*keys, "_salt")
         .agg(F.collect_list(value_col).alias("_part"))
     )
-    out = (
+    return (
         phase1.groupBy(*keys)
         .agg(F.flatten(F.collect_list("_part")).alias("values"))
+        .withColumn("values", F.array_sort("values"))
     )
-    if sort_result:
-        out = out.withColumn("values", F.array_sort("values"))
-    return out
 
 
 def salted_collect_set(
@@ -92,7 +87,6 @@ def salted_join(
     right: DataFrame,
     key: str,
     n_salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Manually salted equi-join for hot keys: the (large) left side
     gets a random salt in ``[0, n_salt)``, the (smaller but
@@ -106,14 +100,9 @@ def salted_join(
     right side shuffles n_salt× — use when AQE skew-splitting is
     unavailable (streaming joins, non-AQE engines) or when a key is so
     hot a single split still exceeds one task; otherwise prefer AQE,
-    which pays the replication only for the skewed partitions.
-    ``how`` supports inner/left (outer semantics preserved: an
-    unmatched left row is unmatched under every salt)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
+    which pays the replication only for the skewed partitions."""
     l = left.withColumn("_salt", _salt(n_salt))
     r = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     ).withColumn("_salt", F.col("_salt").cast(l.schema["_salt"].dataType))
-    out = l.join(r, [key, "_salt"], how)
-    return out.drop("_salt")
+    return l.join(r, [key, "_salt"]).drop("_salt")

@@ -13,6 +13,8 @@ describe paths); declared-new per SURVEY §2.8b.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 # Poisson(1) CDF thresholds: P(X <= k) for k = 0..5; a hash-uniform
@@ -46,8 +48,6 @@ def poisson1_hex16_thresholds() -> list[str]:
     sorts numerically), so no base conversion runs in the hot path.
     seg/65536 < CDF(k)  ⇔  seg < ⌈CDF(k)·65536⌉  ⇔  seg_str < hex4(⌈·⌉).
     Shared verbatim with the DuckDB oracle."""
-    import math
-
     return [format(math.ceil(c * 65536), "04x") for c in POISSON1_CDF]
 
 
@@ -57,7 +57,6 @@ def bootstrap_mean_ci(
     id_col: str,
     by: str,
     n_replicates: int = 48,
-    alpha: float = 0.05,
 ) -> DataFrame:
     """Percentile-bootstrap confidence interval for the per-group mean
     via the Poisson bootstrap (Poisson(1) replicate weights ≈
@@ -159,7 +158,7 @@ def bootstrap_mean_ci(
     rep = agg.select(
         by, "n", "mean_value", F.explode(means).alias("_rep_mean")
     )
-    lo, hi = alpha / 2.0, 1.0 - alpha / 2.0
+    lo, hi = 0.025, 1.0 - 0.025
     return rep.groupBy(by, "n", "mean_value").agg(
         F.round(F.percentile(F.col("_rep_mean"), F.lit(lo)), 6).alias("ci_lo"),
         F.round(F.percentile(F.col("_rep_mean"), F.lit(hi)), 6).alias("ci_hi"),
@@ -285,11 +284,7 @@ def welch_ttest(
 def conformal_calibration(
     scored: DataFrame,
     id_col: str,
-    label_col: str = "label",
-    score_col: str = "score",
     alpha: float = 0.1,
-    calib_frac: float = 0.5,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Split conformal prediction: hash-split the scored relation into
     calibration/test, take q̂ = the ⌈(n+1)(1−α)⌉-th smallest
@@ -298,8 +293,8 @@ def conformal_calibration(
     the conformal guarantee, up to the nonconformity rounding).
 
     The order statistic is computed WITHOUT a global sort: scores are
-    rounded to ``round_dp`` and histogrammed (one map-side-combined
-    groupBy — the distinct-value relation is bounded by 10^dp), and
+    rounded to 6 dp and histogrammed (one map-side-combined
+    groupBy — the distinct-value relation is bounded by 10^6), and
     q̂ reads off the cumulative histogram — same selection trick as the
     engine's quantile sketch, exact on the rounded grid. The split is
     the engine's portable md5-uniform, so calib membership is
@@ -308,10 +303,10 @@ def conformal_calibration(
 
     u = _hash_uniform(F.col(id_col).cast("string"), F.lit("conformal"))
     nc = F.round(
-        F.abs(F.col(label_col).cast("double") - F.col(score_col)), round_dp
+        F.abs(F.col("label").cast("double") - F.col("score")), 6
     )
     tagged = scored.select(
-        (u < calib_frac).alias("_calib"), nc.alias("_nc")
+        (u < 0.5).alias("_calib"), nc.alias("_nc")
     )
     hist = (
         tagged.filter(F.col("_calib"))
@@ -469,10 +464,9 @@ def spc_control_limits(
     df: DataFrame,
     value_col: str,
     by: str,
-    n_sigma: float = 3.0,
 ) -> DataFrame:
     """Statistical-process-control audit per group: mean, sample
-    stddev, ±``n_sigma``σ control limits, and the count of
+    stddev, ±3σ control limits, and the count of
     out-of-control points beyond each limit (Shewhart rule 1) — the
     monitoring primitive a metrics pipeline runs over every batch.
 
@@ -486,8 +480,8 @@ def spc_control_limits(
         F.avg(x).alias("_m"),
         F.stddev_samp(x).alias("_sd"),
     )
-    ucl = F.col("_m") + n_sigma * F.col("_sd")
-    lcl = F.col("_m") - n_sigma * F.col("_sd")
+    ucl = F.col("_m") + 3.0 * F.col("_sd")
+    lcl = F.col("_m") - 3.0 * F.col("_sd")
     # eqNullSafe: a plain equi-join would drop the NULL-key group the
     # groupBy itself produced (same hazard bootstrap_mean_ci fixed)
     rows = df.filter(x.isNotNull())
@@ -521,23 +515,22 @@ def sample_ratio_mismatch(
     arm counts vs the expected split as a one-dof chi-square
     (χ² = Σ(O−E)²/E) — the first thing to audit before reading ANY
     experiment metric, since a biased assignment invalidates them all.
-    One aggregation pass; χ² > 3.84 ≈ p < 0.05."""
+    One aggregation pass; χ² > 3.84 ≈ p < 0.05. An empty input reads
+    0/0 counts with NULL fraction, χ² and flag."""
     agg = df.groupBy().agg(
-        F.sum(F.when(F.col(arm_col) == 0, 1).otherwise(0))
-        .cast("double")
-        .alias("_n0"),
-        F.sum(F.when(F.col(arm_col) == 1, 1).otherwise(0))
-        .cast("double")
-        .alias("_n1"),
+        F.count(F.when(F.col(arm_col) == 0, 1)).cast("double").alias("_n0"),
+        F.count(F.when(F.col(arm_col) == 1, 1)).cast("double").alias("_n1"),
     )
     n = F.col("_n0") + F.col("_n1")
     e0 = n * (1.0 - expected_frac)
     e1 = n * expected_frac
-    chi2 = (F.col("_n0") - e0) ** 2 / e0 + (F.col("_n1") - e1) ** 2 / e1
+    chi2 = F.try_divide((F.col("_n0") - e0) ** 2, e0) + F.try_divide(
+        (F.col("_n1") - e1) ** 2, e1
+    )
     return agg.select(
         F.col("_n0").cast("long").alias("n_a"),
         F.col("_n1").cast("long").alias("n_b"),
-        F.round(F.col("_n0") / n, 6).alias("frac_a"),
+        F.round(F.try_divide(F.col("_n0"), n), 6).alias("frac_a"),
         F.round(chi2, 6).alias("chi2"),
         (chi2 > 3.841458820694124).alias("srm_flag"),
     )
@@ -741,6 +734,10 @@ def bayes_ab_beta_posterior(
 
 Z975 = 1.959963984540054  # Φ⁻¹(0.975)
 Z80 = 0.8416212335729143  # Φ⁻¹(0.80)
+# Wald SPRT bounds at α = β = 0.05: reject H0 at ln((1−β)/α), accept at
+# ln(β/(1−α)).
+SPRT_A = math.log((1.0 - 0.05) / 0.05)
+SPRT_B = math.log(0.05 / (1.0 - 0.05))
 
 
 def ab_power_mde(
@@ -1073,12 +1070,10 @@ def two_proportion_ztest(
     )
 
 
-def poisson_rate_ratio(
-    df: DataFrame, arm_col: str, exposure: dict | None = None
-) -> DataFrame:
+def poisson_rate_ratio(df: DataFrame, arm_col: str) -> DataFrame:
     """Poisson rate-ratio test between the two arms of ``arm_col``
-    (event counts n_a, n_b over exposures t_a, t_b — equal exposures
-    when ``exposure`` is None): RR = (n_b/t_b)/(n_a/t_a), the log-RR
+    (event counts n_a, n_b over equal exposures t_a = t_b = 1):
+    RR = (n_b/t_b)/(n_a/t_a), the log-RR
     normal approximation z = ln(RR)/√(1/n_a+1/n_b), two-sided p via
     the logistic Φ surrogate. The incident-rate comparison behind
     "did the error rate really double this week". Counts are exact
@@ -1091,9 +1086,7 @@ def poisson_rate_ratio(
         F.sum(F.when(F.col("_g") == F.col("_ga"), F.col("_n"))).alias("_na"),
         F.sum(F.when(F.col("_g") != F.col("_ga"), F.col("_n"))).alias("_nb"),
     )
-    ta = F.lit(float(exposure["a"])) if exposure else F.lit(1.0)
-    tb = F.lit(float(exposure["b"])) if exposure else F.lit(1.0)
-    rr = F.try_divide(F.col("_nb") / tb, F.col("_na") / ta)
+    rr = F.try_divide(F.col("_nb") / F.lit(1.0), F.col("_na") / F.lit(1.0))
     z = F.try_divide(
         F.log(rr), F.sqrt(1.0 / F.col("_na") + 1.0 / F.col("_nb"))
     )
@@ -1167,16 +1160,14 @@ def sprt_bernoulli(
     success_col: str,
     p0: float,
     p1: float,
-    alpha: float = 0.05,
-    beta: float = 0.05,
 ) -> DataFrame:
     """Wald's sequential probability ratio test (SPRT) for a Bernoulli
     rate, evaluated per arm on the DAILY aggregate sequence: after each
     day the cumulative log-likelihood ratio
     Λ_t = Σ c_d·ln(p1/p0) + (n_d−c_d)·ln((1−p1)/(1−p0)) crosses
     ln((1−β)/α) → reject H0 (rate is p1), crosses ln(β/(1−α)) →
-    accept H0, else continue — the always-valid peeking monitor a
-    batch z-test cannot provide.
+    accept H0 (α = β = 0.05: ``SPRT_A``/``SPRT_B``), else continue —
+    the always-valid peeking monitor a batch z-test cannot provide.
 
     Distributed shape: the raw stream folds map-side to the
     |arm × day| relation; the cumulative window runs per arm over that
@@ -1186,12 +1177,8 @@ def sprt_bernoulli(
     100 TB). ln() constants are Python-float literals injected into
     both engines, and day increments are integer-count multiples of
     them, so Λ is ulp-deterministic."""
-    import math
-
     l1 = math.log(p1 / p0)
     l0 = math.log((1.0 - p1) / (1.0 - p0))
-    a_bound = math.log((1.0 - beta) / alpha)
-    b_bound = math.log(beta / (1.0 - alpha))
     from pyspark.sql import Window as W
 
     daily = df.groupBy(
@@ -1211,8 +1198,8 @@ def sprt_bernoulli(
         F.col("_n").cast("long").alias("n_day"),
         F.col("_c").cast("long").alias("succ_day"),
         F.round(llr, 6).alias("llr_cum"),
-        F.when(llr >= F.lit(a_bound), F.lit("reject_h0"))
-        .when(llr <= F.lit(b_bound), F.lit("accept_h0"))
+        F.when(llr >= F.lit(SPRT_A), F.lit("reject_h0"))
+        .when(llr <= F.lit(SPRT_B), F.lit("accept_h0"))
         .otherwise(F.lit("continue"))
         .alias("decision"),
     )
@@ -1695,12 +1682,11 @@ def fisher_exact_2x2(
     df: DataFrame,
     row_col: str,
     col_col: str,
-    tol: float = 1e-7,
 ) -> DataFrame:
     """Fisher's exact test on the 2×2 contingency table of two binary
     columns: cell counts, the sample odds ratio, and the two-sided
     p-value (sum of hypergeometric pmfs ≤ the observed table's pmf,
-    the scipy/R convention, with a (1+tol) inclusion slack so a
+    the scipy/R convention, with a (1+1e-7) inclusion slack so a
     libm-vs-JVM ulp in ln can never flip a table in or out of the
     tail sum).
 
@@ -1812,7 +1798,7 @@ def fisher_exact_2x2(
         .agg(
             F.sum(
                 F.when(
-                    F.col("pmf") <= F.col("pmf_obs") * (1.0 + tol),
+                    F.col("pmf") <= F.col("pmf_obs") * (1.0 + 1e-7),
                     F.col("pmf"),
                 ).otherwise(0.0)
             ).alias("_p")

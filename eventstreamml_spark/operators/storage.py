@@ -47,7 +47,6 @@ def bucketed_pair(
     right: DataFrame,
     key: str,
     cache_tag: str,
-    n_buckets: int = 8,
     src_paths: tuple[str, ...] = (),
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize two relations as same-bucketed tables (content
@@ -69,13 +68,13 @@ def bucketed_pair(
     fp = ":".join(f"{p}@{os.path.getmtime(p)!r}" for p in src_paths)
     app = spark.sparkContext.applicationId
     key_hash = hashlib.md5(
-        f"{cache_tag}:{key}:{n_buckets}:{fp}:{app}".encode()
+        f"{cache_tag}:{key}:8:{fp}:{app}".encode()
     ).hexdigest()[:12]
     base = os.path.join(tempfile.gettempdir(), f"esml_bucketed_{key_hash}")
     names = (f"esml_b_{key_hash}_l", f"esml_b_{key_hash}_r")
     for name, df, sub in ((names[0], left, "l"), (names[1], right, "r")):
         if not spark.catalog.tableExists(name):
-            write_bucketed(df, name, key, n_buckets, os.path.join(base, sub))
+            write_bucketed(df, name, key, 8, os.path.join(base, sub))
     return spark.table(names[0]), spark.table(names[1])
 
 

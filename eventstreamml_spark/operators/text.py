@@ -54,28 +54,23 @@ def words_table(
     )
 
 
-def quality_features(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
-) -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-document quality features: char/word counts, mean word
     length, punctuation ratio, alpha ratio, stopword ratio.
 
     All pure expressions over one scan; the stopword ratio uses an
     array intersection against a literal array (no join, no UDF).
     """
-    text = F.col(text_col)
+    text = F.col("text")
     words = whitespace_tokens(text)
     n_chars = F.length(text)
     n_words = F.size(words)
     n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     n_alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))
-    sw = F.array(*[F.lit(w) for w in stopwords])
+    sw = F.array(*[F.lit(w) for w in DEFAULT_STOPWORDS])
     n_stop = F.size(F.filter(words, lambda w: F.array_contains(sw, F.lower(w))))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_words.alias("n_words"),
         (n_chars.cast("double") / n_words).alias("mean_word_len"),
@@ -94,40 +89,32 @@ DEFAULT_QUALITY_LOGIT = {
 }
 
 
-def quality_logit_score(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def quality_logit_score(docs: DataFrame) -> DataFrame:
     """FastText-classifier-style quality scoring as a pure expression:
     a fixed-weight logistic over the §2.8b quality features (the
     CCNet/LLaMA-pipeline "probability the page is reference-like"
-    gate, with the learned weights supplied as a dict rather than a
-    model file). score = σ(b + Σ wᵢ·xᵢ); ``keep`` = score ≥ 0.5.
+    gate, with the learned weights held in ``DEFAULT_QUALITY_LOGIT``
+    rather than a model file). score = σ(b + Σ wᵢ·xᵢ); ``keep`` =
+    score ≥ 0.5.
 
     Because the features and the dot product are all expressions over
     one scan, the filter costs a projection — no UDF, no model
-    broadcast, no shuffle. Swap in real trained weights without
+    broadcast, no shuffle. Real trained weights swap in without
     touching the plan."""
-    w = dict(DEFAULT_QUALITY_LOGIT)
-    if weights:
-        w.update(weights)
-    feats = quality_features(docs, id_col=id_col, text_col=text_col)
+    w = DEFAULT_QUALITY_LOGIT
+    feats = quality_features(docs)
     z = F.lit(float(w["bias"]))
     for name in ("mean_word_len", "punct_ratio", "alpha_ratio", "stopword_ratio"):
         z = z + F.lit(float(w[name])) * F.col(name)
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     return feats.select(
-        id_col,
+        "doc_id",
         F.round(score, 6).alias("q_score"),
         (score >= 0.5).alias("keep"),
     )
 
 
-def repetition_signals(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Within-document repetition signals (the RefinedWeb/Gopher-style
     repetitious-text filters): distinct-word ratio, most-frequent-word
     share, and duplicate-bigram ratio.
@@ -140,7 +127,7 @@ def repetition_signals(
     single ``aggregate`` fold over struct state — O(n log n) per doc,
     so a 10k-word document costs ~10⁵ comparisons, not 10⁸.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     words = whitespace_tokens(text)
     n = F.size(words)
     n_distinct = F.size(F.array_distinct(words))
@@ -165,7 +152,7 @@ def repetition_signals(
     n_bi_distinct = F.size(F.array_distinct(bigrams))
 
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_words"),
         F.when(n > 0, F.round(n_distinct.cast("double") / n, 6)).alias(
             "distinct_word_ratio"
@@ -179,43 +166,35 @@ def repetition_signals(
     )
 
 
-def quality_score(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Composite [0,1] quality score from :func:`quality_features` —
     heuristic weights in the C4/Gopher-rule style (length, alpha
     density, stopword presence, punctuation sanity)."""
-    f = quality_features(docs, id_col, text_col)
+    f = quality_features(docs)
     length_ok = F.when((F.col("n_words") >= 10) & (F.col("n_words") <= 100000), 1.0).otherwise(0.0)
     alpha = F.least(F.col("alpha_ratio") / F.lit(0.7), F.lit(1.0))
     stop = F.least(F.col("stopword_ratio") / F.lit(0.05), F.lit(1.0))
     punct_ok = F.when(F.col("punct_ratio") <= 0.2, 1.0).otherwise(0.2)
     return f.select(
-        id_col,
+        "doc_id",
         F.round(
             0.25 * length_ok + 0.35 * alpha + 0.25 * stop + 0.15 * punct_ok, 6
         ).alias("quality"),
     )
 
 
-def language_id(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    profiles: dict[str, tuple[str, ...]] | None = None,
-) -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: score = fraction of words hitting each
     language's function-word profile; argmax wins (ties → language name
     asc, 'und' when no profile hits).
 
     Structure matches a real n-gram LID: per-language profile scoring +
-    argmax, as pure expressions. Swap profiles for char-n-gram tables
-    without changing the plan shape.
+    argmax, as pure expressions. Swapping ``LANG_PROFILES`` for
+    char-n-gram tables leaves the plan shape unchanged.
     """
-    profiles = profiles or LANG_PROFILES
-    words = whitespace_tokens(F.lower(F.col(text_col)))
+    words = whitespace_tokens(F.lower(F.col("text")))
     scores = []
-    for lang, p in sorted(profiles.items()):
+    for lang, p in sorted(LANG_PROFILES.items()):
         prof = F.array(*[F.lit(x) for x in p])
         hits = F.size(F.filter(words, lambda w: F.array_contains(prof, w)))
         scores.append(
@@ -226,37 +205,33 @@ def language_id(
         )
     best = F.array_max(F.array(*scores))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")).alias("lang_pred"),
         F.round(best["score"], 6).alias("lang_score"),
     )
 
 
-def fingerprint(
-    docs: DataFrame, k: int = 5, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Document fingerprint: min-hash over the char-k-gram set (md5
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """Document fingerprint: min-hash over the char-5-gram set (md5
     lexicographic min — engine-portable, oracle-checkable). A winnowing
     variant keeps per-window minima instead of the global min; the
     global min-hash is the degenerate single-fingerprint case.
 
     Pure per-row array expression (transform + array_min): no explode,
     no shuffle — scales as a narrow map over the corpus."""
-    text = F.col(text_col)
+    text = F.col("text")
     fp = F.array_min(
         F.transform(
-            F.sequence(F.lit(1), F.length(text) - F.lit(k - 1)),
-            lambda i: F.md5(F.substring(text, i, k)),
+            F.sequence(F.lit(1), F.length(text) - F.lit(4)),
+            lambda i: F.md5(F.substring(text, i, 5)),
         )
     )
-    return docs.filter(F.length(text) >= k).select(F.col(id_col), fp.alias("fingerprint"))
+    return docs.filter(F.length(text) >= 5).select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
 def hashing_tf(
     docs: DataFrame,
     n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Feature-hashing (hashing-trick) vectorizer in long form: each
     token hashes to one of ``n_buckets`` and the bucket counts are the
@@ -270,14 +245,14 @@ def hashing_tf(
     oracle; swap it in where cross-engine replay is not needed. Long
     (doc, bucket, tf) output keeps the row a fixed width regardless of
     n_buckets. One keyed shuffle (the count groupBy)."""
-    words = words_table(docs, id_col, text_col)
+    words = words_table(docs)
     bucket = (
         F.conv(F.substring(F.md5(F.lower(F.col("word"))), 1, 8), 16, 10).cast("long")
         % n_buckets
     )
     return (
-        words.select(F.col(id_col), bucket.alias("bucket"))
-        .groupBy(id_col, "bucket")
+        words.select(F.col("doc_id"), bucket.alias("bucket"))
+        .groupBy("doc_id", "bucket")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
 
@@ -285,8 +260,6 @@ def hashing_tf(
 def tfidf_top_terms(
     docs: DataFrame,
     k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document top-``k`` terms by TF-IDF (smooth idf:
     ln((N+1)/(df+1)) + 1, the sklearn convention), ties broken
@@ -296,17 +269,17 @@ def tfidf_top_terms(
     over the distinct (doc, term) relation, and the per-doc ranking
     window — all keyed, none global. N rides in as a broadcast
     one-row aggregate, never a driver round-trip."""
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col), F.lower(F.col("word")).alias("term")
+    words = words_table(docs).select(
+        F.col("doc_id"), F.lower(F.col("word")).alias("term")
     )
-    tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.select(F.countDistinct(F.col(id_col)).alias("n_docs"))
+    n_docs = docs.select(F.countDistinct(F.col("doc_id")).alias("n_docs"))
     scored = (
         tf.join(df_, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "term",
             "tf",
             (
@@ -318,19 +291,17 @@ def tfidf_top_terms(
             ).alias("tfidf"),
         )
     )
-    w = W.partitionBy(id_col).orderBy(
+    w = W.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term").asc()
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select(id_col, "term", "tf", F.round("tfidf", 6).alias("tfidf"), "rk")
+        .select("doc_id", "term", "tf", F.round("tfidf", 6).alias("tfidf"), "rk")
     )
 
 
-def unigram_lm(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_lm(docs: DataFrame) -> DataFrame:
     """Fit a corpus unigram language model: ``(word, tf, logp)`` with
     MLE log-probabilities ``ln(tf / N)``.
 
@@ -339,7 +310,7 @@ def unigram_lm(
     combined), with the corpus total riding in as a broadcast one-row
     aggregate — no driver round-trip, no second scan of the token
     relation (Catalyst reuses the exchange under AQE)."""
-    words = words_table(docs, id_col, text_col).filter(F.col("word") != "")
+    words = words_table(docs).filter(F.col("word") != "")
     tf = words.groupBy("word").agg(F.count(F.lit(1)).alias("tf"))
     total = tf.agg(F.sum("tf").alias("n_total"))
     return tf.crossJoin(F.broadcast(total)).select(
@@ -350,8 +321,6 @@ def unigram_lm(
 def unigram_logprob_score(
     docs: DataFrame,
     lm: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under a unigram LM
     (pseudo-perplexity = exp(nll)): the classic LM-based quality score
@@ -363,17 +332,17 @@ def unigram_logprob_score(
     dropped from the average, the SQL-friendly OOV convention).
 
     Shuffles: the LM fit groupBy and the score join are both keyed by
-    ``word``; the per-doc average is keyed by ``id_col``. The LM is
+    ``word``; the per-doc average is keyed by ``doc_id``. The LM is
     vocabulary-sized — bounded by distinct tokens, not corpus rows —
     so at 100 TB the word-keyed join stays a shuffle join on a relation
     that partial-aggregation already collapsed; AQE broadcasts it when
     the vocabulary is small enough."""
     if lm is None:
-        lm = unigram_lm(docs, id_col, text_col)
-    words = words_table(docs, id_col, text_col).filter(F.col("word") != "")
+        lm = unigram_lm(docs)
+    words = words_table(docs).filter(F.col("word") != "")
     return (
         words.join(lm.select("word", "logp"), "word")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(-F.avg("logp"), 6).alias("nll"),
@@ -384,8 +353,6 @@ def unigram_logprob_score(
 def bpe_pair_counts(
     docs: DataFrame,
     k: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """One round of distributed BPE-trainer statistics: the ``k`` most
     frequent ADJACENT symbol pairs over the corpus, weighted by word
@@ -400,7 +367,7 @@ def bpe_pair_counts(
     touches the raw corpus again. Ties rank lexicographically so the
     merge choice is deterministic."""
     words = (
-        words_table(docs, id_col, text_col)
+        words_table(docs)
         .filter(F.col("word") != "")
         .select(F.lower(F.col("word")).alias("word"))
         .groupBy("word")
@@ -429,8 +396,6 @@ def winnowing_fingerprints(
     docs: DataFrame,
     k: int = 5,
     w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hash_len: int = 32,
 ) -> DataFrame:
     """Winnowing (MOSS) fingerprints: the distinct set of per-window
@@ -460,7 +425,7 @@ def winnowing_fingerprints(
     the classic MOSS width); min-over-prefixes is deterministic, so
     any engine reproducing ``substr(md5(gram),1,8)`` agrees exactly.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     n_grams = F.length(text) - F.lit(k - 1)
     gram_hash = (
         (lambda i: F.md5(F.substring(text, i, k)))
@@ -469,20 +434,20 @@ def winnowing_fingerprints(
     )
     grams = F.transform(F.sequence(F.lit(1), n_grams), gram_hash)
     long = docs.filter(F.length(text) >= k + w - 1).select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_grams.alias("_n"),
         F.posexplode(grams).alias("pos", "h"),
     )
-    win = W.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+    win = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     return (
         long.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.min("h").over(win).alias("fingerprint"),
             "pos",
             "_n",
         )
         .filter(F.col("pos") <= F.col("_n") - w)  # full windows only
-        .select(id_col, "fingerprint")
+        .select("doc_id", "fingerprint")
         .distinct()
     )
 
@@ -490,8 +455,6 @@ def winnowing_fingerprints(
 def bpe_learn_merges(
     docs: DataFrame,
     n_merges: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """The iterative BPE trainer: learn ``n_merges`` merge rules over
     the corpus — each round counts adjacent symbol pairs (weighted by
@@ -514,7 +477,7 @@ def bpe_learn_merges(
     left-to-right non-overlapping replace — the standard BPE
     convention, identical in Spark and the oracle's engine."""
     words = (
-        words_table(docs, id_col, text_col)
+        words_table(docs)
         .filter(F.col("word") != "")
         .select(F.lower(F.col("word")).alias("word"))
         .groupBy("word")
@@ -581,15 +544,12 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: list[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 keyword retrieval: score every document against a bag of
     query terms and return the top-``k`` as (doc_id, score, rk).
     Okapi/Lucene idf = ln(1 + (N − df + 0.5)/(df + 0.5)); per-term
-    score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)).
+    score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) with
+    k1 = 1.2 and b = 0.75.
 
     Scale shape: document lengths come from a pure expression over the
     un-exploded text (no shuffle); the exploded words relation is
@@ -602,17 +562,17 @@ def bm25_topk(
     """
     qt = sorted({t.lower() for t in query_terms})
     dl = docs.select(
-        F.col(id_col), F.size(whitespace_tokens(F.col(text_col))).alias("dl")
+        F.col("doc_id"), F.size(whitespace_tokens(F.col("text"))).alias("dl")
     )
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col), F.lower(F.col("word")).alias("term")
+    words = words_table(docs).select(
+        F.col("doc_id"), F.lower(F.col("word")).alias("term")
     )
     tf = (
         words.filter(F.col("term").isin(qt))
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -622,20 +582,20 @@ def bm25_topk(
     )
     # try_divide: an all-empty corpus has avgdl 0 — the length norm
     # degrades to NULL scores, not an ANSI DIVIDE_BY_ZERO
-    norm = F.col("tf") + k1 * (
-        1.0 - b + b * F.try_divide(F.col("dl"), F.col("avgdl"))
+    norm = F.col("tf") + 1.2 * (
+        1.0 - 0.75 + 0.75 * F.try_divide(F.col("dl"), F.col("avgdl"))
     )
     scored = (
         tf.join(F.broadcast(df_), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
-        .agg(F.sum(idf * F.col("tf") * (k1 + 1.0) / norm).alias("_s"))
+        .groupBy("doc_id")
+        .agg(F.sum(idf * F.col("tf") * (1.2 + 1.0) / norm).alias("_s"))
     )
-    top = scored.orderBy(F.col("_s").desc(), F.col(id_col).asc()).limit(k)
-    w = W.orderBy(F.col("_s").desc(), F.col(id_col).asc())
+    top = scored.orderBy(F.col("_s").desc(), F.col("doc_id").asc()).limit(k)
+    w = W.orderBy(F.col("_s").desc(), F.col("doc_id").asc())
     return top.select(
-        id_col,
+        "doc_id",
         F.round("_s", 6).alias("score"),
         F.row_number().over(w).alias("rk"),
     )
@@ -644,8 +604,6 @@ def bm25_topk(
 def token_js_divergence(
     docs: DataFrame,
     side_a: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Jensen-Shannon divergence (natural log) between the unigram
     token distributions of two corpus slices — the standard
@@ -660,7 +618,7 @@ def token_js_divergence(
     """
     words = docs.select(
         side_a.alias("_a"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
     )
     per_term = words.groupBy("term").agg(
         F.sum(F.when(F.col("_a"), 1).otherwise(0)).alias("ca"),
@@ -690,8 +648,6 @@ def token_js_divergence(
 def bigram_pmi(
     docs: DataFrame,
     min_count: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Collocation mining: pointwise mutual information of adjacent
     word pairs, PMI = ln(p(ab)/(p(a)·p(b))) with p(ab) over the bigram
@@ -708,12 +664,12 @@ def bigram_pmi(
     large corpus, so its two joins carry no broadcast hint — AQE picks
     broadcast when the measured size allows and sort-merge otherwise.
     """
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col), "pos", F.lower(F.col("word")).alias("w")
+    words = words_table(docs).select(
+        F.col("doc_id"), "pos", F.lower(F.col("word")).alias("w")
     )
     uni = words.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     t_uni = uni.agg(F.sum("c").cast("double").alias("tu"))
-    win = W.partitionBy(id_col).orderBy("pos")
+    win = W.partitionBy("doc_id").orderBy("pos")
     bi_all = (
         words.select("w", F.lead("w").over(win).alias("w2"))
         .filter(F.col("w2").isNotNull())
@@ -748,8 +704,6 @@ def bpe_encode_words(
     docs: DataFrame,
     n_merges: int = 6,
     top_words: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a learned BPE merge table to the corpus vocabulary — the
     ENCODE half of the tokenizer (``bpe_learn_merges`` is the train
@@ -771,13 +725,13 @@ def bpe_encode_words(
     rules = [
         (r["a"], r["b"], r["merged"])
         for r in bpe_learn_merges(
-            docs, n_merges=n_merges, id_col=id_col, text_col=text_col
+            docs, n_merges=n_merges
         )
         .orderBy("step")
         .collect()
     ]
     words = (
-        words_table(docs, id_col, text_col)
+        words_table(docs)
         .filter(F.col("word") != "")
         .select(F.lower(F.col("word")).alias("word"))
         .groupBy("word")
@@ -817,8 +771,6 @@ def skipgram_pairs(
     docs: DataFrame,
     window: int = 2,
     min_count: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Word2vec-style training-pair extraction: symmetric (center,
     context) co-occurrence counts within ±``window`` token positions,
@@ -832,20 +784,20 @@ def skipgram_pairs(
     match derive from the single join output — so the whole operator
     is one explode, one join, one groupBy regardless of window size."""
     toks = (
-        words_table(docs, id_col, text_col)
+        words_table(docs)
         .filter(F.col("word") != "")
-        .select(id_col, "pos", F.lower(F.col("word")).alias("w"))
+        .select("doc_id", "pos", F.lower(F.col("word")).alias("w"))
     )
     d = F.explode(
         F.array(*[F.lit(i) for i in range(1, window + 1)])
     ).alias("d")
-    left = toks.select(id_col, "pos", F.col("w").alias("w1"), d).select(
-        id_col, (F.col("pos") + F.col("d")).alias("_tgt"), "w1"
+    left = toks.select("doc_id", "pos", F.col("w").alias("w1"), d).select(
+        "doc_id", (F.col("pos") + F.col("d")).alias("_tgt"), "w1"
     )
     right = toks.select(
-        id_col, F.col("pos").alias("_tgt"), F.col("w").alias("w2")
+        "doc_id", F.col("pos").alias("_tgt"), F.col("w").alias("w2")
     )
-    m = left.join(right, [id_col, "_tgt"])
+    m = left.join(right, ["doc_id", "_tgt"])
     pairs = m.select(
         F.col("w1").alias("center"), F.col("w2").alias("context")
     ).unionAll(
@@ -860,7 +812,6 @@ def skipgram_pairs(
 
 def zipf_fit(
     docs: DataFrame,
-    text_col: str = "text",
     top_n: int = 100,
 ) -> DataFrame:
     """Zipf's-law fit over the corpus frequency spectrum: OLS of
@@ -880,7 +831,7 @@ def zipf_fit(
     from pyspark.sql import Window as W
 
     toks = docs.select(
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+        F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     head = counts.orderBy(F.col("n").desc(), F.col("tok").asc()).limit(top_n)
@@ -960,9 +911,6 @@ def ngram_novelty(
 def rake_keyphrases(
     docs: DataFrame,
     top_k: int = 15,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    stopwords: tuple[str, ...] = DEFAULT_STOPWORDS,
 ) -> DataFrame:
     """RAKE keyphrase extraction (Rose et al. 2010): candidate phrases
     are maximal stopword-free word runs; each word scores
@@ -978,13 +926,13 @@ def rake_keyphrases(
     (vocabulary-sized, the O2 rationale). The tie order is pinned on
     the ROUNDED score so engines with ulp-different word-score sums
     agree on rank."""
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col), "pos", F.lower(F.col("word")).alias("word")
+    words = words_table(docs).select(
+        F.col("doc_id"), "pos", F.lower(F.col("word")).alias("word")
     ).filter(F.col("word") != "")
-    is_stop = F.col("word").isin(*stopwords)
-    w = W.partitionBy(id_col).orderBy("pos")
+    is_stop = F.col("word").isin(*DEFAULT_STOPWORDS)
+    w = W.partitionBy("doc_id").orderBy("pos")
     seg = words.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "pos",
         "word",
         is_stop.alias("_stop"),
@@ -992,7 +940,7 @@ def rake_keyphrases(
         .over(w.rowsBetween(W.unboundedPreceding, 0))
         .alias("_ph"),
     ).filter(~F.col("_stop"))
-    occ = seg.groupBy(id_col, "_ph").agg(
+    occ = seg.groupBy("doc_id", "_ph").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
@@ -1019,9 +967,9 @@ def rake_keyphrases(
         .select("word", (F.col("_deg") / F.col("_freq")).alias("_wscore"))
     )
     occ_scored = (
-        occ.select(F.col(id_col), "_ph", "phrase", F.explode("_words").alias("word"))
+        occ.select(F.col("doc_id"), "_ph", "phrase", F.explode("_words").alias("word"))
         .join(wstat, "word")
-        .groupBy(id_col, "_ph", "phrase")
+        .groupBy("doc_id", "_ph", "phrase")
         .agg(F.sum("_wscore").alias("_score"))
     )
     phrases = occ_scored.groupBy("phrase").agg(
@@ -1041,9 +989,7 @@ def rake_keyphrases(
     )
 
 
-def heaps_law_fit(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def heaps_law_fit(docs: DataFrame) -> DataFrame:
     """Heaps'-law fit V(N) = k·N^b over the corpus growth curve: order
     documents by id, accumulate token count N_d and vocabulary size
     V_d (a word joins the vocabulary at its FIRST document — min doc
@@ -1055,8 +1001,8 @@ def heaps_law_fit(
     Distributed shape: two map-side-combined groupBys (per-word first
     doc, per-doc token count) fold the corpus; the cumulative windows
     and the OLS sums run over the |docs| relation only."""
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col).alias("_d"), F.lower(F.col("word")).alias("word")
+    words = words_table(docs).select(
+        F.col("doc_id").alias("_d"), F.lower(F.col("word")).alias("word")
     ).filter(F.col("word") != "")
     toks = words.groupBy("_d").agg(F.count(F.lit(1)).cast("double").alias("_nw"))
     first = words.groupBy("word").agg(F.min("_d").alias("_d"))
@@ -1096,15 +1042,10 @@ def heaps_law_fit(
     )
 
 
-def bigram_lm_nll(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    train_filter: Column | None = None,
-) -> DataFrame:
+def bigram_lm_nll(docs: DataFrame) -> DataFrame:
     """Per-document bigram language-model negative log-likelihood with
     add-1 smoothing: train P(w₂|w₁) = (c(w₁w₂)+1)/(c(w₁)+V) on the
-    ``train_filter`` slice (V = train unigram vocabulary), score every
+    even-``doc_id`` slice (V = train unigram vocabulary), score every
     held-out document by mean −ln P over its bigrams, and emit
     (doc_id, n_bigrams, avg_nll, ppl) — the LM-quality filter one step
     up from the unigram NLL in ``doc_unigram_nll`` (it catches
@@ -1117,14 +1058,13 @@ def bigram_lm_nll(
     special case."""
     from pyspark.sql import Window as W
 
-    words = words_table(docs, id_col, text_col).select(
-        F.col(id_col), "pos", F.lower(F.col("word")).alias("word")
+    words = words_table(docs).select(
+        F.col("doc_id"), "pos", F.lower(F.col("word")).alias("word")
     ).filter(F.col("word") != "")
-    if train_filter is None:
-        train_filter = F.col(id_col) % 2 == 0
-    w = W.partitionBy(id_col).orderBy("pos")
+    train_filter = F.col("doc_id") % 2 == 0
+    w = W.partitionBy("doc_id").orderBy("pos")
     big = words.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("word").alias("w1"),
         F.lead("word").over(w).alias("w2"),
     ).filter(F.col("w2").isNotNull())
@@ -1145,7 +1085,7 @@ def bigram_lm_nll(
         .join(F.broadcast(uni_c), "w1", "left")
         .crossJoin(F.broadcast(vocab))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             (
                 -F.log(
                     (F.coalesce("_cp", F.lit(0.0)) + 1.0)
@@ -1154,18 +1094,14 @@ def bigram_lm_nll(
             ).alias("_nll"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.avg("_nll"), 6).alias("avg_nll"),
         F.round(F.exp(F.avg("_nll")), 6).alias("ppl"),
     )
 
 
-def flesch_reading_ease(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def flesch_reading_ease(docs: DataFrame) -> DataFrame:
     """Flesch reading-ease score per document from three pure-regex
     counts — words (non-empty whitespace tokens), sentences
     (non-overlapping [.!?]+ runs, floored at 1), syllables
@@ -1175,7 +1111,7 @@ def flesch_reading_ease(
     arithmetic, no UDF); the per-doc score is a deterministic function
     of integer counts, so both engines produce bit-identical doubles.
     Zero-word docs NULL the score via try_divide."""
-    txt = F.col(text_col)
+    txt = F.col("text")
     words = F.size(F.filter(F.split(txt, " "), lambda x: x != ""))
     sentences = F.greatest(F.regexp_count(txt, F.lit(r"[.!?]+")), F.lit(1))
     syllables = F.regexp_count(F.lower(txt), F.lit("[aeiouy]+"))
@@ -1187,7 +1123,7 @@ def flesch_reading_ease(
             * F.try_divide(syllables.cast("double"), words.cast("double"))
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         words.cast("long").alias("n_words"),
         sentences.cast("long").alias("n_sentences"),
         syllables.cast("long").alias("n_syllables"),
@@ -1195,11 +1131,7 @@ def flesch_reading_ease(
     )
 
 
-def flesch_band_histogram(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def flesch_band_histogram(docs: DataFrame) -> DataFrame:
     """Corpus readability profile: Flesch scores banded into the
     standard difficulty buckets with per-band counts and mean score —
     the corpus-curation readout ("is this crawl slab mostly
@@ -1207,7 +1139,7 @@ def flesch_band_histogram(
     filtering. One scan + one tiny groupBy; band edges compare
     bit-identical per-doc doubles against constants, so banding is
     engine-stable."""
-    scored = flesch_reading_ease(docs, text_col, id_col)
+    scored = flesch_reading_ease(docs)
     s = F.col("flesch_score")
     band = (
         F.when(s.isNull(), F.lit("empty"))
@@ -1237,12 +1169,11 @@ def nb_lang_train_weights(
     text_col: str = "text",
     lang_col: str = "lang",
     vocab_size: int = 200,
-    scale: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Multinomial Naive Bayes language-ID model as INTEGER weight
     relations: ``(lang, word, w)`` over the full lang × top-V vocab
     grid plus ``(lang, prior_w, n_docs)``, with every log-probability
-    quantized to micro-units ``floor(ln(p) · scale)``.
+    quantized to micro-units ``floor(ln(p) · 1e6)``.
 
     The quantization is the whole point: per-doc scores become exact
     integer sums, so the argmax over languages is engine-exact by
@@ -1302,14 +1233,14 @@ def nb_lang_train_weights(
                     (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
                     / (F.coalesce(F.col("n_l"), F.lit(0)) + F.col("v"))
                 )
-                * scale
+                * 1_000_000
             ).cast("long").alias("w"),
         )
     )
     priors = langs.crossJoin(F.broadcast(n_total)).select(
         lang_col,
         F.floor(
-            F.log(F.col("n_docs") / F.col("nt")) * scale
+            F.log(F.col("n_docs") / F.col("nt")) * 1_000_000
         ).cast("long").alias("prior_w"),
         F.col("n_docs").cast("long").alias("n_docs"),
     )
@@ -1318,9 +1249,6 @@ def nb_lang_train_weights(
 
 def nb_lang_confusion(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
     vocab_size: int = 200,
 ) -> DataFrame:
     """Train-and-apply NB language ID with the integer-weight model,
@@ -1337,33 +1265,33 @@ def nb_lang_confusion(
     from pyspark.sql import Window as W
 
     grid, priors = nb_lang_train_weights(
-        docs, id_col, text_col, lang_col, vocab_size
+        docs, "doc_id", "text", "lang", vocab_size
     )
-    w = words_table(docs, id_col, text_col).filter(F.col("word") != "")
-    w = w.select(id_col, F.lower(F.col("word")).alias("word"))
+    w = words_table(docs).filter(F.col("word") != "")
+    w = w.select("doc_id", F.lower(F.col("word")).alias("word"))
     # the grid's lang column is the candidate-class key
     cand_col = [c for c in grid.columns if c not in ("word", "w")][0]
     tok_scores = (
         w.join(F.broadcast(grid), "word")
-        .groupBy(id_col, cand_col)
+        .groupBy("doc_id", cand_col)
         .agg(F.sum("w").alias("s_tok"))
         .withColumnRenamed(cand_col, "_cand")
     )
-    scaffold = docs.select(id_col, lang_col).crossJoin(
+    scaffold = docs.select("doc_id", "lang").crossJoin(
         F.broadcast(priors.select(F.col(cand_col).alias("_cand"), "prior_w"))
     )
     scored = scaffold.join(
-        tok_scores, [id_col, "_cand"], "left"
+        tok_scores, ["doc_id", "_cand"], "left"
     ).withColumn(
         "_score", F.coalesce(F.col("s_tok"), F.lit(0)) + F.col("prior_w")
     )
-    wbest = W.partitionBy(id_col).orderBy(
+    wbest = W.partitionBy("doc_id").orderBy(
         F.col("_score").desc(), F.col("_cand").asc()
     )
     pred = scored.withColumn("_rk", F.row_number().over(wbest)).filter(
         F.col("_rk") == 1
     )
     return (
-        pred.groupBy(F.col(lang_col).alias("true_lang"), F.col("_cand").alias("pred_lang"))
+        pred.groupBy(F.col("lang").alias("true_lang"), F.col("_cand").alias("pred_lang"))
         .agg(F.count(F.lit(1)).alias("n"))
     )

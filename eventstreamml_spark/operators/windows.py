@@ -20,23 +20,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def sort_events(
-    df: DataFrame,
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
-    id_col: str | None = "event_id",
-) -> DataFrame:
+def sort_events(df: DataFrame) -> DataFrame:
     """W1: order events by (subject asc, timestamp asc).
 
     The reference relies on pandas stable sort for ties
     (event_stream_dataset.py:668-671); a distributed engine has no
-    input-order notion, so we pin ``id_col`` as the explicit final
+    input-order notion, so we pin ``event_id`` as the explicit final
     tiebreaker for determinism.
     """
-    keys = [F.col(subject_col).asc(), F.col(ts_col).asc()]
-    if id_col is not None:
-        keys.append(F.col(id_col).asc())
-    return df.orderBy(*keys)
+    return df.orderBy(
+        F.col("subject_id").asc(), F.col("timestamp").asc(), F.col("event_id").asc()
+    )
 
 
 def subject_window(
@@ -55,21 +49,20 @@ def with_inter_event_time(
     subject_col: str = "subject_id",
     ts_col: str = "timestamp",
     id_col: str | None = "event_id",
-    unit_seconds: float = 60.0,
     out_col: str = "tte",
 ) -> DataFrame:
-    """W2: inter-event time per subject, in ``unit_seconds`` units.
+    """W2: inter-event time per subject, in minutes.
 
     Null for each subject's first event (pandas ``.diff()`` semantics,
     event_stream_dataset.py:873-876). Timedelta is converted to a
-    scalar (minutes by default) by division, never an interval type.
+    scalar (minutes) by division, never an interval type.
     """
     w = subject_window(subject_col, ts_col, id_col)
     prev = F.lag(F.col(ts_col)).over(w)
     delta_us = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
         prev.cast("timestamp")
     )
-    return df.withColumn(out_col, delta_us / F.lit(unit_seconds * 1_000_000.0))
+    return df.withColumn(out_col, delta_us / F.lit(60.0 * 1_000_000.0))
 
 
 def with_time_since_start(
@@ -117,7 +110,6 @@ def dense_ids(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "event_id",
-    num_partitions: int | None = None,
     strategy: str = "auto",
     auto_threshold_bytes: int | None = None,
 ) -> DataFrame:
@@ -176,7 +168,7 @@ def dense_ids(
     if strategy != "distributed":
         raise ValueError(f"unknown dense_ids strategy {strategy!r}")
 
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     d = (
         df.repartitionByRange(n, *order)
         .sortWithinPartitions(*order)
@@ -210,9 +202,6 @@ def dense_ids(
 
 def assign_event_ids(
     df: DataFrame,
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
-    out_col: str = "event_id",
     tiebreakers: list[str] | None = None,
 ) -> DataFrame:
     """W5/S2: deterministic 0..n-1 surrogate ids over a pinned total order.
@@ -220,8 +209,8 @@ def assign_event_ids(
     The reference assigns ids by pandas input order
     (event_stream_dataset.py:645-649); Spark pins an explicit order
     (subject, ts, tiebreakers) and numbers via :func:`dense_ids`."""
-    order = [subject_col, ts_col] + list(tiebreakers or [])
-    return dense_ids(df, order, out_col)
+    order = ["subject_id", "timestamp"] + list(tiebreakers or [])
+    return dense_ids(df, order)
 
 
 def with_normalized_log_tte_cumsum(
@@ -231,17 +220,15 @@ def with_normalized_log_tte_cumsum(
     subject_col: str = "subject_id",
     ts_col: str = "timestamp",
     id_col: str | None = "event_id",
-    tte_col: str = "tte",
-    out_col: str = "norm_time",
 ) -> DataFrame:
     """W4: ``exp((log(Δt+1) − μ)/σ)`` then per-subject cumulative sum
     with first element 0 (event_stream_pytorch_dataset.py:278-321)."""
     w = subject_window(subject_col, ts_col, id_col).rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
-    norm = F.exp((F.log(F.col(tte_col) + F.lit(1.0)) - F.lit(mean_log_tte)) / F.lit(std_log_tte))
+    norm = F.exp((F.log(F.col("tte") + F.lit(1.0)) - F.lit(mean_log_tte)) / F.lit(std_log_tte))
     step = F.coalesce(norm, F.lit(0.0))  # first event per subject: Δt null → 0
-    return df.withColumn(out_col, F.sum(step).over(w))
+    return df.withColumn("norm_time", F.sum(step).over(w))
 
 
 def random_fixed_length_subsequence(
@@ -280,7 +267,6 @@ def with_tte_target(
     id_col: str | None = "event_id",
     unit_seconds: float | None = 60.0,
     out_col: str = "tte_target",
-    mask_col: str = "tte_target_mask",
 ) -> DataFrame:
     """W8: the next-event time delta as a per-event prediction target —
     ``time.diff()`` shifted onto the EARLIER event with a validity mask
@@ -302,7 +288,7 @@ def with_tte_target(
         if unit_seconds is None
         else delta_us / F.lit(unit_seconds * 1_000_000.0)
     )
-    return df.withColumn(out_col, target).withColumn(mask_col, nxt.isNotNull())
+    return df.withColumn(out_col, target).withColumn("tte_target_mask", nxt.isNotNull())
 
 
 def rolling_time_agg(
@@ -341,9 +327,6 @@ def rolling_time_agg(
 def resample_ffill(
     df: DataFrame,
     step: str = "1 hour",
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
-    value_col: str = "value",
 ) -> DataFrame:
     """Per-subject resampling to a regular time grid with forward
     fill: grid points run from each subject's first observation
@@ -364,22 +347,22 @@ def resample_ffill(
     Output: (subject, grid_ts, value) — value null only before a
     subject's first non-null observation.
     """
-    span = df.groupBy(subject_col).agg(
-        F.date_trunc("hour", F.min(ts_col)).alias("_lo"),
-        F.max(ts_col).alias("_hi"),
+    span = df.groupBy("subject_id").agg(
+        F.date_trunc("hour", F.min("timestamp")).alias("_lo"),
+        F.max("timestamp").alias("_hi"),
     )
     grid = span.select(
-        subject_col,
+        "subject_id",
         F.explode(
             F.sequence(F.col("_lo"), F.col("_hi"), F.expr(f"INTERVAL {step}"))
-        ).alias(ts_col),
-        F.lit(None).cast("double").alias(value_col),
+        ).alias("timestamp"),
+        F.lit(None).cast("double").alias("value"),
         F.lit(1).alias("_is_grid"),
     )
     obs = df.select(
-        subject_col,
-        ts_col,
-        F.col(value_col).cast("double").alias(value_col),
+        "subject_id",
+        "timestamp",
+        F.col("value").cast("double").alias("value"),
         F.lit(0).alias("_is_grid"),
     )
     # observations sort before the grid point at the same instant, so
@@ -387,16 +370,16 @@ def resample_ffill(
     # simultaneous observations resolve deterministically to the
     # maximum value (final value tiebreak)
     w = (
-        W.partitionBy(subject_col)
-        .orderBy(ts_col, "_is_grid", value_col)
+        W.partitionBy("subject_id")
+        .orderBy("timestamp", "_is_grid", "value")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     return (
         obs.unionByName(grid)
         .select(
-            subject_col,
-            F.col(ts_col),
-            F.last(value_col, ignorenulls=True).over(w).alias(value_col),
+            "subject_id",
+            F.col("timestamp"),
+            F.last("value", ignorenulls=True).over(w).alias("value"),
             "_is_grid",
         )
         .filter(F.col("_is_grid") == 1)
@@ -411,7 +394,6 @@ def ewma_by_subject(
     ts_col: str = "timestamp",
     id_col: str = "event_id",
     value_col: str = "value",
-    out_col: str = "ewma",
 ) -> DataFrame:
     """Per-subject exponentially weighted moving average of
     ``value_col`` over the time-ordered event sequence, returning one
@@ -455,7 +437,7 @@ def ewma_by_subject(
     return seq.select(
         subject_col,
         F.size(F.col("_seq")).alias("n_obs"),
-        folded.alias(out_col),
+        folded.alias("ewma"),
     )
 
 
@@ -554,11 +536,7 @@ def rolling_distinct_subjects(
     )
 
 
-def peak_concurrency_by_day(
-    intervals: DataFrame,
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-) -> DataFrame:
+def peak_concurrency_by_day(intervals: DataFrame) -> DataFrame:
     """Peak concurrency per day over an interval table (sessions,
     connections, jobs): for each day with at least one interval
     boundary, the maximum number of simultaneously-open intervals —
@@ -576,8 +554,8 @@ def peak_concurrency_by_day(
     level and is omitted. ``day_index`` is the epoch-day integer
     (µs div 86400e6) — integer arithmetic, engine-portable."""
     day_us = 86_400_000_000
-    s_us = F.unix_micros(F.col(start_col).cast("timestamp"))
-    e_us = F.unix_micros(F.col(end_col).cast("timestamp"))
+    s_us = F.unix_micros(F.col("session_start").cast("timestamp"))
+    e_us = F.unix_micros(F.col("session_end").cast("timestamp"))
     # ONE pass over the interval relation: each interval contributes a
     # (t, start-flag) and a (t, end-flag) boundary row, folded by a
     # single groupBy. The former per-side groupBys + full_outer join
@@ -697,8 +675,6 @@ def holt_linear_by_key(
     key_col: str = "key",
     order_col: str = "h",
     y_col: str = "y",
-    alpha: float = 0.5,
-    beta: float = 0.5,
 ) -> DataFrame:
     """Holt's linear (double-exponential) smoothing per key over an
     ordered series, returning the final level/trend state, the
@@ -715,8 +691,8 @@ def holt_linear_by_key(
     Same distributed shape as ewma_by_subject: one keyed shuffle
     (collect_list), a sort, and a codegen'd higher-order ``aggregate``
     fold over the per-key array — series length per key is the time
-    span (hours/days), bounded regardless of corpus size. α, β default
-    to 0.5 (dyadic, so intermediate state stays exactly
+    span (hours/days), bounded regardless of corpus size. α = β = 0.5
+    (dyadic, so intermediate state stays exactly
     representable for long prefixes)."""
     seq = series.groupBy(key_col).agg(
         F.sort_array(
@@ -729,7 +705,7 @@ def holt_linear_by_key(
         ).alias("_seq")
     )
     vals = F.transform(F.col("_seq"), lambda s: s["_y"])
-    a, b = F.lit(float(alpha)), F.lit(float(beta))
+    a, b = F.lit(0.5), F.lit(0.5)
     init = F.struct(
         F.get(vals, 0).alias("l"),
         F.lit(0.0).alias("b"),
@@ -769,7 +745,6 @@ def page_hinkley_by_key(
     key_col: str = "key",
     order_col: str = "h",
     y_col: str = "y",
-    delta: float = 0.5,
     lam: float = 50.0,
 ) -> DataFrame:
     """Page-Hinkley mean-increase drift detector per key over an
@@ -780,7 +755,7 @@ def page_hinkley_by_key(
     The whole state (running sum, m, min-m) lives INSIDE one
     sequential array fold, so every intermediate division runs in a
     fixed order — bit-identical across engines for identical inputs
-    (the holt_linear_by_key discipline; δ defaults to a dyadic 0.5).
+    (the holt_linear_by_key discipline; δ is a dyadic 0.5).
     Shape: one keyed shuffle (collect_list) + a codegen'd aggregate
     fold; series length per key is the time span, bounded regardless
     of corpus size."""
@@ -795,7 +770,7 @@ def page_hinkley_by_key(
         ).alias("_seq")
     )
     vals = F.transform(F.col("_seq"), lambda s: s["_y"])
-    d = F.lit(float(delta))
+    d = F.lit(0.5)
     y1 = F.get(vals, 0)
     m1 = y1 - y1 / F.lit(1.0) - d
     init = F.struct(
@@ -837,7 +812,6 @@ def croston_by_key(
     key_col: str = "key",
     order_col: str = "h",
     y_col: str = "y",
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Croston's method for intermittent demand per key: separate
     exponential smoothing of the nonzero demand SIZE (z) and the
@@ -846,7 +820,7 @@ def croston_by_key(
     toward the zeros.
 
     State (initialized flag, z, p, periods-since-demand, demand
-    count) folds sequentially with a dyadic α, so both engines
+    count) folds sequentially with a dyadic α = 0.5, so both engines
     replay it bit-identically; zero periods only increment the gap
     counter. Same collect_list + aggregate fold shape as
     holt_linear_by_key."""
@@ -861,7 +835,7 @@ def croston_by_key(
         ).alias("_seq")
     )
     vals = F.transform(F.col("_seq"), lambda s: s["_y"])
-    a = F.lit(float(alpha))
+    a = F.lit(0.5)
     init = F.struct(
         F.lit(0.0).alias("ini"),
         F.lit(0.0).alias("z"),
@@ -913,9 +887,6 @@ def holt_winters_additive_by_key(
     order_col: str = "h",
     y_col: str = "y",
     period: int = 24,
-    alpha: float = 0.5,
-    beta: float = 0.5,
-    gamma: float = 0.5,
 ) -> DataFrame:
     """Additive Holt-Winters (triple exponential) smoothing per key:
     level + trend + a ``period``-slot seasonal array, all folded
@@ -924,7 +895,7 @@ def holt_winters_additive_by_key(
 
     The 1-based element p smooths against seasonal slot (p−1) mod
     period; l₁=y₁, b₁=0, s=0⃗ (the cold-start convention both engines
-    replay). α=β=γ default to dyadic 0.5, the seasonal array updates
+    replay). α = β = γ = 0.5 (dyadic); the seasonal array updates
     ONE slot per step via an index-rebuild (Spark indexed transform ≡
     DuckDB list_transform over range), so the whole state — array
     included — is bit-identical across engines. Shape: one keyed
@@ -940,9 +911,9 @@ def holt_winters_additive_by_key(
         ).alias("_seq")
     )
     vals = F.transform(F.col("_seq"), lambda s: s["_y"])
-    a = F.lit(float(alpha))
-    bta = F.lit(float(beta))
-    g = F.lit(float(gamma))
+    a = F.lit(0.5)
+    bta = F.lit(0.5)
+    g = F.lit(0.5)
     zeros = F.array(*[F.lit(0.0) for _ in range(period)])
     init = F.struct(
         F.lit(1.0).alias("t"),

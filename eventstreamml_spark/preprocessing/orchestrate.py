@@ -81,7 +81,6 @@ def add_time_dependent_columns(
     events: DataFrame,
     subjects: DataFrame | None,
     config: DatasetConfig,
-    ts_col: str = "timestamp",
 ) -> DataFrame:
     """E2 step 1 (:937-945): attach one column per
     FUNCTIONAL_TIME_DEPENDENT measurement via the functor registry."""
@@ -89,11 +88,11 @@ def add_time_dependent_columns(
         if mc.temporality != TemporalityType.FUNCTIONAL_TIME_DEPENDENT:
             continue
         if mc.functor == "time_of_day":
-            events = events.withColumn(name, FUNCTORS["time_of_day"](F.col(ts_col)))
+            events = events.withColumn(name, FUNCTORS["time_of_day"](F.col("timestamp")))
         elif mc.functor == "age":
             if subjects is None:
                 raise ValueError(f"{name}: age functor requires a subjects relation")
-            events = with_age(events, subjects, ts_col=ts_col, out_col=name)
+            events = with_age(events, subjects, out_col=name)
         else:
             raise KeyError(f"{name}: unknown functor {mc.functor!r}")
     return events

@@ -296,7 +296,6 @@ def mad_outlier_bounds(
     value_col: str = "value",
     n_sigmas: float = 3.0,
     approx: bool = False,
-    approx_accuracy: int = 10_000,
 ) -> DataFrame:
     """Robust per-key outlier bounds via median ± n·1.4826·MAD (the
     normal-consistent median-absolute-deviation scale): the
@@ -313,7 +312,7 @@ def mad_outlier_bounds(
     leaving the contract (bounds, outlier counts) unchanged. Returns
     (key, median, mad, lo, hi, n, n_outliers)."""
     if approx:
-        pct = lambda c: f"approx_percentile({c}, 0.5, {int(approx_accuracy)})"  # noqa: E731
+        pct = lambda c: f"approx_percentile({c}, 0.5, 10000)"  # noqa: E731
     else:
         pct = lambda c: f"percentile({c}, 0.5)"  # noqa: E731
     med = df.groupBy(key_col).agg(

@@ -74,7 +74,6 @@ def to_events_and_metadata(
     subject_col: str,
     time_col: str,
     metadata_cols: list[str] | None = None,
-    id_strategy: str = "dense",
 ) -> tuple[DataFrame, DataFrame]:
     """S2 (event_stream_dataset.py:415-474): split one source frame into
     (events, metadata) sharing a generated ``event_id``.
@@ -90,7 +89,7 @@ def to_events_and_metadata(
         F.to_timestamp(F.col(time_col)).alias("timestamp"),
         *[F.col(c) for c in metadata_cols],
     )
-    base = _assign_id(base, "event_id", ["subject_id", "timestamp"], id_strategy)
+    base = _assign_id(base, "event_id", ["subject_id", "timestamp"], "dense")
     base = base.withColumn("event_type", F.lit(event_type))
     events = _ordered(base.select("event_id", "subject_id", "timestamp", "event_type"), MANDATORY_EVENT_COLS)
     metadata = base.select(
@@ -140,7 +139,6 @@ def explode_metadata(
 def nest_metadata(
     events: DataFrame,
     metadata: DataFrame,
-    nested_col: str = "metadata",
 ) -> DataFrame:
     """J3 (event_stream_dataset.py:611-624): the denormalized
     ``events_df_with_metadata`` view — metadata rows grouped per event
@@ -158,10 +156,10 @@ def nest_metadata(
         .agg(
             F.sort_array(
                 F.collect_list(F.struct(F.col("metadata_id"), *[F.col(c) for c in meas_cols]))
-            ).alias(nested_col)
+            ).alias("metadata")
         )
     )
     joined = events.join(packed, "event_id", "left")
     return joined.withColumn(
-        nested_col, F.coalesce(F.col(nested_col), F.array().cast(joined.schema[nested_col].dataType))
+        "metadata", F.coalesce(F.col("metadata"), F.array().cast(joined.schema["metadata"].dataType))
     )

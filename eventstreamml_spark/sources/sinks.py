@@ -28,13 +28,12 @@ def write_bucketed_table(
     bucket_col: str = "subject_id",
     n_buckets: int = 8,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Write ``df`` as a catalog table hash-bucketed on ``bucket_col``
     (optionally sorted within buckets). Joins/groupBys on the bucket
     column across tables written with the same (col, n_buckets) then
     plan with zero Exchange."""
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
+    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, bucket_col)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
@@ -50,7 +49,6 @@ def write_partitioned(
     path: str,
     partition_cols: list[str],
     sort_within: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Directory-partitioned parquet sink: one directory per partition
     value, so any read filtering on the partition columns prunes whole
@@ -66,4 +64,4 @@ def write_partitioned(
     columns (a date, not a timestamp)."""
     if sort_within:
         df = df.sortWithinPartitions(*sort_within)
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)

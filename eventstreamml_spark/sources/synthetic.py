@@ -21,8 +21,6 @@ def synthetic_events(
     spark: SparkSession,
     n: int,
     n_subjects: int,
-    n_types: int = 5,
-    start_epoch: int = EPOCH_START,
 ) -> DataFrame:
     """``n`` events over ``n_subjects`` subjects: minute spacing per
     subject, deliberate timestamp collisions every 7th row (id % 7)
@@ -30,11 +28,11 @@ def synthetic_events(
     return spark.range(n).select(
         (F.col("id") % n_subjects).alias("subject_id"),
         F.timestamp_seconds(
-            F.lit(start_epoch)
+            F.lit(EPOCH_START)
             + (F.col("id") / n_subjects).cast("long") * 60
             - F.when(F.col("id") % 7 == 0, 60).otherwise(0)
         ).alias("timestamp"),
-        F.concat(F.lit("t"), (F.col("id") % n_types).cast("string")).alias(
+        F.concat(F.lit("t"), (F.col("id") % 5).cast("string")).alias(
             "event_type"
         ),
         (F.col("id") % 1000).cast("double").alias("value"),

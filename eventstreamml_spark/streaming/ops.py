@@ -39,19 +39,15 @@ def canonicalize_stream(
     event_type: str,
     subject_col: str,
     time_col: str,
-    metadata_cols: list[str] | None = None,
 ) -> DataFrame:
-    """S1 on a stream: rename to canonical columns, literal event_type,
-    optional nested metadata struct — identical projection to the batch
-    builder, applied to a ``readStream`` frame."""
-    cols = [
+    """S1 on a stream: rename to canonical columns and add the literal
+    event_type — identical projection to the batch builder, applied to
+    a ``readStream`` frame."""
+    return df.select(
         F.col(subject_col).alias("subject_id"),
         F.to_timestamp(F.col(time_col)).alias("timestamp"),
         F.lit(event_type).alias("event_type"),
-    ]
-    if metadata_cols:
-        cols.append(F.array(F.struct(*[F.col(c) for c in metadata_cols])).alias("metadata"))
-    return df.select(*cols)
+    )
 
 
 def windowed_event_type_counts(
@@ -101,8 +97,6 @@ def sessionize(
     events: DataFrame,
     gap: str = "30 minutes",
     watermark_delay: str = "10 minutes",
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
 ) -> DataFrame:
     """Gap-based sessionization as a native ``session_window``
     aggregation: consecutive events of a subject merge into one session
@@ -115,11 +109,11 @@ def sessionize(
     finalizes sessions and bounds state.
     """
     return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.col(subject_col), F.session_window(F.col(ts_col), gap).alias("_w"))
+        events.withWatermark("timestamp", watermark_delay)
+        .groupBy(F.col("subject_id"), F.session_window(F.col("timestamp"), gap).alias("_w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            subject_col,
+            "subject_id",
             F.col("_w.start").alias("session_start"),
             F.col("_w.end").alias("session_end"),
             "n_events",
@@ -147,8 +141,6 @@ _TTE_STATE = StructType([StructField("last_ts_us", LongType())])
 
 def stream_inter_event_times(
     events: DataFrame,
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
     unit_seconds: float | None = 60.0,
 ) -> DataFrame:
     """W2 incrementally: per-subject Δt in ``unit_seconds`` units, null
@@ -177,7 +169,7 @@ def stream_inter_event_times(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            ts = pdf[ts_col].to_numpy()
+            ts = pdf["timestamp"].to_numpy()
             order = np.argsort(ts, kind="quicksort")
             ts = ts[order]
             ts_us = ts.astype("int64") // 1000  # ns since epoch → µs
@@ -196,7 +188,7 @@ def stream_inter_event_times(
             frames.append(
                 pd.DataFrame(
                     {
-                        "subject_id": pdf[subject_col].to_numpy()[order],
+                        "subject_id": pdf["subject_id"].to_numpy()[order],
                         "timestamp": ts,
                         "tte": tte,
                     }
@@ -208,7 +200,7 @@ def stream_inter_event_times(
         yield from frames
 
     schema = _TTE_OUTPUT_US if raw_micros else _TTE_OUTPUT
-    return events.groupBy(subject_col).applyInPandasWithState(
+    return events.groupBy("subject_id").applyInPandasWithState(
         update, schema, _TTE_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -236,7 +228,6 @@ def stream_interval_join(
     left_ts: str,
     right_ts: str,
     lookback: str = "30 minutes",
-    watermark_delay: str = "10 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join (ST7): pair each left event with
@@ -260,8 +251,8 @@ def stream_interval_join(
     inherent property of watermarked outer joins, so outer results are
     not batch-replayable near the stream tail (inner results are).
     """
-    l = left.withWatermark(left_ts, watermark_delay)
-    r = right.withWatermark(right_ts, watermark_delay)
+    l = left.withWatermark(left_ts, "10 minutes")
+    r = right.withWatermark(right_ts, "10 minutes")
     cond = (
         (l[key] == r[key])
         & (r[right_ts] < l[left_ts])
@@ -274,7 +265,6 @@ def stream_interval_join(
 
 def with_ingest_metrics(
     df: DataFrame,
-    name: str = "ingest_metrics",
     ts_col: str = "timestamp",
     value_col: str | None = "value",
 ) -> DataFrame:
@@ -297,7 +287,7 @@ def with_ingest_metrics(
         metrics.append(
             F.sum(F.when(F.col(value_col).isNull(), 1).otherwise(0)).alias("n_null_values")
         )
-    return df.observe(name, *metrics)
+    return df.observe("ingest_metrics", *metrics)
 
 
 def incremental_count_mv(
@@ -458,18 +448,12 @@ def stream_running_counts_tws(
     events: DataFrame,
     subject_col: str = "subject_id",
     value_col: str = "value",
-    state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """Per-subject running (count, sum) on the ``transformWithState``
     API (Spark 4's successor to ``applyInPandasWithState``): state is a
-    named, typed ValueState with optional per-state TTL — the state
-    store evicts idle subjects by itself, the eviction policy a manual
-    GroupStateTimeout dance used to hand-roll. Emits one updated
-    (subject, n_events, sum_value) row per key per micro-batch.
-
-    The TTL matters at 100 TB: subject key spaces grow without bound
-    on real feeds, and value-state TTL keeps the RocksDB footprint
-    proportional to ACTIVE subjects, not historical ones.
+    named, typed ValueState with no TTL, so every subject's state is
+    kept. Emits one updated (subject, n_events, sum_value) row per key
+    per micro-batch.
 
     Requires ``google.protobuf`` (the transformWithState wire protocol
     dependency, absent from this build environment — the test skips
@@ -493,9 +477,7 @@ def stream_running_counts_tws(
 
     class RunningCounts(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "agg", "n BIGINT, s DOUBLE", ttlDurationMs=state_ttl_ms
-            )
+            self._state = handle.getValueState("agg", "n BIGINT, s DOUBLE")
 
         def handleInputRows(self, key, rows, timerValues):
             n, s = (0, 0.0)
@@ -526,9 +508,7 @@ def windowed_quantile_bins(
     window_duration: str = "1 hour",
     watermark_delay: str = "10 minutes",
     ts_col: str = "timestamp",
-    type_col: str = "event_type",
     value_col: str = "value",
-    bins_per_e: int = 20,
 ) -> DataFrame:
     """The streaming half of the engine's log-binned quantile sketch
     (operators/sketches.py quantile_sketch): per (tumbling window, type,
@@ -541,19 +521,19 @@ def windowed_quantile_bins(
     histogram (the caller composes it); an availableNow run therefore
     equals the batch sketch bit-for-bit."""
     x = F.col(value_col).cast("double")
-    b = F.when(x > 0, F.floor(F.log(x) * bins_per_e)).alias("bin")
+    b = F.when(x > 0, F.floor(F.log(x) * 20)).alias("bin")
     return (
         events.withWatermark(ts_col, watermark_delay)
         .filter(x.isNotNull())
         .groupBy(
             F.window(F.col(ts_col), window_duration).alias("window"),
-            F.col(type_col),
+            F.col("event_type"),
             b,
         )
         .agg(F.count(F.lit(1)).alias("c"))
         .select(
             F.col("window.start").alias("window_start"),
-            type_col,
+            "event_type",
             "bin",
             "c",
         )
@@ -562,29 +542,24 @@ def windowed_quantile_bins(
 
 def windowed_value_bins(
     events: DataFrame,
-    n_bins: int = 10,
-    bin_width: float = 100.0,
-    window_duration: str = "1 hour",
-    watermark_delay: str = "10 minutes",
     ts_col: str = "timestamp",
-    value_col: str = "value",
 ) -> DataFrame:
     """Fixed-width value binning as an incremental watermarked windowed
     aggregation — the streaming substrate for the PSI drift monitor:
     per (tumbling window, bin) counts with bounded per-window state
-    (``n_bins`` counters). The PSI read-off against a static baseline
+    (10 counters). The PSI read-off against a static baseline
     is a batch join over the finalized histogram (the caller composes
     it), so an availableNow run equals the batch computation
     bit-for-bit."""
-    x = F.col(value_col).cast("double")
+    x = F.col("value").cast("double")
     b = F.least(
-        F.greatest(F.floor(x / bin_width), F.lit(0)), F.lit(n_bins - 1)
+        F.greatest(F.floor(x / 100.0), F.lit(0)), F.lit(9)
     ).cast("int")
     return (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark(ts_col, "10 minutes")
         .filter(x.isNotNull())
         .groupBy(
-            F.window(F.col(ts_col), window_duration).alias("window"),
+            F.window(F.col(ts_col), "1 hour").alias("window"),
             b.alias("bin"),
         )
         .agg(F.count(F.lit(1)).alias("c"))

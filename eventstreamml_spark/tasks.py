@@ -94,8 +94,6 @@ def normalize_task_labels(
 def events_in_task_windows(
     events: DataFrame,
     task_df: DataFrame,
-    subject_col: str = "subject_id",
-    ts_col: str = "timestamp",
 ) -> DataFrame:
     """J5: events × task windows — subject equi-join plus
     ``start_time <= ts <= end_time`` (inclusive both ends). One output
@@ -104,8 +102,8 @@ def events_in_task_windows(
     e = events.alias("e")
     return e.join(
         t,
-        (F.col(f"e.{subject_col}") == F.col(f"t.{subject_col}"))
-        & F.col(f"e.{ts_col}").between(F.col("t.start_time"), F.col("t.end_time")),
+        (F.col("e.subject_id") == F.col("t.subject_id"))
+        & F.col("e.timestamp").between(F.col("t.start_time"), F.col("t.end_time")),
         "inner",
     ).select("e.*", "t.start_time", "t.end_time")
 

@@ -93,7 +93,6 @@ def filter_vocabulary(
     vocab: DataFrame,
     min_valid_element_freq: float | int,
     total_observations: int | None = None,
-    by: list[str] | None = None,
 ) -> DataFrame:
     """A5/O3: drop elements below the frequency cutoff, folding their
     mass into UNK, then re-rank (vocabulary.py:84-112).
@@ -102,7 +101,6 @@ def filter_vocabulary(
     (utils.py:11-26 ``lt_count_or_proportion``); elements with
     ``freq >= τ`` are kept (searchsorted side='right' semantics).
     """
-    by = by or []
     if isinstance(min_valid_element_freq, int) and not isinstance(min_valid_element_freq, bool):
         if total_observations is None:
             raise ValueError("count threshold requires total_observations")
@@ -112,23 +110,17 @@ def filter_vocabulary(
 
     elems = vocab.filter(F.col("element") != UNK)
     kept = elems.filter(F.col("freq") >= tau)
-    dropped_mass = (
-        elems.filter(F.col("freq") < tau)
-        .groupBy(*by)
-        .agg(F.sum("freq").alias("_dropped"))
+    dropped_mass = elems.filter(F.col("freq") < tau).agg(
+        F.sum("freq").alias("_dropped")
     )
-    unk = vocab.filter(F.col("element") == UNK)
-    if by:
-        unk = unk.join(F.broadcast(dropped_mass), by, "left")
-    else:
-        # global agg always yields exactly one row (null sum when empty)
-        unk = unk.crossJoin(F.broadcast(dropped_mass))
+    # global agg always yields exactly one row (null sum when empty)
+    unk = vocab.filter(F.col("element") == UNK).crossJoin(F.broadcast(dropped_mass))
     unk = unk.withColumn("freq", F.col("freq") + F.coalesce(F.col("_dropped"), F.lit(0.0))).drop("_dropped")
 
-    w = W.partitionBy(*by).orderBy(F.col("freq").desc(), F.col("element").asc())
+    w = W.orderBy(F.col("freq").desc(), F.col("element").asc())
     kept = kept.withColumn("idx", F.row_number().over(w))
-    return unk.select(*by, "element", "freq", "idx").unionByName(
-        kept.select(*by, "element", "freq", "idx")
+    return unk.select("element", "freq", "idx").unionByName(
+        kept.select("element", "freq", "idx")
     )
 
 
@@ -138,7 +130,6 @@ def apply_vocab_index(
     col: str,
     out_col: str = "idx",
     offset: int = 0,
-    by: list[str] | None = None,
 ) -> DataFrame:
     """J9: element → integer index via broadcast left join; unseen
     elements map to UNK (0). ``offset`` implements the global flattened
@@ -146,11 +137,10 @@ def apply_vocab_index(
     measurement's block starts at its offset, and UNK-at-0 maps to the
     global padding sentinel only when offset is 0.
     """
-    by = by or []
     v = vocab.filter(F.col("element") != UNK).select(
-        *by, F.col("element").alias(col), F.col("idx").alias("_vidx")
+        F.col("element").alias(col), F.col("idx").alias("_vidx")
     )
-    joined = df.join(F.broadcast(v), by + [col], "left")
+    joined = df.join(F.broadcast(v), [col], "left")
     return joined.withColumn(
         out_col,
         F.when(F.col("_vidx").isNotNull(), F.col("_vidx") + F.lit(offset)).otherwise(F.lit(0)),

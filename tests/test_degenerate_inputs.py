@@ -1,7 +1,8 @@
 """Degenerate inputs: both engines agree, and neither throws.
 
 An empty ``events`` table (the sf0.001 schema, no rows) is replayed
-through ``dq_profile_events``, whose null rate divides by the row count.
+through ``dq_profile_events`` and ``ab_srm_check``, which divide by
+the row count.
 
 Every oracle-checked query that reads only ``events`` and uses its
 ``value`` column is replayed against the sf0.001 events with every
@@ -124,6 +125,6 @@ def empty_events_dir(tmp_path_factory):
     return str(d)
 
 
-def test_empty_events_profile_matches_oracle(spark, empty_events_dir):
-    name = "dq_profile_events"
+@pytest.mark.parametrize("name", ["dq_profile_events", "ab_srm_check"])
+def test_empty_events_profile_matches_oracle(spark, empty_events_dir, name):
     compare(spark, empty_events_dir, q.queries()[name], q.oracle_sql()[name])

@@ -389,6 +389,10 @@ SUBSTRATES = {
         r'"user_id % 2 AS arm", "CAST\(floor\(value \* 1000\) AS BIGINT\) AS vm"',
         {},
     ),
+    "_type_values": (
+        r'"event_type", "CAST\(floor\(value \* 1000\) AS BIGINT\) AS vm"',
+        {},
+    ),
     "_hash_graph_edges": (r'F\.col\("user_id"\) % 997|"user_id % 997', {}),
     "_scored_events": (
         r'F\.md5\(F\.col\("event_id"\)\.cast\("string"\)\), 1, 4\), 16, 10\)',
@@ -440,12 +444,7 @@ def test_shared_substrate_goes_through_its_builder(queries_functions, builder):
 
 # Oracles that still spell out an ``_*_SQL`` twin's text by hand, each
 # with the reason it stays hand-written.
-HAND_SQL_TWIN = {
-    "_SHINGLE_SQL": {
-        "q_dedup_minhash_jaccard_estimate": "oracle outside the six "
-        "consolidated substrates; its text is kept byte-identical",
-    },
-}
+HAND_SQL_TWIN: dict[str, dict[str, str]] = {}
 
 SQL_TWINS = sorted(
     n
@@ -497,33 +496,15 @@ def test_oracles_use_their_sql_twin(queries_literals, twin):
     assert not stale, f"HAND_SQL_TWIN[{twin!r}] names definitions with no copy: {stale}"
 
 
-def test_no_unreferenced_definitions_in_engine_source():
-    """Every top-level ``def``/``class``/module constant in engine code
-    is referenced from code somewhere: the engine, tests, scripts,
-    perfbench, bench.py or the driver entry. References are AST names,
-    attributes and imports (f-string expressions included; comments and
-    strings are not). ``@register`` queries and dunders are exempt."""
+def _engine_and_caller_trees():
+    """(engine package dir, [(path, AST)] of every file that may call
+    engine code: the engine, tests, scripts, perfbench, bench.py and
+    the driver entry)."""
     import ast
-    import collections
     import pathlib
 
     repo = pathlib.Path(__file__).resolve().parents[1]
     pkg = repo / "eventstreamml_spark"
-    defs = {}
-    for p in sorted(pkg.rglob("*.py")):
-        for node in ast.parse(p.read_text()).body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if any("register" in ast.unparse(d) for d in node.decorator_list):
-                    continue
-                names = [node.name]
-            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
-                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
-                names = [t.id for t in targets if isinstance(t, ast.Name)]
-            else:
-                continue
-            for n in names:
-                if not (n.startswith("__") and n.endswith("__")):
-                    defs.setdefault(n, f"{p.relative_to(repo)}:{node.lineno}")
     sources = [
         *pkg.rglob("*.py"),
         *(repo / "tests").rglob("*.py"),
@@ -532,9 +513,47 @@ def test_no_unreferenced_definitions_in_engine_source():
         repo / "bench.py",
         repo / "__spark_entry__.py",
     ]
+    return pkg, [(p, ast.parse(p.read_text())) for p in sorted(sources)]
+
+
+def test_no_unreferenced_definitions_in_engine_source():
+    """Every top-level ``def``/``class``/module constant in engine code,
+    and every non-dunder method of a top-level class, is referenced
+    from code somewhere: the engine, tests, scripts, perfbench,
+    bench.py or the driver entry. References are AST names, attributes
+    and imports (f-string expressions included; comments and strings
+    are not). ``@register`` queries and dunders are exempt."""
+    import ast
+    import collections
+
+    pkg, trees = _engine_and_caller_trees()
+    repo = pkg.parent
+    defs = {}
+    for p, tree in trees:
+        if pkg not in p.parents:
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if any("register" in ast.unparse(d) for d in node.decorator_list):
+                    continue
+                names = [(node.name, node.lineno)]
+                if isinstance(node, ast.ClassDef):
+                    names += [
+                        (m.name, m.lineno)
+                        for m in node.body
+                        if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    ]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [(t.id, node.lineno) for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for n, lineno in names:
+                if not (n.startswith("__") and n.endswith("__")):
+                    defs.setdefault(n, f"{p.relative_to(repo)}:{lineno}")
     refs = collections.Counter()
-    for p in sources:
-        for node in ast.walk(ast.parse(p.read_text())):
+    for _, tree in trees:
+        for node in ast.walk(tree):
             if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 refs[node.id] += 1
             elif isinstance(node, ast.Attribute):
@@ -543,6 +562,92 @@ def test_no_unreferenced_definitions_in_engine_source():
                 refs[node.name.rsplit(".", 1)[-1]] += 1
     dead = sorted(f"{site} {n}" for n, site in defs.items() if not refs[n])
     assert not dead, f"definitions nothing references: {dead}"
+
+
+# Defaulted engine parameters that no caller sets but that stay, each
+# with its reason: (function, parameter) -> reason.
+UNSET_PARAMETER_OK = {
+    ("get_spark", "master"): "deployment setting: the master URL of a "
+    "session built outside the tests, bench and driver entry",
+}
+
+
+def test_no_unset_parameters_in_engine_source():
+    """Every defaulted parameter of an engine function is passed by at
+    least one call site in the engine, tests, scripts, perfbench,
+    bench.py or the driver entry; a parameter nothing passes is a
+    constant and belongs in the body. A call passes a parameter when
+    its callee (``Name.id`` or ``Attribute.attr``) has the function's
+    name and it gives the parameter by keyword, by position, or
+    through ``*args``/``**kwargs``. Exempt: names defined more than
+    once in the engine (``fit``, ``transform``, ...), names also read
+    as a value (the preprocessing registry's fit/apply functions,
+    whose kwargs come from the user's config), and
+    ``UNSET_PARAMETER_OK``."""
+    import ast
+    import collections
+
+    pkg, trees = _engine_and_caller_trees()
+    repo = pkg.parent
+    defs = collections.defaultdict(list)
+    for p, tree in trees:
+        if pkg not in p.parents:
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append((p, node))
+    keywords = collections.defaultdict(set)
+    max_positional = collections.Counter()
+    star = set()
+    as_value = set()
+    for _, tree in trees:
+        callees = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if isinstance(f, ast.Name):
+                name = f.id
+            elif isinstance(f, ast.Attribute):
+                name = f.attr
+            else:
+                continue
+            callees.add(id(f))
+            if any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                star.add(name)
+            n_pos = sum(not isinstance(a, ast.Starred) for a in node.args)
+            max_positional[name] = max(max_positional[name], n_pos)
+            keywords[name].update(k.arg for k in node.keywords if k.arg)
+        for node in ast.walk(tree):
+            if id(node) in callees:
+                continue
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                as_value.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                as_value.add(node.attr)
+    unset = []
+    for name, sites in defs.items():
+        if len(sites) > 1 or name in as_value or name in star:
+            continue
+        p, fn = sites[0]
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        skip_self = 1 if pos and pos[0].arg in ("self", "cls") else 0
+        defaulted = [
+            (i, x) for i, x in enumerate(pos) if i >= len(pos) - len(a.defaults)
+        ] + [(None, k) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for i, x in defaulted:
+            if x.arg in keywords[name] or (name, x.arg) in UNSET_PARAMETER_OK:
+                continue
+            if i is not None and max_positional[name] > i - skip_self:
+                continue
+            unset.append(f"{p.relative_to(repo)}:{fn.lineno} {name}({x.arg})")
+    assert not unset, (
+        f"{len(unset)} defaulted parameters no caller sets (inline the "
+        f"default): {sorted(unset)}"
+    )
 
 
 def test_no_unused_imports_in_engine_source():
